@@ -29,7 +29,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from featurestore_spark.operators.dedup import (
-    _SLICE_REST,
     hash128,
     shingles,
     zipped_ngrams,
@@ -190,236 +189,6 @@ def repetition_metrics(
     )
 
 
-def _dup_mass_fold(arr: Column) -> Column:
-    """Fold a unit array (lines, paragraphs, or n-grams) into
-    (n_units, dup_units, dup_chars, top_chars, total_chars) in one
-    pass over its SORTED form: equal neighbours form runs; a run of
-    length c contributes c-1 duplicate units and (c-1)*len(unit)
-    duplicate chars ("occurrences beyond the first"), and the top
-    char mass is max(c*len(unit)). Same run-walk as
-    `_run_length_metrics`, extended with char masses."""
-    zero = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("n"),
-        F.lit(0).cast("long").alias("dup_n"),
-        F.lit(0).cast("long").alias("dup_chars"),
-        F.lit(0).cast("long").alias("top_chars"),
-        F.lit(0).cast("long").alias("total_chars"),
-    )
-
-    def step(acc: Column, g: Column) -> Column:
-        same = acc.getField("prev").eqNullSafe(g)
-        run = F.when(same, acc.getField("run") + 1).otherwise(
-            F.lit(1).cast("long")
-        )
-        ended = ~same & (acc.getField("run") >= 2)
-        dup_n = F.when(
-            ended, acc.getField("dup_n") + acc.getField("run") - 1
-        ).otherwise(acc.getField("dup_n"))
-        dup_chars = F.when(
-            ended,
-            acc.getField("dup_chars")
-            + (acc.getField("run") - 1) * F.length(acc.getField("prev")),
-        ).otherwise(acc.getField("dup_chars"))
-        return F.struct(
-            g.alias("prev"),
-            run.alias("run"),
-            (acc.getField("n") + 1).alias("n"),
-            dup_n.alias("dup_n"),
-            dup_chars.alias("dup_chars"),
-            F.greatest(
-                acc.getField("top_chars"), run * F.length(g)
-            ).alias("top_chars"),
-            (acc.getField("total_chars") + F.length(g)).alias("total_chars"),
-        )
-
-    def finish(acc: Column) -> Column:
-        open_dup = acc.getField("run") >= 2
-        dup_n = F.when(
-            open_dup, acc.getField("dup_n") + acc.getField("run") - 1
-        ).otherwise(acc.getField("dup_n"))
-        dup_chars = F.when(
-            open_dup,
-            acc.getField("dup_chars")
-            + (acc.getField("run") - 1) * F.length(acc.getField("prev")),
-        ).otherwise(acc.getField("dup_chars"))
-        return F.struct(
-            acc.getField("n").alias("n"),
-            dup_n.alias("dup_n"),
-            dup_chars.alias("dup_chars"),
-            acc.getField("top_chars").alias("top_chars"),
-            acc.getField("total_chars").alias("total_chars"),
-        )
-
-    return F.aggregate(F.array_sort(arr), zero, step, finish)
-
-
-def _top_mass_fold(arr: Column) -> Column:
-    """max over runs of run*len(unit) — the top-n-gram char mass —
-    over the SORTED array, with a 3-field accumulator. HOF lambdas
-    are interpreted (not codegen'd), so accumulator width is the
-    direct per-element cost: the slim fold exists because
-    `gopher_repetition_rules` runs nine of these per document (the
-    full `_dup_mass_fold` carries 7 fields; measured ~35% of the
-    operator's wall time back)."""
-    zero = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("top"),
-    )
-
-    def step(acc: Column, g: Column) -> Column:
-        run = F.when(
-            acc.getField("prev").eqNullSafe(g), acc.getField("run") + 1
-        ).otherwise(F.lit(1).cast("long"))
-        return F.struct(
-            g.alias("prev"),
-            run.alias("run"),
-            F.greatest(acc.getField("top"), run * F.length(g)).alias("top"),
-        )
-
-    return F.aggregate(
-        F.array_sort(arr), zero, step, lambda acc: acc.getField("top")
-    )
-
-
-def _dup_chars_fold(arr: Column) -> Column:
-    """sum over runs of (run-1)*len(unit) — duplicate char mass
-    (occurrences beyond the first) — over the SORTED array; slim
-    3-field accumulator (see `_top_mass_fold`)."""
-    zero = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("dup"),
-    )
-
-    def step(acc: Column, g: Column) -> Column:
-        same = acc.getField("prev").eqNullSafe(g)
-        run = F.when(same, acc.getField("run") + 1).otherwise(
-            F.lit(1).cast("long")
-        )
-        dup = F.when(
-            ~same & (acc.getField("run") >= 2),
-            acc.getField("dup")
-            + (acc.getField("run") - 1) * F.length(acc.getField("prev")),
-        ).otherwise(acc.getField("dup"))
-        return F.struct(g.alias("prev"), run.alias("run"), dup.alias("dup"))
-
-    def finish(acc: Column) -> Column:
-        return F.when(
-            acc.getField("run") >= 2,
-            acc.getField("dup")
-            + (acc.getField("run") - 1) * F.length(acc.getField("prev")),
-        ).otherwise(acc.getField("dup"))
-
-    return F.aggregate(F.array_sort(arr), zero, step, finish)
-
-
-def _top_value_fold(arr: Column) -> Column:
-    """The most frequent value of the array (ties broken toward the
-    lexicographically SMALLEST, deterministically in both engines):
-    run-walk over the sorted array keeping the first run that is
-    strictly longest."""
-    zero = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("best_run"),
-        F.lit(None).cast("string").alias("best"),
-    )
-
-    def step(acc: Column, g: Column) -> Column:
-        run = F.when(
-            acc.getField("prev").eqNullSafe(g), acc.getField("run") + 1
-        ).otherwise(F.lit(1).cast("long"))
-        better = run > acc.getField("best_run")
-        return F.struct(
-            g.alias("prev"),
-            run.alias("run"),
-            F.when(better, run).otherwise(acc.getField("best_run")).alias(
-                "best_run"
-            ),
-            F.when(better, g).otherwise(acc.getField("best")).alias("best"),
-        )
-
-    return F.aggregate(
-        F.array_sort(arr), zero, step, lambda acc: acc.getField("best")
-    )
-
-
-def _dup_values_fold(arr: Column) -> Column:
-    """The DISTINCT values occurring >= 2 times, as a sorted array:
-    run-walk over the sorted array appending each value once, the
-    moment its run reaches 2. The result is bounded by the number of
-    duplicated distinct values (on natural text a handful), not the
-    array length."""
-    zero = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.array().cast("array<string>").alias("vals"),
-    )
-
-    def step(acc: Column, g: Column) -> Column:
-        run = F.when(
-            acc.getField("prev").eqNullSafe(g), acc.getField("run") + 1
-        ).otherwise(F.lit(1).cast("long"))
-        return F.struct(
-            g.alias("prev"),
-            run.alias("run"),
-            F.when(
-                run == 2, F.array_append(acc.getField("vals"), g)
-            ).otherwise(acc.getField("vals")).alias("vals"),
-        )
-
-    return F.aggregate(
-        F.array_sort(arr), zero, step, lambda acc: acc.getField("vals")
-    )
-
-
-def _positional_coverage_fold(toks: Column, grams: Column, target) -> Column:
-    """Characters of the normalized text (the space-joined token
-    string) covered by at least one TARGET n-gram occurrence, each
-    position counted ONCE — Rae et al.'s positional char coverage.
-
-    ``grams`` must be positionally aligned with ``toks`` (gram at
-    index i starts at token i; shorter tails are fine — `arrays_zip`
-    pads with NULL and NULL grams never hit). ``target(g)`` is a
-    boolean Column predicate selecting the occurrences to cover.
-
-    One left-to-right fold: occurrence intervals [pos, pos+len(gram))
-    have non-decreasing starts (token order), so the union length is
-    the classic sweep — add the part of each interval beyond the
-    running max end. Zero exchanges, zero UDFs, O(L) per doc plus the
-    per-element cost of ``target``."""
-    zero = F.struct(
-        F.lit(0).cast("long").alias("pos"),
-        F.lit(0).cast("long").alias("last"),
-        F.lit(0).cast("long").alias("cov"),
-    )
-    zipped = F.arrays_zip(toks.alias("t"), grams.alias("g"))
-
-    def step(acc: Column, e: Column) -> Column:
-        g = e.getField("g")
-        hit = g.isNotNull() & target(g)
-        newend = acc.getField("pos") + F.length(g)
-        clipped_start = F.greatest(acc.getField("last"), acc.getField("pos"))
-        cov = F.when(
-            hit & (newend > clipped_start),
-            acc.getField("cov") + newend - clipped_start,
-        ).otherwise(acc.getField("cov"))
-        last = F.when(hit, F.greatest(acc.getField("last"), newend)).otherwise(
-            acc.getField("last")
-        )
-        pos = acc.getField("pos") + F.length(e.getField("t")) + 1
-        return F.struct(pos.alias("pos"), last.alias("last"), cov.alias("cov"))
-
-    return F.aggregate(
-        zipped, zero, step, lambda acc: acc.getField("cov")
-    )
-
-
-_GOPHER_KERNEL_CONF = "spark.featurestore.gopher.kernel"
-
 _GOPHER_COUNTS_SCHEMA = (
     "ln bigint, ldup bigint, ldc bigint, ltc bigint, "
     "pn bigint, pdup bigint, pdc bigint, ptc bigint, "
@@ -435,13 +204,12 @@ def _gopher_counts_udf(positional: bool):
     """Arrow-vectorized kernel for the Gopher repetition INTEGER
     counts (guide §4.2): tokenization/unit splitting stays JVM-side
     (`clean_tokens` / the trim-split `units`), so the only Python work
-    is gram assembly + run counting over JVM-produced strings — the
-    part the Column formulation runs as interpreted per-element HOF
-    folds (9 per document). Fractions, rounding, thresholds and the
-    keep conjunction remain the SAME JVM expressions, so the operator's
-    values are unchanged (oracle-checked; fold-twin property test).
+    is gram assembly + run counting over JVM-produced strings.
+    Fractions, rounding, thresholds and the keep conjunction are JVM
+    expressions over these counts (oracle-checked; fuzzed against an
+    independent Python reference in test_properties_spark).
 
-    Count semantics replicated exactly:
+    Count semantics (what the DuckDB oracles replay):
     - unit masses: per distinct unit with count c, c-1 duplicate units
       and (c-1)*len duplicate chars; totals over occurrences;
     - gm2..gm4 default: max over distinct grams of count*len;
@@ -603,13 +371,14 @@ def gopher_repetition_rules(
     lexicographically smallest), for ``dup_{5..10}gram`` the
     characters covered by any gram occurring more than once — each
     character position counted once even under overlapping
-    occurrences (one extra left-to-right interval-sweep fold per n;
-    still zero exchanges). How the two modes relate (fuzz-pinned in
-    test_properties_spark): for the top grams the default mass
-    ``count*len`` is a true upper bound of positional coverage; for
-    the dup grams the default counts occurrences BEYOND the first
-    (``(count-1)*len`` — the same convention as the line/paragraph
-    char fractions) while the paper covers ALL occurrences of a
+    occurrences (one left-to-right interval sweep per n inside the
+    same kernel; still zero exchanges). How the two modes relate
+    (fuzz-pinned in test_properties_spark): for the top grams the
+    default mass ``count*len`` is a true upper bound of positional
+    coverage; for the dup grams the default counts occurrences BEYOND
+    the first (``(count-1)*len`` — the same convention as the
+    line/paragraph char fractions) while the paper covers ALL
+    occurrences of a
     duplicated gram, so the two sit on EITHER side of each other
     (a clean two-copy duplication: default len vs paper 2*len; heavy
     overlapped repetition: default (c-1)*len vs paper ~len). Users
@@ -619,11 +388,14 @@ def gopher_repetition_rules(
     fractions and keep=false; the Gopher preset's >= 50-word rule
     already excludes them upstream.
 
-    Scale shape: pure Column folds over one scan — the tokens and
-    unit arrays are projected to attribute columns once (HOF-lambda
-    re-evaluation trap), each n-gram size is one in-plan
-    sort+run-walk over that doc's grams (O(L log L) per doc, never a
-    corpus aggregate); zero exchanges, zero UDFs."""
+    Scale shape: one scan, one Arrow kernel (`_gopher_counts_udf`)
+    over the JVM-side tokens and line/paragraph units — per doc it
+    counts all nine gram sizes with hash counters (O(L) per n, never
+    a corpus aggregate); the fractions and ``keep`` are Column
+    expressions over its counts. Zero exchanges beyond `fan_out`'s
+    on single-split inputs; the output is `plan_fence`d so a
+    downstream ``.where("keep")`` stays above that repartition and
+    evaluates the kernel once (pinned in test_scale_invariants)."""
     thr = dict(GOPHER_REPETITION_THRESHOLDS)
     if thresholds:
         unknown = set(thresholds) - set(thr)
@@ -643,156 +415,41 @@ def gopher_repetition_rules(
             lambda u: u != F.lit(""),
         )
 
-    # Arrow kernel (default): tokenization and unit splitting stay
-    # JVM-side; the per-gram run counting — interpreted per element in
-    # the fold formulation below — runs as one batched Python kernel,
-    # and every downstream fraction/threshold expression is IDENTICAL.
-    # `spark.featurestore.gopher.kernel=fold` pins the pure-Column
-    # path (portability / property-test twin). The kernel needs
-    # pandas/pyarrow on the workers (ADVICE r14) — when the driver
-    # import fails, degrade to the fold path instead of erroring.
-    use_arrow = (
-        df.sparkSession.conf.get(_GOPHER_KERNEL_CONF, "arrow") == "arrow"
+    g = F.col("_gc")
+    out = df.withColumn(
+        "_gc",
+        _gopher_counts_udf(positional)(
+            clean_tokens(text_col), units("\n"), units("\n\n")
+        ),
     )
-    if use_arrow:
-        try:
-            _gopher_counts_udf(positional)
-        except ImportError:
-            use_arrow = False  # no pandas: pure-Column fold below
-    if use_arrow:
-        g = F.col("_gc")
-        out = df.withColumn(
-            "_gc",
-            _gopher_counts_udf(positional)(
-                clean_tokens(text_col), units("\n"), units("\n\n")
-            ),
-        )
-        cols = {}
-        for unit, pre in (("line", "l"), ("para", "p")):
-            cols[f"dup_{unit}_frac"] = F.round(
-                F.try_divide(g.getField(f"{pre}dup"), g.getField(f"{pre}n")),
-                4,
-            )
-            cols[f"dup_{unit}_char_frac"] = F.round(
-                F.try_divide(g.getField(f"{pre}dc"), g.getField(f"{pre}tc")),
-                4,
-            )
-        for n in (2, 3, 4):
-            cols[f"top_{n}gram_char_frac"] = F.round(
-                F.try_divide(g.getField(f"gm{n}"), g.getField("norm_len")),
-                4,
-            )
-        for n in range(5, 11):
-            cols[f"dup_{n}gram_char_frac"] = F.round(
-                F.try_divide(g.getField(f"gm{n}"), g.getField("norm_len")),
-                4,
-            )
-        out = out.withColumns(cols)
-        keep = None
-        for name, t in thr.items():
-            c = F.col(name) <= F.lit(t)
-            keep = c if keep is None else (keep & c)
-        return plan_fence(
-            out.select(
-                id_col,
-                *passthrough,
-                *cols.keys(),
-                F.coalesce(keep, F.lit(False)).alias("keep"),
-            )
-        )
-
-    out = df.withColumns(
-        {
-            "_toks": clean_tokens(text_col),
-            "_lines": units("\n"),
-            "_paras": units("\n\n"),
-        }
-    )
-    out = out.withColumns(
-        {
-            "_lm": _dup_mass_fold(F.col("_lines")),
-            "_pm": _dup_mass_fold(F.col("_paras")),
-            "_norm_len": F.length(F.array_join("_toks", " ")),
-        }
-    )
-    cols: dict[str, Column] = {}
-    for unit, m in (("line", "_lm"), ("para", "_pm")):
-        g = F.col(m)
+    cols = {}
+    for unit, pre in (("line", "l"), ("para", "p")):
         cols[f"dup_{unit}_frac"] = F.round(
-            F.try_divide(g.getField("dup_n"), g.getField("n")), 4
-        )
-        cols[f"dup_{unit}_char_frac"] = F.round(
-            F.try_divide(g.getField("dup_chars"), g.getField("total_chars")),
+            F.try_divide(g.getField(f"{pre}dup"), g.getField(f"{pre}n")),
             4,
         )
-    # Build the nine gram arrays INCREMENTALLY — each n extends the
-    # (n-1)-gram column with one more zip against the n-shifted token
-    # slice — so the whole family costs 9 zip passes instead of the
-    # 44 (=1+2+..+8) that nine independent zipped_ngrams() calls
-    # spend re-deriving shared prefixes (measured: gram construction
-    # was ~60% of the operator's wall time). Each _g{n} is projected
-    # to an attribute column before the next references it, so
-    # nothing re-evaluates inline.
-    prev = F.col("_toks")
-    for n in range(2, 11):
-        ext = F.zip_with(
-            prev,
-            F.slice(F.col("_toks"), n, _SLICE_REST),
-            lambda a, b: F.when(
-                a.isNotNull() & b.isNotNull(), F.concat(a, F.lit(" "), b)
-            ),
+        cols[f"dup_{unit}_char_frac"] = F.round(
+            F.try_divide(g.getField(f"{pre}dc"), g.getField(f"{pre}tc")),
+            4,
         )
-        out = out.withColumn(f"_g{n}", F.filter(ext, lambda x: x.isNotNull()))
-        prev = F.col(f"_g{n}")
-    # each n uses only ONE statistic, so run the slim single-purpose
-    # fold for it (top mass for 2-4, dup mass for 5-10) instead of the
-    # 7-field combined walk — HOF folds are interpreted per element,
-    # so accumulator width is per-element cost
-    if positional:
-        # paper-exact coverage: first extract the target grams per n
-        # (top value for 2-4, duplicated-value set for 5-10) as
-        # ATTRIBUTE columns (they're referenced once per element in
-        # the coverage sweep — the HOF inlining trap), then sweep the
-        # positionally-aligned gram array once per n
-        tcols = {}
-        for n in range(2, 11):
-            g = F.col(f"_g{n}")
-            tcols[f"_t{n}"] = (
-                _top_value_fold(g) if n <= 4 else _dup_values_fold(g)
-            )
-        out = out.withColumns(tcols)
-        gram_cols = {}
-        for n in range(2, 11):
-            g = F.col(f"_g{n}")
-            if n <= 4:
-                target = lambda x, n=n: x == F.col(f"_t{n}")
-            else:
-                target = lambda x, n=n: F.array_contains(F.col(f"_t{n}"), x)
-            fold = _positional_coverage_fold(F.col("_toks"), g, target)
-            gram_cols[f"_gm{n}"] = F.when(F.size(g) > 0, fold)
-    else:
-        gram_cols = {}
-        for n in range(2, 11):
-            g = F.col(f"_g{n}")
-            fold = _top_mass_fold(g) if n <= 4 else _dup_chars_fold(g)
-            gram_cols[f"_gm{n}"] = F.when(F.size(g) > 0, fold)
-    out = out.withColumns(gram_cols)
     for n in (2, 3, 4):
         cols[f"top_{n}gram_char_frac"] = F.round(
-            F.try_divide(F.col(f"_gm{n}"), F.col("_norm_len")), 4
+            F.try_divide(g.getField(f"gm{n}"), g.getField("norm_len")),
+            4,
         )
     for n in range(5, 11):
         cols[f"dup_{n}gram_char_frac"] = F.round(
-            F.try_divide(F.col(f"_gm{n}"), F.col("_norm_len")), 4
+            F.try_divide(g.getField(f"gm{n}"), g.getField("norm_len")),
+            4,
         )
     out = out.withColumns(cols)
     keep = None
     for name, t in thr.items():
         c = F.col(name) <= F.lit(t)
         keep = c if keep is None else (keep & c)
-    # plan_fence: a downstream .where("keep") must evaluate the
-    # computed conjunction, not inline 13 HOF-fold trees into the
-    # predicate (measured 5x; see materialize.plan_fence)
+    # plan_fence: a downstream .where("keep") would otherwise be pushed
+    # (UDF and all) below fan_out's repartition, running the kernel on
+    # the one-split scan instead of the widened partitions
     return plan_fence(out.select(
         id_col,
         *passthrough,

@@ -221,9 +221,9 @@ def shingles(text_col: str | Column = "text", n: int = 3) -> Column:
 # Affine MinHash family: mh_i = min over shingles of (A[i]*h(s) + B[i]) mod P,
 # where h(s) = first 7 md5 hex digits as an integer (< 2^28 — products stay
 # far below int64 overflow, ANSI-safe). ONE md5 per shingle + k multiply-adds
-# folded in a single `aggregate` pass — 14× faster than the naive
-# md5-per-(seed,shingle) formulation, still engine-portable (the DuckDB
-# oracles reproduce it exactly via ('0x'||substr(md5,1,7))::UBIGINT).
+# (`_minhash_sig_udf`) instead of an md5 per (seed, shingle), still
+# engine-portable (the DuckDB oracles reproduce it exactly via
+# ('0x'||substr(md5,1,7))::UBIGINT).
 MINHASH_P = 2147483647
 MINHASH_A = [
     10007, 10501, 11003, 11503, 12007, 12503, 13001, 13499,
@@ -258,53 +258,6 @@ def _minhash_seeds(k: int) -> tuple[list[int], list[int]]:
     return a, b
 
 
-def _seed_arrays(k: int) -> tuple[Column, Column]:
-    """The `_minhash_seeds(k)` lists as array Columns. Up to 32 seeds
-    they are literal arrays; beyond that the extension tail is
-    COMPUTED in-plan (sequence + transform of the same Knuth/Weyl
-    arithmetic) rather than embedded as k literals — a 9000-literal
-    CreateArray makes Catalyst analysis itself the bottleneck
-    (measured: the Lee et al. k=9000 preset went from ~150 s to
-    seconds on a 3-doc corpus after this change; the runtime
-    arithmetic is identical either way)."""
-    pin = min(k, len(MINHASH_A))
-    a = F.array(*[F.lit(x).cast("long") for x in MINHASH_A[:pin]])
-    b = F.array(*[F.lit(x).cast("long") for x in MINHASH_B[:pin]])
-    if k > pin:
-        idx = F.sequence(F.lit(pin + 1).cast("long"), F.lit(k).cast("long"))
-        tail_a = F.transform(
-            idx,
-            lambda i: F.nullif((F.lit(2654435761) * i) % MINHASH_P, F.lit(0)),
-        )
-        tail_a = F.transform(tail_a, lambda x: F.coalesce(x, F.lit(1)))
-        tail_b = F.transform(
-            idx, lambda i: (F.lit(40503) * i + F.lit(2531011)) % MINHASH_P
-        )
-        a, b = F.concat(a, tail_a), F.concat(b, tail_b)
-    return a, b
-
-
-def _minhash_signature_fold(shingle_col: Column, k: int = 16) -> Column:
-    """array<long> of k MinHash values, computed in one fold over the
-    shingle hashes — no explode, no shuffle, no per-seed rescan.
-
-    HOF lambdas run INTERPRETED per element, so this costs ~2k
-    interpreted expression evaluations per shingle (k=112 → ~500
-    ops/shingle); kept as the reference/portability formulation and
-    the property-test twin of the vectorized path below."""
-    a_arr, b_arr = _seed_arrays(k)
-
-    def step(acc: Column, h: Column) -> Column:
-        cand = F.zip_with(a_arr, b_arr, lambda a, b: (a * h + b) % F.lit(MINHASH_P))
-        return F.zip_with(acc, cand, lambda m, c: F.least(m, c))
-
-    return F.aggregate(
-        shingle_hashes(shingle_col),
-        F.array_repeat(F.lit(MINHASH_P).cast("long"), k),
-        step,
-    )
-
-
 _SIG_UDF_CACHE: dict[int, object] = {}
 
 
@@ -314,10 +267,10 @@ def _minhash_sig_udf(k: int):
     matrix reduction instead of an interpreted 2k-lambda fold per
     shingle. Only integers cross the Python boundary (the md5 shingle
     hashing stays JVM-side in `shingle_hashes`), so the arithmetic is
-    bit-identical to the fold: int64 products stay < 2^59 (a < 2^31,
-    h < 2^28), and numpy `%` on non-negatives == JVM `%` on
-    non-negatives. Fold edge semantics preserved: NULL array → NULL,
-    empty array → [P]*k, NULL elements skipped (`least` ignores NULL).
+    bit-identical to the DuckDB oracles': int64 products stay < 2^59
+    (a < 2^31, h < 2^28), and numpy `%` on non-negatives == SQL `%` on
+    non-negatives. Edges: NULL array → NULL, empty array → [P]*k,
+    NULL elements skipped.
     """
     if k in _SIG_UDF_CACHE:
         return _SIG_UDF_CACHE[k]
@@ -357,44 +310,13 @@ def _minhash_sig_udf(k: int):
     return sig
 
 
-_MINHASH_KERNEL_CONF = "spark.featurestore.minhash.kernel"
-
-
-def minhash_signature_array(
-    shingle_col: Column, k: int = 16, *, session=None
-) -> Column:
+def minhash_signature_array(shingle_col: Column, k: int = 16) -> Column:
     """array<long> of k MinHash values — same affine family and seed
     tables as always (the DuckDB oracles replay it exactly), computed
     by the vectorized Arrow kernel: the shingle md5 hashing stays in
     the JVM, only (hash array in, signature array out) integers cross
-    the Python boundary. `spark.featurestore.minhash.kernel=fold`
-    pins the pure-Column interpreted fold
-    (`_minhash_signature_fold`, the property-test twin).
-
-    Conf resolution (ADVICE r14): pass ``session=`` (DataFrame-level
-    operators thread their ``df.sparkSession``) so the kernel conf is
-    read from the frame's OWN session at operator-call time — the
-    same binding the gopher knob uses. Without ``session=`` this is a
-    bare-Column expression and the conf binds at CONSTRUCTION time
-    from the active session (set the conf before building the frame).
-    The Arrow kernel needs pandas/numpy on the workers; when those
-    imports fail on the driver the interpreted fold is used instead
-    (same values, no new dependency)."""
-    if session is None:
-        from pyspark.sql import SparkSession
-
-        session = SparkSession.getActiveSession()
-    kernel = (
-        session.conf.get(_MINHASH_KERNEL_CONF, "arrow")
-        if session is not None
-        else "arrow"
-    )
-    if kernel != "fold":
-        try:
-            return _minhash_sig_udf(k)(shingle_hashes(shingle_col))
-        except ImportError:
-            pass  # no pandas/numpy: degrade to the pure-Column fold
-    return _minhash_signature_fold(shingle_col, k)
+    the Python boundary."""
+    return _minhash_sig_udf(k)(shingle_hashes(shingle_col))
 
 
 def minhash_bands(
@@ -415,9 +337,7 @@ def minhash_bands(
     r = k // bands
     sig = df.select(
         F.col(id_col),
-        minhash_signature_array(
-            shingles(text_col, n), k, session=df.sparkSession
-        ).alias("_sig"),
+        minhash_signature_array(shingles(text_col, n), k).alias("_sig"),
     )
     return sig.select(
         F.col(id_col),
@@ -705,7 +625,7 @@ def dedup_corpus(
     (test-asserted); keyword overrides replace individual constants.
 
     Cost note: the published k IS the dominant cost (k multiply-adds
-    per shingle in the signature fold — 'refinedweb' is 9000/shingle
+    per shingle in the signature kernel — 'refinedweb' is 9000/shingle
     by design, exactly what the paper spends); at 100 TB the
     signature stage is embarrassingly parallel and shuffle-free, and
     everything downstream runs over distinct texts only."""

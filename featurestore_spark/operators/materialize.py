@@ -64,9 +64,6 @@ def materialize(df: DataFrame) -> DataFrame:
     )
 
 
-FAN_OUT_CONF = "spark.featurestore.fanout"
-
-
 def fan_out(df: DataFrame) -> DataFrame:
     """Scale-adaptive input fan-out for per-row-HEAVY operators
     (optimization guide §2.5 "input skew"): a small table written as
@@ -86,7 +83,6 @@ def fan_out(df: DataFrame) -> DataFrame:
     (q_minhash_pairs 2.3s -> 3.7s, q_incremental_dedup 7s -> 16s —
     the r14 load-level-fanout rejection), which is why this sits in
     chosen operators and not in the table loader.
-    `spark.featurestore.fanout=off` disables it globally (A/B knob).
 
     DRIVER COST (ADVICE r14): the partition probe
     (`df.rdd.getNumPartitions()`) forces a full physical-planning
@@ -94,14 +90,9 @@ def fan_out(df: DataFrame) -> DataFrame:
     partitioning. The operators that call this sit at or near their
     pipeline's scan (small composed plans), where the extra analysis
     is microseconds; do NOT add new call sites deep inside large
-    composed plans without measuring driver-side planning time —
-    `spark.featurestore.fanout=off` is the escape hatch if planning
-    ever shows up at scale.
+    composed plans without measuring driver-side planning time.
     """
-    spark = df.sparkSession
-    if spark.conf.get(FAN_OUT_CONF, "auto") == "off":
-        return df
-    par = spark.sparkContext.defaultParallelism
+    par = df.sparkSession.sparkContext.defaultParallelism
     try:
         cur = df.rdd.getNumPartitions()
     except Exception:
@@ -123,13 +114,23 @@ def plan_fence(df: DataFrame) -> DataFrame:
     predicate while pushing it down, duplicating every shared
     subexpression across the conjuncts (HOF expressions are
     interpreted, so there is no runtime common-subexpression
-    elimination to save it). Measured on `gopher_repetition_rules`
-    at sf0.1: ``.where("keep")`` turned a 9-zip/11-fold plan into a
-    90-zip/28-fold one and 10s into 46s. Generator outputs cannot be
+    elimination to save it). Generator outputs cannot be
     substituted, so the fence pins the filter above the projection
     pipeline with all sharing intact — unlike `materialize`, the plan
     stays lazy and single-scan, and the fence costs one one-element
     explode per row.
+
+    History: the fence was introduced for `gopher_repetition_rules`'
+    former pure-Column formulation, where at sf0.1 ``.where("keep")``
+    turned a 9-zip/11-fold plan into a 90-zip/28-fold one and 10s into
+    46s. Its callers now are the HOF-fold rule operators (e.g.
+    `text.gopher_doc_rules`, `curation.c4_line_filter`), the explodes
+    over computed arrays, and `gopher_repetition_rules`' Arrow
+    kernel, whose ``keep`` filter would otherwise be pushed through
+    `fan_out`'s repartition onto a single-split scan (measured on a
+    one-file 250-doc shard through curate_corpus('gopher') →
+    dedup_corpus → redact_pii: the kernel ran in one task, and the
+    repartition moved to the end, writing 4 files instead of 1).
 
     Trade-off: EXTERNAL cheap predicates (partition pruning on source
     columns) also stop at the fence — filter source columns BEFORE a

@@ -5374,8 +5374,9 @@ _GRT_SYNTH = (
     "keep at the paper's 13 thresholds. Line/paragraph structure is "
     "synthesized from the fixture text (' table ' -> newline, "
     "' batch ' -> blank line) identically in both engines. Spark side "
-    "is one zero-exchange scan: per-doc in-plan sort+run-walk folds, "
-    "never a corpus aggregate; the oracle recomputes every signal "
+    "is one zero-exchange scan: one per-doc Arrow counts kernel over "
+    "JVM-side tokens and units, never a corpus aggregate; the oracle "
+    "recomputes every signal "
     "relationally (unnest -> per-unit counts -> char masses).",
 )
 def q_gopher_repetition(spark, sf_dir):
@@ -5485,8 +5486,9 @@ def _grt_pos_ctes() -> str:
     "#4). top_{2,3,4}: characters covered by THE most frequent gram "
     "(ties toward the lexicographically smallest); dup_{5..10}: "
     "characters covered by any gram occurring twice — overlapping "
-    "occurrences counted once, via one left-to-right interval-sweep "
-    "fold per n (zero exchanges). Oracle replays the union length "
+    "occurrences counted once, via one left-to-right interval sweep "
+    "per n inside the counts kernel (zero exchanges). Oracle replays "
+    "the union length "
     "with gaps-and-islands over token char positions.",
 )
 def q_gopher_positional(spark, sf_dir):

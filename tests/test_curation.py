@@ -616,10 +616,17 @@ def test_gopher_repetition_rules_signals(spark):
             (4, None),
             # varied text, no repeats at the unit or gram level
             (5, "alpha beta gamma delta\nepsilon zeta eta theta."),
+            # one clean two-copy 5-gram duplication: "a b c d e" twice
+            # (9 chars each, no overlap), norm_len 21
+            (6, "a b c d e x a b c d e"),
         ],
         "doc_id long, text string",
     )
     out = {r["doc_id"]: r for r in gopher_repetition_rules(docs).collect()}
+    pos = {
+        r["doc_id"]: r
+        for r in gopher_repetition_rules(docs, positional=True).collect()
+    }
 
     r1 = out[1]
     assert r1["dup_line_frac"] == round(1 / 5, 4)  # 5 lines, 1 beyond-first
@@ -643,6 +650,26 @@ def test_gopher_repetition_rules_signals(spark):
     assert r5["dup_line_frac"] == 0.0 and r5["dup_5gram_char_frac"] == 0.0
     # doc 5 has 8 tokens: no 9/10-grams -> NULL -> keep stays False
     assert r5["dup_9gram_char_frac"] is None and not r5["keep"]
+
+    # positional=True (the paper's coverage). Doc 6: the default
+    # counts the beyond-first copy (9 chars), the paper covers both
+    # copies (18 chars) — 2x; no 6-gram repeats in either mode
+    assert out[6]["dup_5gram_char_frac"] == round(9 / 21, 4)
+    assert pos[6]["dup_5gram_char_frac"] == round(18 / 21, 4)
+    assert out[6]["dup_6gram_char_frac"] == 0.0
+    assert pos[6]["dup_6gram_char_frac"] == 0.0
+    # top 2-gram "a b" (tie with b c/c d/d e, smallest wins) occurs
+    # twice without overlap: 2*3 chars in both modes
+    assert pos[6]["top_2gram_char_frac"] == round(6 / 21, 4)
+    assert out[6]["top_2gram_char_frac"] == round(6 / 21, 4)
+    # doc 2: overlapping "spam spam" / 5-gram occurrences cover every
+    # character exactly once -> 1.0, vs the default's 63/39 and
+    # (4-1)*24/39
+    assert pos[2]["top_2gram_char_frac"] == 1.0
+    assert pos[2]["dup_5gram_char_frac"] == 1.0
+    assert out[2]["dup_5gram_char_frac"] == round(72 / 39, 4)
+    for i in (3, 4):
+        assert pos[i]["dup_line_frac"] is None and pos[i]["keep"] is False
 
     # threshold override re-cuts keep; unknown names fail fast
     loose = gopher_repetition_rules(

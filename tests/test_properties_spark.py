@@ -816,7 +816,7 @@ def _grt_reference(text, positional):
     """Independent Python computation of all 13 Gopher repetition
     signals: Counter-based unit/gram stats; positional coverage via a
     literal covered-character-position set (the definitionally
-    obvious formulation, vs the operator's sweep fold)."""
+    obvious formulation, vs the kernel's interval sweep)."""
     import re as _re
 
     t = text or ""
@@ -890,33 +890,26 @@ def test_gopher_repetition_matches_reference_both_modes(spark, texts):
     )
     signal_names = list(GOPHER_REPETITION_THRESHOLDS)
     by_mode = {}
-    # both execution kernels (r14: the Arrow batch kernel is the
-    # default; the Column-fold path is its portability twin) must
-    # match the independent reference on the same fuzzed corpus
-    for kernel in ("arrow", "fold"):
-        spark.conf.set("spark.featurestore.gopher.kernel", kernel)
-        for positional in (False, True):
-            got = {
-                r["doc_id"]: r
-                for r in gopher_repetition_rules(
-                    df, positional=positional
-                ).collect()
-            }
-            by_mode[positional] = got
-            for i, t in enumerate(texts):
-                want = _grt_reference(t, positional)
-                for name in signal_names:
-                    assert got[i][name] == want[name], (
-                        f"kernel={kernel} positional={positional} "
-                        f"doc={i} {name} "
-                        f"text={t!r}: {got[i][name]} != {want[name]}"
-                    )
-                keep = all(
-                    want[name] is not None and want[name] <= thr
-                    for name, thr in GOPHER_REPETITION_THRESHOLDS.items()
+    for positional in (False, True):
+        got = {
+            r["doc_id"]: r
+            for r in gopher_repetition_rules(
+                df, positional=positional
+            ).collect()
+        }
+        by_mode[positional] = got
+        for i, t in enumerate(texts):
+            want = _grt_reference(t, positional)
+            for name in signal_names:
+                assert got[i][name] == want[name], (
+                    f"positional={positional} doc={i} {name} "
+                    f"text={t!r}: {got[i][name]} != {want[name]}"
                 )
-                assert got[i]["keep"] == keep, (kernel, positional, i, t)
-    spark.conf.unset("spark.featurestore.gopher.kernel")
+            keep = all(
+                want[name] is not None and want[name] <= thr
+                for name, thr in GOPHER_REPETITION_THRESHOLDS.items()
+            )
+            assert got[i]["keep"] == keep, (positional, i, t)
     # the documented ordering: for the TOP grams the occurrence mass
     # count*len IS an upper bound of positional coverage. (For the
     # dup grams the two modes are incomparable — the default counts

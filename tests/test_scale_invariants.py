@@ -260,31 +260,36 @@ def test_round8_web_query_plan_shapes(spark):
 
 
 def test_rule_keep_filter_does_not_inline_signal_trees(spark):
-    """plan_fence regression net (PLANS r9c): a .where('keep') on a
-    rule operator must evaluate the COMPUTED keep column, not inline
-    the 13-conjunct signal tree into the predicate — without the
-    fence the gopher-repetition plan went 9-zip/11-fold to
-    90-zip/28-fold and 10s to 46s at sf0.1. The fence is a Generate
-    (one-element explode) whose outputs Catalyst cannot substitute;
-    if a Spark upgrade ever starts substituting through Generate,
-    this fails loudly."""
-    from pyspark.sql import functions as F
-
+    """A .where('keep') on the Gopher repetition rules must evaluate
+    the counts kernel ONCE and AFTER fan_out's repartition: the 13
+    signals and ``keep`` are Column expressions over one Arrow UDF
+    result, and the operator's plan fence stops Catalyst pushing the
+    filter (UDF and all) below the RoundRobinPartitioning exchange
+    onto a single-split scan, where the kernel would run in one task.
+    Checked on the operator and on the composed
+    curate_corpus('gopher') chain over a one-partition input."""
     from featurestore_spark.operators.curation import (
+        curate_corpus,
         gopher_repetition_rules,
     )
 
     df = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
         "doc_id long, text string",
-    )
-    out = gopher_repetition_rules(df, passthrough=("text",)).where(
-        "keep"
-    ).select("doc_id", "text")
-    p = out._jdf.queryExecution().executedPlan().toString()
-    assert "Generate" in p, "the rule operator lost its plan fence"
-    assert p.count("zip_with") <= 9, (
-        f"keep-filter inlined the gram chains ({p.count('zip_with')} "
-        "zip_with sites; the shared-prefix build has exactly 9)"
-    )
-    assert p.count("aggregate(") <= 11, "signal folds duplicated"
+    ).coalesce(1)
+    plans = {
+        "gopher_repetition_rules": gopher_repetition_rules(
+            df, passthrough=("text",)
+        ).where("keep").select("doc_id", "text"),
+        "curate_corpus": curate_corpus(df, "gopher"),
+    }
+    for name, out in plans.items():
+        p = out._jdf.queryExecution().executedPlan().toString()
+        lines = p.splitlines()
+        evals = [i for i, line in enumerate(lines) if "ArrowEvalPython" in line]
+        assert len(evals) == 1 and "counts(" in lines[evals[0]], (name, p)
+        fanout = [
+            i for i, line in enumerate(lines) if "RoundRobinPartitioning" in line
+        ]
+        # tree strings print parents first: the kernel sits above
+        assert len(fanout) == 1 and evals[0] < fanout[0], (name, p)

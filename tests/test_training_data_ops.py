@@ -1673,68 +1673,63 @@ def test_dedup_keep_best_null_ids_kept_unconditionally(spark):
             assert r["doc_id"] == 2 and r["cluster_id"] == 1
 
 
-def test_seed_arrays_match_minhash_seeds_beyond_pinned(spark):
-    """_seed_arrays' in-plan Knuth/Weyl extension must stay
-    element-wise equal to _minhash_seeds' driver-side arithmetic for
-    k past the 32 pinned primes — a drift in either copy would
-    silently change every preset signature (ADVICE r8 #3)."""
+def test_minhash_signature_matches_closed_form(spark):
+    """The Arrow signature kernel against a pure-Python closed form:
+    h = first 7 md5 hex digits as an int; mh_i = min over shingles of
+    (A_i*h + B_i) mod P with the `_minhash_seeds(k)` tables; [P]*k for
+    an empty hash array; NULL for a NULL array. Edge rows: normal,
+    shorter than n (whole-text shingle), empty and NULL text (both
+    shingle to [""]), and a full alphabet; k=112 runs the seed
+    extension past the 32 pinned primes."""
+    import hashlib
+
     from featurestore_spark.operators.dedup import (
+        MINHASH_P,
         _minhash_seeds,
-        _seed_arrays,
-    )
-
-    k = 450
-    a_col, b_col = _seed_arrays(k)
-    row = spark.range(1).select(a_col.alias("a"), b_col.alias("b")).collect()[0]
-    a_ref, b_ref = _minhash_seeds(k)
-    assert list(row["a"]) == a_ref
-    assert list(row["b"]) == b_ref
-
-
-def test_minhash_arrow_kernel_matches_fold(spark):
-    """The Arrow/numpy signature kernel (r14, the default) must be
-    bit-equal to the interpreted Column fold on every edge the fold
-    defines: normal docs, docs shorter than n (whole-text shingle),
-    empty and NULL text, and a k past the 32 pinned seeds (the
-    Knuth/Weyl extension range the presets use)."""
-    from pyspark.sql import functions as F
-
-    from featurestore_spark.operators.dedup import (
-        _minhash_signature_fold,
         minhash_signature_array,
         shingles,
     )
+
+    def reference(sh, k):
+        hs = [int(hashlib.md5(s.encode()).hexdigest()[:7], 16) for s in sh]
+        a, b = _minhash_seeds(k)
+        return [
+            min(((ai * h + bi) % MINHASH_P for h in hs), default=MINHASH_P)
+            for ai, bi in zip(a, b)
+        ]
 
     docs = spark.createDataFrame(
         [
             (1, "plain words repeated words plain words again and again"),
             (2, "xy"),          # shorter than n: whole text is the shingle
             (3, ""),            # empty: [""] single shingle
-            (4, None),          # NULL text
+            (4, None),          # NULL text: also [""]
             (5, "a b c d e f g h i j k l m n o p q r s t u v w x y z"),
         ],
         "doc_id long, text string",
     )
+    empty = F.array().cast("array<string>")
+    null = F.lit(None).cast("array<string>")
     for k, n in ((16, 3), (112, 5)):
         sh = shingles("text", n)
-        got = docs.select(
-            "doc_id", minhash_signature_array(sh, k).alias("sig")
+        rows = docs.select(
+            "doc_id",
+            sh.alias("sh"),
+            minhash_signature_array(sh, k).alias("sig"),
+            minhash_signature_array(empty, k).alias("empty"),
+            minhash_signature_array(null, k).alias("null"),
         ).collect()
-        want = {
-            r["doc_id"]: r["sig"]
-            for r in docs.select(
-                "doc_id", _minhash_signature_fold(sh, k).alias("sig")
-            ).collect()
-        }
-        for r in got:
-            assert list(r["sig"]) == list(want[r["doc_id"]]), (k, r["doc_id"])
+        assert len(rows) == 5
+        for r in rows:
+            assert list(r["sig"]) == reference(r["sh"], k), (k, r["doc_id"])
+            assert list(r["empty"]) == [MINHASH_P] * k
+            assert r["null"] is None
 
 
 def test_fan_out_unstarves_only_narrow_inputs(spark):
     """fan_out (r14): a single-partition frame is widened to the
     session's default parallelism; a frame already at >= half the
-    parallelism passes through with its plan untouched; the `off`
-    conf pins the no-op (the A/B knob the r14 measurements used)."""
+    parallelism passes through with its plan untouched."""
     from featurestore_spark.operators.materialize import fan_out
 
     par = spark.sparkContext.defaultParallelism
@@ -1746,12 +1741,6 @@ def test_fan_out_unstarves_only_narrow_inputs(spark):
 
     wide = spark.range(0, 1000).repartition(par)
     assert fan_out(wide) is wide  # pass-through, not a new plan node
-
-    spark.conf.set("spark.featurestore.fanout", "off")
-    try:
-        assert fan_out(narrow) is narrow
-    finally:
-        spark.conf.unset("spark.featurestore.fanout")
 
 
 def test_dedup_keep_best_null_texts(spark):
