@@ -805,7 +805,9 @@ def curate_corpus(
     is a zero-exchange projection and the text column is passed
     THROUGH each rule operator (`passthrough=`) so the next stage
     chains on the previous projection; no id-joins, no recomputed
-    lineage, no materialization barrier needed."""
+    lineage, no materialization barrier needed here. Its multi-read
+    consumer `dedup_corpus` fences this lazy output once, at call
+    time, so the chain still runs once."""
     from featurestore_spark.operators.text import (
         fineweb_doc_rules,
         gopher_doc_rules,

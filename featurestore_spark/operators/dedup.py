@@ -116,8 +116,10 @@ def _collapse_exact_texts(
     ``materialize_members=True`` (the default): callers that consume
     the membership frame ONCE — or not at all — pass ``False`` and
     skip a corpus-sized checkpoint job whose output would be read a
-    single time anyway; the lazy frame's one execution re-reads ``df``
-    exactly as the barrier job did, so total passes are equal and one
+    single time anyway; the lazy frame's one execution takes the
+    barrier job's place (``df`` is read twice here either way, so a
+    caller with costly input lineage fences it first, as
+    `dedup_keep_docs` does), so total passes are equal and one
     action + driver gap is saved per call (r15, guide §5
     "persist only what is reused")."""
     hashed = df.select(
@@ -509,6 +511,23 @@ def minhash_dedup_edges(
     return rep_pairs.unionByName(star)
 
 
+_SCAN_LEAVES = ("LogicalRelation", "LogicalRDD", "LocalRelation")
+
+
+def _is_bare_scan(df: DataFrame) -> bool:
+    """True when `df`'s optimized plan is only Project/Filter nodes
+    over one file scan, existing checkpoint or local relation, and is
+    deterministic — so each re-read recomputes nothing a checkpoint
+    would save. Like `fan_out`'s partition probe, it decides from the
+    input frame alone."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if not plan.deterministic():
+        return False
+    while plan.nodeName() in ("Project", "Filter"):
+        plan = plan.children().head()
+    return plan.nodeName() in _SCAN_LEAVES and plan.children().isEmpty()
+
+
 def dedup_keep_docs(
     df: DataFrame,
     text_col: str = "text",
@@ -539,7 +558,16 @@ def dedup_keep_docs(
     So candidate generation + verification run over DISTINCT texts
     only (pair work down by the square of the duplication factor, the
     shingle arrays in the verify join built once per distinct text)
-    and the drop set expands linearly via membership joins."""
+    and the drop set expands linearly via membership joins.
+
+    Eager: `df` is read three times (the collapse's groups and members
+    checkpoints, the final anti-join), so it is materialized ONCE at
+    call time and every read hits that checkpoint — a lazy upstream
+    (e.g. `curate_corpus`' Arrow kernel) runs once, not three times.
+    A bare deterministic scan skips this barrier: re-reading it costs
+    no more than reading a checkpoint of it."""
+    if not _is_bare_scan(df):
+        df = materialize(df)
     groups, members = _collapse_exact_texts(df, text_col, id_col, "dedup_keep_docs")
     # re-widen the checkpoint-frozen reps before the signature and
     # Jaccard-verify shingle passes (see minhash_candidate_pairs)
@@ -628,7 +656,10 @@ def dedup_corpus(
     per shingle in the signature kernel — 'refinedweb' is 9000/shingle
     by design, exactly what the paper spends); at 100 TB the
     signature stage is embarrassingly parallel and shuffle-free, and
-    everything downstream runs over distinct texts only."""
+    everything downstream runs over distinct texts only. The input
+    itself is evaluated once: `dedup_keep_docs` checkpoints it at
+    call time unless it is a bare deterministic scan, so a lazy
+    upstream such as `curate_corpus` needs no caller-side fence."""
     if preset not in DEDUP_PRESETS:
         raise ValueError(
             f"dedup_corpus: unknown preset {preset!r} "

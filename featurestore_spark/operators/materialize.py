@@ -35,33 +35,50 @@ Set once on the session::
     spark.sparkContext.setCheckpointDir("hdfs:///tmp/fs_ckpt")
 
 Every mode runs Spark jobs AT CALL TIME — see docs/usage.md
-("Eager operators") for which operators trigger this.
+("Eager operators") for which operators trigger this. Each barrier's
+jobs carry the description ``fs:materialize:<calling function>`` in
+the Spark UI and REST API.
 """
 
 from __future__ import annotations
+
+import sys
 
 from pyspark.sql import DataFrame
 
 MATERIALIZE_CONF = "spark.featurestore.materialize"
 _MODES = ("local", "reliable")
+_JOB_DESCRIPTION = "spark.job.description"
 
 
 def materialize(df: DataFrame) -> DataFrame:
-    """Eagerly materialize `df` per the session's durability mode."""
+    """Eagerly materialize `df` per the session's durability mode.
+
+    The checkpoint's jobs are described as
+    ``fs:materialize:<calling function>``; the caller's own job
+    description (if any) is restored afterwards. The job group is left
+    alone."""
     mode = df.sparkSession.conf.get(MATERIALIZE_CONF, "local")
-    if mode == "local":
-        return df.localCheckpoint(eager=True)
-    if mode == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                f"{MATERIALIZE_CONF}=reliable requires "
-                "SparkContext.setCheckpointDir(...) to be set"
-            )
-        return df.checkpoint(eager=True)
-    raise ValueError(
-        f"unknown {MATERIALIZE_CONF}={mode!r}; expected one of {_MODES}"
+    if mode not in _MODES:
+        raise ValueError(
+            f"unknown {MATERIALIZE_CONF}={mode!r}; expected one of {_MODES}"
+        )
+    sc = df.sparkSession.sparkContext
+    if mode == "reliable" and sc.getCheckpointDir() is None:
+        raise ValueError(
+            f"{MATERIALIZE_CONF}=reliable requires "
+            "SparkContext.setCheckpointDir(...) to be set"
+        )
+    previous = sc.getLocalProperty(_JOB_DESCRIPTION)
+    sc.setLocalProperty(
+        _JOB_DESCRIPTION, f"fs:materialize:{sys._getframe(1).f_code.co_name}"
     )
+    try:
+        if mode == "local":
+            return df.localCheckpoint(eager=True)
+        return df.checkpoint(eager=True)
+    finally:
+        sc.setLocalProperty(_JOB_DESCRIPTION, previous)
 
 
 def fan_out(df: DataFrame) -> DataFrame:

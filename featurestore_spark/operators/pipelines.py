@@ -178,19 +178,12 @@ def refinedweb_pipeline(
 
     # 5. text extraction — only the surviving pages pay for it.
     #
-    # Stage-boundary fences: extraction rewrites every surviving page
-    # body, and the corpus-wide stages below each consume their input
-    # MORE than once (dedup_lines' exact-dup collapse runs a groups
-    # pass and a membership pass). Without a barrier each of those
-    # passes re-executes the extraction lineage — measured 3×
-    # extraction + 3× curation per e2e run at sf0.01 (r14 probe).
-    #
     # r15 examined-and-REJECTED (guide §1's "fresh ideal plans are
-    # usually slower at first" clause, measured): the checkpoint here
+    # usually slower at first" clause, measured): the fence below
     # freezes AQE's coalesced partitioning (ONE partition at bench
     # scale — probed), so the extraction ran as a single task and a
     # split fence (checkpoint the slim pre-extraction frame, fan_out,
-    # extract wide into the second fence) was prototyped to re-widen
+    # extract wide into the fence below) was prototyped to re-widen
     # it. Alternating A/B (4 runs per arm, per-arm minima) measured
     # the split fence + a matching pre-curation re-widener as a NET
     # LOSS on q_refinedweb_e2e (~8.1s vs ~7.4s mins, consistent lean
@@ -265,22 +258,8 @@ def refinedweb_pipeline(
             text_col=text_col, id_col=id_col,
         ).select(id_col, text_col)
 
-    # Second stage-boundary fence: the rule-based curation (a wide
-    # zero-exchange column fold — the single most compute-dense stage
-    # in the chain) and the quality gate stay LAZY, so without a
-    # barrier the fuzzy-dedup stage's three input reads would run the
-    # 13-signal fold three times over the full corpus (measured: the
-    # r14 sf0.01 probe attributed ~4s of q_refinedweb_e2e's fixed
-    # cost to exactly this re-execution). Fence only when one of
-    # those compute-bearing stages actually ran AND a multi-read
-    # consumer follows.
-    if dedup is not None and (
-        curate is not None or quality_model is not None
-        or line_max_docs is not None
-    ):
-        kept = materialize(kept)
-
-    # 10. published-constant fuzzy dedup
+    # 10. published-constant fuzzy dedup (dedup_keep_docs fences its
+    # own input, so the lazy curation/quality stages above run once)
     if dedup is not None:
         kept = dedup_corpus(
             kept, dedup, text_col, id_col,

@@ -83,6 +83,103 @@ def test_materialize_modes_equivalent(spark, small_docs, tmp_path):
         spark.conf.unset(MATERIALIZE_CONF)
 
 
+def test_materialize_labels_its_jobs_and_restores_description(spark, small_docs):
+    """The checkpoint job carries ``fs:materialize:<caller>`` (read back
+    from inside its tasks), and the caller's own description survives
+    the call — or stays unset when none was set."""
+    from pyspark import TaskContext
+
+    key = "spark.job.description"
+    sc = spark.sparkContext
+
+    @F.udf("string")
+    def job_description(_):
+        return TaskContext.get().getLocalProperty(key)
+
+    probe = small_docs.withColumn("desc", job_description("doc_id"))
+    sc.setLocalProperty(key, "caller's description")
+    try:
+        out = materialize(probe)
+        assert sc.getLocalProperty(key) == "caller's description"
+    finally:
+        sc.setLocalProperty(key, None)
+    assert {r["desc"] for r in out.collect()} == {
+        "fs:materialize:test_materialize_labels_its_jobs_and_restores_description"
+    }
+    materialize(small_docs)
+    assert sc.getLocalProperty(key) is None
+
+
+def _dup_corpus_rows():
+    base = [
+        "the quick brown fox jumps over the lazy dog near the river bank today",
+        "query engines plan joins by estimating the cardinality of every input",
+        "a feature store keeps point in time correct training tables per entity",
+        "the vault model splits hubs links and satellites for auditable history",
+    ]
+    rows = [(i, t) for i, t in enumerate(base)]
+    rows += [(10, base[0]), (11, base[1]), (12, base[0])]  # exact dups
+    rows += [(20, base[2] + " again"), (21, base[3] + " again")]  # near dups
+    return rows
+
+
+@pytest.mark.parametrize("op", ["dedup_keep_docs", "dedup_corpus"])
+def test_dedup_keep_docs_evaluates_lazy_input_once(spark, op):
+    """A lazy upstream (here a Python UDF over `text`) runs ONCE per
+    row, although the operator reads its input three times (collapse
+    groups, membership, final anti-join)."""
+    from featurestore_spark.operators.dedup import dedup_corpus
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(t):
+        calls.add(1)
+        return t
+
+    rows = _dup_corpus_rows()
+    df = spark.createDataFrame(rows, "doc_id long, text string").withColumn(
+        "text", F.udf(counted, "string")("text")
+    )
+    if op == "dedup_keep_docs":
+        kept = dedup_keep_docs(df, bands=8, threshold=0.7)
+    else:
+        kept = dedup_corpus(df, "fineweb")
+    ids = sorted(r["doc_id"] for r in kept.collect())
+    assert ids == [0, 1, 2, 3]
+    assert calls.value == len(rows)
+
+
+def test_dedup_keep_docs_skips_barrier_on_bare_scans(spark, tmp_path, monkeypatch):
+    """The input barrier is skipped when a re-read costs no more than a
+    checkpoint read: a parquet scan, a local frame and an existing
+    checkpoint keep the operator's own four barriers; a UDF-bearing
+    input gets a fifth. Keep-sets are identical either way."""
+    from featurestore_spark.operators import dedup
+
+    n_calls = []
+
+    def counting(frame):
+        n_calls.append(1)
+        return materialize(frame)
+
+    monkeypatch.setattr(dedup, "materialize", counting)
+    local = spark.createDataFrame(_dup_corpus_rows(), "doc_id long, text string")
+    local.write.parquet(str(tmp_path / "docs"))
+    inputs = {
+        "parquet": (spark.read.parquet(str(tmp_path / "docs")), 4),
+        "local": (local, 4),
+        "checkpoint": (local.localCheckpoint(eager=True), 4),
+        "udf": (local.withColumn("text", F.udf(lambda t: t, "string")("text")), 5),
+    }
+    kept = {}
+    for name, (df, expected) in inputs.items():
+        n_calls.clear()
+        out = dedup_keep_docs(df.where("doc_id >= 0"), bands=8, threshold=0.7)
+        assert len(n_calls) == expected, name
+        kept[name] = sorted(r["doc_id"] for r in out.collect())
+    assert all(k == [0, 1, 2, 3] for k in kept.values()), kept
+
+
 def test_connected_components_reliable_mode(spark, tmp_path):
     """The iterative CC loop materializes per round — in `reliable`
     mode every round checkpoints to the checkpoint dir and the labels
