@@ -68,33 +68,43 @@ class HadoopFS:
         return fs.getContentSummary(jpath).getLength()
 
     def fingerprint(self, path: str) -> str | None:
-        """Cheap snapshot identity for a data directory:
+        """Cheap snapshot identity for a data file or directory:
         ``"<dir-mtime>:<total-bytes>:<file-count>:<max-file-mtime>"``
         (None when absent). The directory's own mtime catches local /
         HDFS rewrites (rename-into-place keeps the staging write's
         stamp), but on object stores (s3a://) directories are
         synthetic and their mtime is typically 0 (ADVICE r13) — so
         the identity also folds in the recursive file count and the
-        MAX file modification time from one ``listFiles`` sweep: an
-        external rewrite changes file mtimes even when it reproduces
-        the exact byte count. Used to verify a bucketed mirror still
-        matches the path source of truth before serving it (ADVICE
-        r12: a writer without the mirror knob, or an external rewrite
-        of the path, must not let a stale mirror win)."""
+        MAX file modification time: an external rewrite changes file
+        mtimes even when it reproduces the exact byte count. Used to
+        verify a bucketed mirror still matches the path source of
+        truth before serving it (ADVICE r12: a writer without the
+        mirror knob, or an external rewrite of the path, must not let
+        a stale mirror win), and as the parquet schema cache's
+        snapshot key (`io.tables`).
+
+        Cost: a few Py4J round trips per directory and per file. The
+        walk uses plain ``listStatus`` statuses: ``listFiles``' located
+        statuses load owner and permission, which the local filesystem
+        does by forking a process per file."""
         fs, jpath = self._fs_path(path)
         if not fs.exists(jpath):
             return None
         st = fs.getFileStatus(jpath)
+        top_mtime = st.getModificationTime()
+        if not st.isDirectory():
+            return f"{top_mtime}:{st.getLen()}:1:{top_mtime}"
         n_files, total, max_mtime = 0, 0, 0
-        it = fs.listFiles(jpath, True)
-        while it.hasNext():
-            f = it.next()
-            n_files += 1
-            total += f.getLen()
-            max_mtime = max(max_mtime, f.getModificationTime())
-        return (
-            f"{st.getModificationTime()}:{total}:{n_files}:{max_mtime}"
-        )
+        dirs = [jpath]
+        while dirs:
+            for child in fs.listStatus(dirs.pop()):
+                if child.isDirectory():
+                    dirs.append(child.getPath())
+                else:
+                    n_files += 1
+                    total += child.getLen()
+                    max_mtime = max(max_mtime, child.getModificationTime())
+        return f"{top_mtime}:{total}:{n_files}:{max_mtime}"
 
     def read_text(self, path: str) -> str | None:
         # NB: reading into a Python bytearray buffer does NOT work —

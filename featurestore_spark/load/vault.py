@@ -64,6 +64,7 @@ from featurestore_spark.config import (
 )
 from featurestore_spark.functions.hashing import fingerprint, hash_key
 from featurestore_spark.io.fs import HadoopFS
+from featurestore_spark.io.tables import _read_parquet
 from featurestore_spark.operators.snapshot import latest_per_key
 
 
@@ -219,24 +220,32 @@ class VaultLoader:
         return None
 
     def read_current(self, table: str) -> DataFrame:
+        """The table's current snapshot: the bucketed mirror when one
+        is configured and its stamp matches the parquet path, else the
+        parquet path. The path read infers its schema once per
+        snapshot (`io.tables._read_parquet`): re-reading an unchanged
+        table launches no Spark job, and any write to it (a load, an
+        external rewrite) makes the next read infer afresh."""
+        path = self._path(table, CURRENT_FILE)
+        stamp = self._fs.fingerprint(path)
         if self._mirror is not None:
             # fingerprint check: the mirror only wins when its stamp
             # matches the parquet path's CURRENT snapshot identity —
             # a plain (unmirrored) loader or an external job rewriting
             # the path must not let a stale mirror serve (ADVICE r12)
             mirror = self._mirror.read(
-                table,
-                self._mirror_keys,
-                fingerprint=self._fs.fingerprint(
-                    self._path(table, CURRENT_FILE)
-                ),
+                table, self._mirror_keys, fingerprint=stamp
             )
             if mirror is not None:
                 return mirror
-        return self.spark.read.parquet(self._path(table, CURRENT_FILE))
+        return _read_parquet(self.spark, path, prints=(stamp,))
 
     def read_history(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(table, HISTORY_FILE))
+        """Every row-version of the table (SCD2 history), read through
+        the same schema-cached path as `read_current`: an append adds
+        files, which changes the snapshot key, so appended rows and
+        columns are always seen."""
+        return _read_parquet(self.spark, self._path(table, HISTORY_FILE))
 
     def _write_current(self, df: DataFrame, table: str) -> None:
         # Write-new-then-swap: plain parquet overwrite is not atomic;

@@ -46,9 +46,10 @@ import sys
 
 from pyspark.sql import DataFrame
 
+from featurestore_spark.session import _job_description
+
 MATERIALIZE_CONF = "spark.featurestore.materialize"
 _MODES = ("local", "reliable")
-_JOB_DESCRIPTION = "spark.job.description"
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -69,16 +70,12 @@ def materialize(df: DataFrame) -> DataFrame:
             f"{MATERIALIZE_CONF}=reliable requires "
             "SparkContext.setCheckpointDir(...) to be set"
         )
-    previous = sc.getLocalProperty(_JOB_DESCRIPTION)
-    sc.setLocalProperty(
-        _JOB_DESCRIPTION, f"fs:materialize:{sys._getframe(1).f_code.co_name}"
-    )
-    try:
+    with _job_description(
+        sc, f"fs:materialize:{sys._getframe(1).f_code.co_name}"
+    ):
         if mode == "local":
             return df.localCheckpoint(eager=True)
         return df.checkpoint(eager=True)
-    finally:
-        sc.setLocalProperty(_JOB_DESCRIPTION, previous)
 
 
 def fan_out(df: DataFrame) -> DataFrame:

@@ -8,8 +8,12 @@ scale, so we turn it on unconditionally.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+_JOB_DESCRIPTION = "spark.job.description"
 
 
 def get_spark(
@@ -47,3 +51,17 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def _job_description(sc: SparkContext, label: str):
+    """Describe the jobs launched inside the block as `label` (the
+    Spark UI / REST ``description``), then restore the caller's own
+    description, or leave it unset when none was set. The job group
+    is left alone."""
+    previous = sc.getLocalProperty(_JOB_DESCRIPTION)
+    sc.setLocalProperty(_JOB_DESCRIPTION, label)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(_JOB_DESCRIPTION, previous)
