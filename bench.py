@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Benchmark headline queries; prints ONE JSON line for the driver.
 
-Runs each headline query from the catalog at $SPARK_GRAFT_SF_DIR
+Runs every catalog query, in registration order, at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], forcing
 full execution through the `noop` sink (no driver-collect overhead),
 and reports per-query wall seconds.
@@ -19,187 +19,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "q_tpch_q1",
-    "q_tpch_q3",
-    "q_tpch_q5",
-    "q_sessionize",
-    "q_session_stats",
-    "q_pivot_snapshot",
-    "q_pivot_chord",
-    "q_chord_path",
-    "q_unique_path",
-    "q_current_events",
-    "q_previous_interactions",
-    "q_hub_customer",
-    "q_link_customer_order",
-    "q_star_fact_order_counts",
-    "q_dedup_exact",
-    "q_text_quality",
-    "q_token_count",
-    "q_lang_id",
-    "q_minhash_bands",
-    "q_minhash_pairs",
-    "q_embedding_topk",
-    "q_embedding_ann_lsh",
-    "q_tpch_q6",
-    "q_tpch_q10",
-    "q_tpch_q12",
-    "q_tpch_q14",
-    "q_tpch_q4",
-    "q_tpch_q13",
-    "q_tpch_q15",
-    "q_tpch_q18",
-    "q_tpch_q19",
-    "q_tpch_q22",
-    "q_tpch_q2",
-    "q_tpch_q7",
-    "q_tpch_q8",
-    "q_tpch_q9",
-    "q_tpch_q11",
-    "q_tpch_q16",
-    "q_tpch_q17",
-    "q_tpch_q20",
-    "q_tpch_q21",
-    "q_embedding_near_dups",
-    "q_dedup_clusters",
-    "q_repetition",
-    "q_decontaminate",
-    "q_redact_pii",
-    "q_quality_filter",
-    "q_asof_purchase",
-    "q_interval_join",
-    "q_time_rollup",
-    "q_attribution",
-    "q_boilerplate",
-    "q_corpus_stats",
-    "q_vocab_topk",
-    "q_ivf_assign",
-    "q_mixture_sample",
-    "q_quality_buckets",
-    "q_chunk_documents",
-    "q_token_budget_sample",
-    "q_embedding_clusters",
-    "q_pack_chunks",
-    "q_image_meta",
-    "q_simhash_near_dups",
-    "q_dedup_pipeline",
-    "q_incremental_dedup",
-    "q_incremental_embedding_dedup",
-    "q_pq_encode",
-    "q_pq_topk",
-    "q_ivf_pq_topk",
-    "q_semantic_dedup",
-    "q_dedup_lines",
-    "q_shared_spans",
-    "q_shard_corpus",
-    "q_incremental_line_dedup",
-    "q_decontaminate_spans",
-    "q_incremental_spans",
-    "q_cluster_balance",
-    "q_normalize_text",
-    "q_dedup_ladder",
-    "q_top_customers",
-    "q_vault_full_cycle",  # write-path throughput (real loader)
-    # Round 6: complete the catalog — every registered query is now
-    # benched (the stdout line stays short regardless; the full map
-    # goes to the bench_full.json sidecar).
-    "q_chords",
-    "q_chord_path_all",
-    "q_collapse_runs",
-    "q_days_since_earliest",
-    "q_days_since_latest",
-    "q_event_count_window",
-    "q_event_distinct_window",
-    "q_event_sum_window",
-    "q_full_paths",
-    "q_binary_meta",
-    "q_doc_fingerprint",
-    "q_ngram_jaccard",
-    "q_entity_resolution",
-    "q_dq_assertion",
-    "q_hash_split",
-    "q_pivot_registry",
-    "q_satellite_classify",
-    "q_sniff_csv",
-    "q_star_dim_order_priority",
-    # Round 6: lexical retrieval + LM quality scoring
-    "q_bm25_topk",
-    "q_bm25_index_topk",
-    "q_lm_perplexity",
-    "q_source_divergence",
-    # Round 7: rows-only (non-SQL-expressible) end-to-end paths
-    "q_bpe_segment",
-    "q_ivf_topk",
-    # Round 7: published curation rule sets + corpus novelty + DSIR
-    "q_gopher_rules",
-    "q_c4_filter",
-    "q_ngram_novelty",
-    "q_dsir_weights",
-    "q_strip_html",
-    "q_ngram_containment",
-    "q_temperature_mixture",
-    "q_repeat_epochs",
-    "q_nb_classify",
-    "q_curation_funnel",
-    "q_hard_negatives",
-    # Round 8: web-ingest URL front + the value-checked IVF serving
-    # stage split out of q_ivf_topk
-    "q_canonical_url",
-    "q_url_dedup",
-    "q_web_funnel",
-    "q_ivf_serve",
-    "q_fineweb_rules",
-    "q_ccnet_buckets",
-    "q_ccnet_external",
-    "q_dedup_best",
-    # Round 9: URL/domain filtering, the Gopher repetition half, the
-    # fineweb dedup preset, the BPE-apply value oracle
-    "q_url_filter",
-    "q_domain_rollup",
-    "q_domain_cap",
-    "q_gopher_repetition",
-    "q_curate_gopher",
-    "q_dedup_preset",
-    "q_bpe_apply",
-    # Round 10: the end-to-end published-pipeline capstone, the
-    # paper-exact positional repetition variant, the trained
-    # char-ngram language-ID, the bytes-level image dedup
-    "q_refinedweb_e2e",
-    "q_gopher_positional",
-    "q_lid_classify",
-    "q_image_dedup",
-    "q_gif_frames",
-    "q_incremental_url_dedup",
-    # Round 11: the trained quality-classifier gate, the incremental
-    # media-dedup rung, the MP4 sample-table walker
-    "q_quality_classify",
-    "q_incremental_media_dedup",
-    "q_mp4_frames",
-    # ...and the outlink-graph + domain-PageRank capstone
-    "q_domain_pagerank",
-    # Round 12: the jusText-lite main-content extractor and the
-    # crawl-stack front door (robots politeness gate, sitemap
-    # discovery, WARC record walk + HTTP split, WAV chunk walk)
-    "q_main_content",
-    "q_robots_filter",
-    "q_sitemap",
-    "q_warc_extract",
-    "q_wav",
-    # ...and the crawl-planning pair composing them: the frontier
-    # capstone and the politeness fetch scheduler
-    "q_crawl_frontier",
-    "q_fetch_schedule",
-    # Round 14: the normalized robots gate + sitemap-lastmod recrawl
-    # decision (the two r13 operators' driver-oracle home)
-    "q_recrawl_policy",
-]
+from featurestore_spark.queries import QUERIES  # noqa: E402
 
 # Zero-code-change drift control (VERDICT r6 #8): the TPC-H block has
 # been byte-identical since r4, so its subtotal separates host drift
 # from code-attributable movement — `tpch_control_wall` in the output
 # makes the r(N) vs r(N-1) regression call one subtraction.
-TPCH_CONTROL = [q for q in HEADLINE if q.startswith("q_tpch_")]
+TPCH_CONTROL = [q for q in QUERIES if q.startswith("q_tpch_")]
 
 
 def flag_for_solo(
@@ -227,7 +53,6 @@ def main():
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    from featurestore_spark.queries import QUERIES
     from featurestore_spark.session import get_spark
 
     # In local mode the driver JVM hosts every executor thread; the 1g
@@ -265,11 +90,11 @@ def main():
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
 
     def run_pass(
-        order: list[str], deadline: float | None = None
+        pass_no: int, order: list[str], deadline: float | None = None
     ) -> tuple[dict[str, float], dict[str, float]]:
         medians: dict[str, float] = {}
         mins: dict[str, float] = {}
-        for name in order:
+        for i, name in enumerate(order, 1):
             # Pass-2 self-time-box: the second pass exists to remove
             # suite-position noise, not to risk the artifact — if the
             # whole bench would outgrow its budget, stop re-measuring
@@ -277,9 +102,7 @@ def main():
             # sidecar). The final JSON line must always print.
             if deadline is not None and time.perf_counter() > deadline:
                 break
-            spec = QUERIES.get(name)
-            if spec is None:
-                continue
+            spec = QUERIES[name]
             # Discarded per-query warm-up run (VERDICT r8 #5): with
             # repeats=3 the cold first run sits one slot from the
             # median, which is how q_minhash_pairs printed a 2x
@@ -316,6 +139,15 @@ def main():
             # regression calls compare the mins, normalized by the
             # control subtotal below.
             mins[name] = round(min(runs), 3)
+            # One progress line per query, so the stderr tail of a
+            # killed run names the last query it finished; stdout
+            # stays the one final JSON line.
+            print(
+                f"bench: pass {pass_no} {i}/{len(order)} {name} "
+                f"{medians[name]}s",
+                file=sys.stderr,
+                flush=True,
+            )
             # Drop references so ContextCleaner can free
             # localCheckpoint blocks (token-budget / component-loop
             # queries materialize them each run); across 60+ queries
@@ -359,13 +191,14 @@ def main():
     passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2")))
     budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "2700"))
     t_start = time.perf_counter()
-    med1, min1 = run_pass(HEADLINE)
+    suite = list(QUERIES)
+    med1, min1 = run_pass(1, suite)
     by_pass = {"pass1": med1}
     timings, timings_min = dict(med1), dict(min1)
     pass2_truncated = 0
     if passes > 1:
         med2, min2 = run_pass(
-            list(reversed(HEADLINE)), deadline=t_start + budget_s
+            2, list(reversed(suite)), deadline=t_start + budget_s
         )
         by_pass["pass2"] = med2
         pass2_truncated = len(med1) - len(med2)

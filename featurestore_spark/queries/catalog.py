@@ -8280,103 +8280,3 @@ def q_refinedweb_e2e(spark, sf_dir):
             F.min("doc_id").alias("min_id"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Driver-gate registration order.
-#
-# The correctness driver verifies the FIRST 50 queries in registration
-# (dict-insertion) order, so the window ROTATES each round (VERDICT r3
-# #9): the least-recently-driver-verified queries go first, plus every
-# query whose code path changed this round, plus one fresh
-# representative per remaining operator family.  r2 verified the
-# event/vault/TPC-H block, r3 the LLM-pipeline surface, r4 swaps back
-# to event/TPC-H + this round's rewrites — so across consecutive
-# artifacts the whole 85-query surface carries recent driver evidence.
-# (`tools/check_oracle.py` runs all 85 regardless; the rotation is
-# about what lands in the driver's own CORRECTNESS_r{N}.json.)
-# Mutating the existing dict keeps `from ... import QUERIES` bindings
-# valid.
-# ---------------------------------------------------------------------------
-
-_DRIVER_PRIORITY = [
-    # Round-15 rotation. Two forces compete for the 50 slots this
-    # round: the staleness cadence says the window is the r12-only
-    # block (r12 \ (r13 ∪ r14), exactly 50 — the zero-slack capacity
-    # note from r14 still holds), but VERDICT r14 #5 explicitly
-    # requires driver-grade evidence AT HEAD for the six queries
-    # whose kernels r14 rewrote AFTER their last driver check
-    # (q_gopher_{repetition,positional}, q_curate_gopher,
-    # q_lid_classify, q_dsir_weights, q_hard_negatives), and this
-    # optimization round restructured the dedup/curation barrier
-    # placements, the crawl audit fence, and the incremental restart
-    # guard — touched queries outrank untouched stale ones after an
-    # optimization round (the same verdict's rotation guidance).
-    # Resolution: the 28 non-TPC-H members of the stale block + the 6
-    # r14-kernel queries + 16 queries this round's optimizations flow
-    # through. The 22 TPC-H members yield their slots: byte-identical
-    # code since r4, value-checked by the local 150/150 check_oracle
-    # sweep every round, and serving as the bench's drift control —
-    # the lowest-information driver checks in the catalog.
-    #
-    # the six r14 Arrow-kernel queries (VERDICT r14 #5)
-    "q_gopher_repetition",
-    "q_gopher_positional",
-    "q_curate_gopher",
-    "q_lid_classify",
-    "q_dsir_weights",
-    "q_hard_negatives",
-    # r15-touched: barrier fusion / re-widening / guard memo paths
-    "q_refinedweb_e2e",
-    "q_dedup_ladder",
-    "q_dedup_lines",
-    "q_shared_spans",
-    "q_decontaminate_spans",
-    "q_decontaminate",
-    "q_dedup_clusters",
-    "q_dedup_pipeline",
-    "q_simhash_near_dups",
-    "q_nb_classify",
-    "q_quality_classify",
-    "q_incremental_dedup",
-    "q_incremental_spans",
-    "q_incremental_line_dedup",
-    "q_incremental_url_dedup",
-    "q_incremental_media_dedup",
-    # the r12-only stale block, minus its TPC-H members (28)
-    "q_boilerplate",
-    "q_bpe_apply",
-    "q_crawl_frontier",
-    "q_days_since_earliest",
-    "q_days_since_latest",
-    "q_dedup_best",
-    "q_dedup_preset",
-    "q_domain_pagerank",
-    "q_dq_assertion",
-    "q_entity_resolution",
-    "q_event_count_window",
-    "q_event_distinct_window",
-    "q_event_sum_window",
-    "q_fetch_schedule",
-    "q_full_paths",
-    "q_hash_split",
-    "q_image_meta",
-    "q_link_customer_order",
-    "q_main_content",
-    "q_pack_chunks",
-    "q_pivot_chord",
-    "q_previous_interactions",
-    "q_robots_filter",
-    "q_sitemap",
-    "q_sniff_csv",
-    "q_top_customers",
-    "q_warc_extract",
-    "q_wav",
-    # --- driver window ends here (first 50).
-]
-
-
-_ordered = {n: QUERIES[n] for n in _DRIVER_PRIORITY if n in QUERIES}
-_ordered.update({n: s for n, s in QUERIES.items() if n not in _ordered})
-QUERIES.clear()
-QUERIES.update(_ordered)

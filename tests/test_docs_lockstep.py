@@ -39,18 +39,32 @@ def test_readme_count_line_matches_catalog():
     assert with_oracle == sum(1 for s in QUERIES.values() if s.oracle is not None)
 
 
-def test_driver_window_has_no_unknown_names():
-    from featurestore_spark.queries import catalog
-    from featurestore_spark.queries.catalog import _DRIVER_PRIORITY
-
-    unknown = [n for n in _DRIVER_PRIORITY if n not in QUERIES]
-    assert not unknown, f"_DRIVER_PRIORITY names absent from QUERIES: {unknown}"
-    # Rotation invariant: the tail reorder rebuilds the QUERIES dict —
-    # it must reorder, never drop. Count the @_register sites in the
-    # source (the pre-reorder registration count) against the live
-    # dict, so a reorder that silently discarded unlisted queries
-    # would fail here.
+def test_driver_window_is_computed_from_correctness_artifacts(tmp_path):
     import inspect
+    import json
 
+    import __spark_entry__ as entrymod
+    from featurestore_spark.queries import catalog
+
+    # The catalog dict silently overwrites a re-registered name, so
+    # count the @_register sites in the source against the live dict:
+    # a duplicate or dropped registration fails here.
     src = inspect.getsource(catalog)
     assert src.count("@_register(") == len(QUERIES)
+
+    names = list(QUERIES)
+    assert entrymod._driver_order(str(tmp_path)) == names
+
+    def artifact(round_no, verified):
+        path = tmp_path / f"CORRECTNESS_r{round_no}.json"
+        path.write_text(json.dumps({n: {"status": "ok"} for n in verified}))
+
+    # r9 lists its names against registration order; r10 re-verifies
+    # names[2:4]. A numeric round sort puts r9's remainder before r10.
+    artifact(9, reversed(names[0:4]))
+    artifact(10, names[2:6])
+    order = entrymod._driver_order(str(tmp_path))
+    assert sorted(order) == sorted(names) and len(set(order)) == len(names)
+    assert order == names[6:] + names[0:2] + names[2:6]
+
+    assert list(entrymod.queries()) == entrymod._driver_order(entrymod.REPO)

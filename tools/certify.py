@@ -100,50 +100,20 @@ def ensure_stress(factor: int, base: str) -> str:
 def check_window_cadence(max_stale_rounds: int = 2) -> bool:
     """Driver-evidence cadence guard (VERDICT r9 #8): every catalog
     query's last driver-green round must be at most
-    ``max_stale_rounds`` old AFTER this round's artifact lands —
+    ``max_stale_rounds`` old AFTER the next round's artifact lands —
     i.e. each query either appears in some CORRECTNESS_r*.json
-    recently enough, or sits in the CURRENT first-50 driver window
-    (which becomes this round's artifact). Fails the round when the
-    rotation discipline would let a query's driver evidence go stale,
-    instead of leaving the discipline by-convention."""
-    import glob
-    import json
-    import re
-
+    recently enough, or sits in the computed first-50 driver window
+    (which becomes the next round's artifact). Fails the round when
+    the window cannot keep every query's driver evidence fresh."""
     sys.path.insert(0, REPO)
-    from featurestore_spark.queries.catalog import (
-        QUERIES,
-        _DRIVER_PRIORITY,
-    )
+    import __spark_entry__ as entrymod
+    from featurestore_spark.queries import QUERIES
 
-    last: dict[str, int] = {}
-    per_round: dict[int, set] = {}
-    for f in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", os.path.basename(f))
-        if not m:
-            continue
-        r = int(m.group(1))
-        d = json.load(open(f))
-        qs = d.get("queries", d) if isinstance(d, dict) else d
-        names = set(
-            qs.keys() if isinstance(qs, dict) else (
-                row["name"] if isinstance(row, dict) else row for row in qs
-            )
-        )
-        per_round[r] = names
-        for q in names:
-            last[q] = max(last.get(q, 0), r)
-    window = set(_DRIVER_PRIORITY[:50])
-    newest = max(per_round) if per_round else 0
-    # Idempotent at a closed round (ADVICE r10): once this round's
-    # artifact lands, its query set equals the current window — the
-    # window already BECAME that round's evidence, so re-runs must
-    # evaluate staleness at that round, not demand next round's
-    # rotation before _DRIVER_PRIORITY has moved.
-    if per_round.get(newest) == window:
-        current = newest
-    else:
-        current = newest + 1
+    last = entrymod._last_verified(REPO)
+    window = set(list(entrymod.queries())[:50])
+    # The window is computed from the artifacts on disk, so it always
+    # describes the round after the newest one.
+    current = max(last.values(), default=0) + 1
     stale = sorted(
         q
         for q in QUERIES

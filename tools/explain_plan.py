@@ -1,12 +1,12 @@
 #!/usr/bin/env python3
 """Dump `.explain("formatted")` for catalog queries to files.
 
-The optimization-round deliverable (`plans/r14/<query>_{before,after}.txt`)
-wants the formatted physical plan for every query an optimization
-touched, captured from code the judge can diff against. Usage:
+Writes `<out>/<query><suffix>.txt` with the formatted physical plan of
+each named query, so a plan change can be diffed before and after an
+optimization. Usage:
 
-  python3 tools/explain_plan.py --out plans/r14 --suffix _before q_dedup_preset ...
-  python3 tools/explain_plan.py --out plans/r14 --suffix _after --all-touched
+  python3 tools/explain_plan.py --out /tmp/plans --suffix _before q_dedup_preset ...
+  python3 tools/explain_plan.py --out /tmp/plans --suffix _after q_dedup_preset ...
 
 Plans are captured at --sf (default sf0.1 — the bench's data) with the
 same session settings bench.py uses, so Exchange counts / join picks
@@ -25,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default="plans/r14")
+    ap.add_argument("--out", required=True, help="directory the dumps go to")
     ap.add_argument("--suffix", default="")
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()

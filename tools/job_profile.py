@@ -2,12 +2,13 @@
 """Per-query Spark job profile via the UI REST API (guide §7.1).
 
 For each named query: run it once warm, then run it again inside a
-marked window and report, for the jobs of that window, the job count,
-summed job wall time, and the BETWEEN-JOB gap time (driver-side
-Catalyst/scheduling cost — the thing `explain` cannot show and per-job
-sums hide). This is the r14 post-bench probe mechanized: fence-heavy /
+window tagged with the job group ``profile-<query>:query`` and report
+the metrics `perfbench.spans.SparkMonitor` reads for that group: job
+count, BETWEEN-JOB driver gap (driver-side Catalyst/scheduling cost —
+the thing `explain` cannot show and per-job sums hide), executor time,
+shuffle bytes, checkpoint jobs and Arrow UDF time. Fence-heavy /
 iterative queries (refinedweb, connected components) are gap-bound,
-and "fuse the fences" claims are graded on this number.
+and "fuse the fences" claims are graded on the gap.
 
 Usage:
     python tools/job_profile.py q_refinedweb_e2e q_entity_resolution \
@@ -21,25 +22,13 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _rest(spark, path: str):
-    base = spark.sparkContext.uiWebUrl
-    with urllib.request.urlopen(f"{base}/api/v1/{path}") as r:
-        return json.load(r)
+from perfbench.spans import SparkMonitor  # noqa: E402
 
 
-def _parse_ts(s: str) -> float:
-    # REST timestamps look like 2026-08-17T19:58:00.123GMT
-    from datetime import datetime
-
-    return datetime.strptime(s[:23], "%Y-%m-%dT%H:%M:%S.%f").timestamp()
-
-
-def profile(spark, sf_dir: str, name: str, runs: int = 1) -> dict:
+def profile(spark, monitor: SparkMonitor, sf_dir: str, name: str, runs: int = 1) -> dict:
     from featurestore_spark.queries import QUERIES
 
     spec = QUERIES[name]
@@ -50,67 +39,22 @@ def profile(spark, sf_dir: str, name: str, runs: int = 1) -> dict:
         ).save()
 
     go()  # warm: codegen, broadcasts, page cache
-    app = spark.sparkContext.applicationId
-    before_ids = {j["jobId"] for j in _rest(spark, f"applications/{app}/jobs")}
-    spark.sparkContext.setJobDescription(f"profile:{name}")
-    t0 = time.perf_counter()
+    group = f"profile-{name}"
+    sc = spark.sparkContext
+    sc.setJobGroup(f"{group}:query", f"profile:{name}")
+    start = time.time()
     for _ in range(runs):
         go()
-    wall = time.perf_counter() - t0
-    spark.sparkContext.setJobDescription(None)
-    jobs = [
-        j
-        for j in _rest(spark, f"applications/{app}/jobs")
-        if j["jobId"] not in before_ids
-    ]
-    jobs.sort(key=lambda j: j["jobId"])
-    spans = []
-    for j in jobs:
-        if "submissionTime" in j and "completionTime" in j:
-            spans.append(
-                (_parse_ts(j["submissionTime"]), _parse_ts(j["completionTime"]))
-            )
-    summed = sum(e - s for s, e in spans)
-    # gap time: wall minus the union of job spans (jobs may overlap)
-    union = 0.0
-    for s, e in sorted(spans):
-        if union == 0.0:
-            cur_s, cur_e = s, e
-            union = e - s
-            continue
-        if s > cur_e:
-            union += e - s
-            cur_s, cur_e = s, e
-        elif e > cur_e:
-            union += e - cur_e
-            cur_e = e
-    gaps = max(0.0, wall - union)
-    out = {
+    end = time.time()
+    sc.setJobGroup(None, None)
+    metrics = monitor.op_metrics(group, start, end)
+    return {
         "query": name,
         "runs": runs,
-        "wall_s": round(wall, 3),
-        "n_jobs": len(jobs),
-        "job_time_summed_s": round(summed, 3),
-        "job_time_union_s": round(union, 3),
-        "gap_s": round(gaps, 3),
+        "wall_s": round(end - start, 3),
+        "n_jobs": metrics.pop("jobs"),
+        **{k: round(v, 3) if isinstance(v, float) else v for k, v in metrics.items()},
     }
-    if os.environ.get("PROFILE_DETAIL"):
-        out["jobs"] = [
-            {
-                "id": j["jobId"],
-                "dur_s": round(
-                    _parse_ts(j["completionTime"])
-                    - _parse_ts(j["submissionTime"]),
-                    3,
-                )
-                if "completionTime" in j and "submissionTime" in j
-                else None,
-                "tasks": j.get("numTasks"),
-                "name": (j.get("name") or "")[:100],
-            }
-            for j in jobs
-        ]
-    return out
 
 
 def main():
@@ -134,8 +78,9 @@ def main():
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
+    monitor = SparkMonitor(spark)
     for name in args.queries:
-        print(json.dumps(profile(spark, args.sf, name, args.runs)), flush=True)
+        print(json.dumps(profile(spark, monitor, args.sf, name, args.runs)), flush=True)
     spark.stop()
 
 
