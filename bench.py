@@ -47,6 +47,29 @@ def flag_for_solo(
     ]
 
 
+def prev_baseline(
+    sidecar: str, sf: float | None, default_parallelism: int
+) -> tuple[dict[str, float], float]:
+    """The previous sidecar's per-query map and TPC-H control wall,
+    the baseline of the worst-movers digest and the solo re-runs.
+    Timings from another scale factor or core count are no baseline:
+    such a sidecar, like a missing one, gives ``({}, 0.0)``."""
+    try:
+        with open(sidecar) as f:
+            prev = json.load(f)
+    except (OSError, ValueError):
+        return {}, 0.0
+    if (
+        prev.get("sf") != sf
+        or prev.get("default_parallelism") != default_parallelism
+    ):
+        return {}, 0.0
+    return (
+        prev.get("queries", {}) or {},
+        float(prev.get("tpch_control_wall") or 0.0),
+    )
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -215,6 +238,13 @@ def main():
         > 1.25 * timings[q]
     }
 
+    # Self-verification fields (VERDICT r14 #2): the actual
+    # parallelism the session ran with — the driver's scaling probe
+    # can now confirm $SPARK_GRAFT_CPUS took effect instead of
+    # inferring it from core-insensitive ratios (the r14
+    # suspect_cpus_ignored false positive).
+    default_parallelism = spark.sparkContext.defaultParallelism
+
     # Mechanized suite-noise adjudication (VERDICT r13 #3): a query
     # whose reading moved >1.2x against the PREVIOUS committed
     # sidecar AND which carries a suite_noise entry this run (its two
@@ -229,15 +259,7 @@ def main():
     sidecar = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "bench_full.json"
     )
-    prev_map: dict[str, float] = {}
-    prev_control = 0.0
-    try:
-        with open(sidecar) as f:
-            _prev_sidecar = json.load(f)
-        prev_map = _prev_sidecar.get("queries", {}) or {}
-        prev_control = float(_prev_sidecar.get("tpch_control_wall") or 0.0)
-    except (OSError, ValueError):
-        prev_map = {}
+    prev_map, prev_control = prev_baseline(sidecar, sf, default_parallelism)
     flagged = flag_for_solo(timings, suite_noise, prev_map)
     solo_rerun: dict[str, dict] = {}
     # bounded: the solo block may use up to 15% beyond the pass-2
@@ -266,13 +288,6 @@ def main():
         }
         gc.collect()
         spark.catalog.clearCache()
-
-    # Self-verification fields (VERDICT r14 #2): the actual
-    # parallelism the session ran with — the driver's scaling probe
-    # can now confirm $SPARK_GRAFT_CPUS took effect instead of
-    # inferring it from core-insensitive ratios (the r14
-    # suspect_cpus_ignored false positive).
-    default_parallelism = spark.sparkContext.defaultParallelism
 
     total = round(sum(timings.values()), 3)
     tpch_control = round(

@@ -76,12 +76,10 @@ class HadoopFS:
         synthetic and their mtime is typically 0 (ADVICE r13) — so
         the identity also folds in the recursive file count and the
         MAX file modification time: an external rewrite changes file
-        mtimes even when it reproduces the exact byte count. Used to
-        verify a bucketed mirror still matches the path source of
-        truth before serving it (ADVICE r12: a writer without the
-        mirror knob, or an external rewrite of the path, must not let
-        a stale mirror win), and as the parquet schema cache's
-        snapshot key (`io.tables`).
+        mtimes even when it reproduces the exact byte count. Used as
+        the parquet schema cache's snapshot key (`io.tables`): any
+        rewrite of the path, including an external one, must change
+        the key so the next read infers afresh.
 
         Cost: a few Py4J round trips per directory and per file. The
         walk uses plain ``listStatus`` statuses: ``listFiles``' located

@@ -114,6 +114,13 @@ class TableVaultLoader(VaultLoader):
         self.spark.sql(f"DROP TABLE IF EXISTS {out}")
         self.spark.sql(f"ALTER TABLE {staged} RENAME TO {out}")
 
+    def compact_history(self, table: str, **kwargs) -> dict:
+        raise NotImplementedError(
+            "TableVaultLoader.compact_history: catalog tables have no "
+            "file listing to compact; the parquet-layer version counts "
+            "files under a history path this loader never writes"
+        )
+
     def _write_change_tables(
         self, table: str, inserts: DataFrame, updates: DataFrame, deletes: DataFrame,
         retention_days: int = 3,

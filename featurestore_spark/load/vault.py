@@ -138,8 +138,6 @@ class VaultLoader:
         fingerprint_method: str = "xxhash64",
         open_end: str = OPEN_END_DATE,
         collect_counts: bool = True,
-        bucket_current: int | None = None,
-        bucket_table_prefix: str = "vault_",
     ):
         self.spark = spark
         self.base = base_path.rstrip("/")
@@ -148,37 +146,6 @@ class VaultLoader:
         self.fp_method = fingerprint_method
         self.open_end = open_end
         self.collect_counts = collect_counts
-        if bucket_current is not None and bucket_current < 1:
-            raise ValueError(
-                f"bucket_current must be >= 1 buckets, got {bucket_current}"
-            )
-        # Optional co-located-merge knob: when set, every `current`
-        # snapshot is MIRRORED into a catalog table bucketed (and
-        # sorted) by the entity-id hash key — the join key of every
-        # classify/merge and of most downstream consumers.
-        # `read_current` prefers the mirror, so each later load's
-        # big-side join runs with NO exchange on the accumulated
-        # snapshot (only the small incoming batch shuffles into the
-        # bucket layout). The shuffle of the big side is paid once at
-        # write time and amortized over every merge batch — the right
-        # trade when the snapshot is large and loads are frequent
-        # (the 100 TB steady state); leave unset for one-shot loads.
-        # The parquet path stays the source of truth; crash safety,
-        # cross-vault naming, and the layout-verification cache live
-        # in skew.BucketedMirror (dropped before the parquet swap,
-        # rewritten after, and stamped with the path's snapshot
-        # fingerprint — read_current re-verifies the stamp so a
-        # write from an UNmirrored loader or an external job can
-        # never leave a stale mirror serving).
-        self.bucket_current = bucket_current
-        self.bucket_table_prefix = bucket_table_prefix
-        self._mirror = None
-        if bucket_current is not None:
-            from featurestore_spark.operators.skew import BucketedMirror
-
-            self._mirror = BucketedMirror(
-                spark, bucket_table_prefix, self.base, bucket_current
-            )
 
     # -- storage helpers ----------------------------------------------------
     #
@@ -208,37 +175,12 @@ class VaultLoader:
     def _exists(self, table: str) -> bool:
         return self._fs_exists(self._path(table, CURRENT_FILE))
 
-    def _mirror_keys(self, cols: list[str]) -> list[str] | None:
-        """The merge-join key the bucketed mirror co-locates on:
-        entity_id for hubs/satellites/mappings, the (src, dst) entity
-        pair for links — None when neither is present (no mirror)."""
-        if self.m.entity_id in cols:
-            return [self.m.entity_id]
-        pair = [self.m.src_entity_id, self.m.dst_entity_id]
-        if all(c in cols for c in pair):
-            return pair
-        return None
-
     def read_current(self, table: str) -> DataFrame:
-        """The table's current snapshot: the bucketed mirror when one
-        is configured and its stamp matches the parquet path, else the
-        parquet path. The path read infers its schema once per
-        snapshot (`io.tables._read_parquet`): re-reading an unchanged
-        table launches no Spark job, and any write to it (a load, an
-        external rewrite) makes the next read infer afresh."""
-        path = self._path(table, CURRENT_FILE)
-        stamp = self._fs.fingerprint(path)
-        if self._mirror is not None:
-            # fingerprint check: the mirror only wins when its stamp
-            # matches the parquet path's CURRENT snapshot identity —
-            # a plain (unmirrored) loader or an external job rewriting
-            # the path must not let a stale mirror serve (ADVICE r12)
-            mirror = self._mirror.read(
-                table, self._mirror_keys, fingerprint=stamp
-            )
-            if mirror is not None:
-                return mirror
-        return _read_parquet(self.spark, path, prints=(stamp,))
+        """The table's current snapshot. The read infers its schema
+        once per snapshot (`io.tables._read_parquet`): re-reading an
+        unchanged table launches no Spark job, and any write to it (a
+        load, an external rewrite) makes the next read infer afresh."""
+        return _read_parquet(self.spark, self._path(table, CURRENT_FILE))
 
     def read_history(self, table: str) -> DataFrame:
         """Every row-version of the table (SCD2 history), read through
@@ -251,29 +193,11 @@ class VaultLoader:
         # Write-new-then-swap: plain parquet overwrite is not atomic;
         # staging keeps a crash from destroying `current`.
         tmp = self._path(table, CURRENT_FILE + ".tmp")
-        # the tmp write runs FIRST: `df`'s plan may read the mirror
-        # (read_current fed the merge), so the mirror must still exist
-        # while this executes — and the parquet current is untouched,
-        # so a crash here leaves mirror and parquet in sync (both old)
         df.write.mode("overwrite").parquet(tmp)
-        # mirror dropped BEFORE the swap: from here to the post-swap
-        # refresh there is NO mirror, so at every crash point an
-        # existing mirror matches the committed parquet (readers fall
-        # back to the parquet path while the mirror is absent)
-        if self._mirror is not None:
-            self._mirror.drop(table)
         final = self._path(table, CURRENT_FILE)
         if self._fs_exists(final):
             self._fs_delete(final)
         self._fs_rename(tmp, final)
-        if self._mirror is not None:
-            frame = self.spark.read.parquet(final)
-            keys = self._mirror_keys(frame.columns)
-            if keys is not None:
-                self._mirror.refresh(
-                    table, frame, keys,
-                    fingerprint=self._fs.fingerprint(final),
-                )
 
     def _append_history(self, df: DataFrame, table: str, partition_by=None) -> None:
         writer = df.write.mode("append")
@@ -435,6 +359,19 @@ class VaultLoader:
                 m.version, F.coalesce(F.col("_tomb_version") + 1, F.col(m.version))
             )
             .drop("_tomb_version")
+        )
+
+    def _tombstones(self, rows: DataFrame, process_time: str) -> DataFrame:
+        """Tombstones for the current `rows` the caller picked: rectype
+        D at version + 1, starting and ending at `process_time`."""
+        m = self.m
+        ts = F.lit(process_time).cast("timestamp")
+        return (
+            rows.withColumn(m.rectype, F.lit(self.rt.delete))
+            .withColumn(m.version, F.col(m.version) + 1)
+            .withColumn(m.start_time, ts)
+            .withColumn(m.end_time, ts)
+            .withColumn(m.process_date, F.lit(process_time).cast("date"))
         )
 
     def _count(self, df: DataFrame) -> int:
@@ -654,14 +591,11 @@ class VaultLoader:
                     incoming.select(m.entity_id), m.entity_id, "left_anti"
                 ).select(m.entity_id)
             if delete_src is not None:
-                deletes = (
-                    cur.where(F.col(m.rectype) != rt.delete)
-                    .join(delete_src, m.entity_id, "inner")
-                    .withColumn(m.rectype, F.lit(rt.delete))
-                    .withColumn(m.version, F.col(m.version) + 1)
-                    .withColumn(m.start_time, F.lit(process_time).cast("timestamp"))
-                    .withColumn(m.end_time, F.lit(process_time).cast("timestamp"))
-                    .withColumn(m.process_date, F.lit(process_time).cast("date"))
+                deletes = self._tombstones(
+                    cur.where(F.col(m.rectype) != rt.delete).join(
+                        delete_src, m.entity_id, "inner"
+                    ),
+                    process_time,
                 )
 
             delta = inserts if deletes is None else inserts.unionByName(deletes)
@@ -797,14 +731,11 @@ class VaultLoader:
                 incoming.select(m.entity_id), m.entity_id, "left_anti"
             ).select(m.entity_id)
         if delete_src is not None:
-            deletes = (
-                cur.where(F.col(m.rectype) != rt.delete)
-                .join(delete_src, m.entity_id, "inner")
-                .withColumn(m.rectype, F.lit(rt.delete))
-                .withColumn(m.version, F.col(m.version) + 1)
-                .withColumn(m.start_time, F.lit(process_time).cast("timestamp"))
-                .withColumn(m.end_time, F.lit(process_time).cast("timestamp"))
-                .withColumn(m.process_date, F.lit(process_time).cast("date"))
+            deletes = self._tombstones(
+                cur.where(F.col(m.rectype) != rt.delete).join(
+                    delete_src, m.entity_id, "inner"
+                ),
+                process_time,
             )
 
         delta = inserts.unionByName(updates)
@@ -932,14 +863,11 @@ class VaultLoader:
             inserts = self._resurrect(inserts, cur, pair)
             deletes = None
             if full_refresh:
-                deletes = (
-                    cur.where(F.col(m.rectype) != rt.delete)
-                    .join(keyed.select(*pair), pair, "left_anti")
-                    .withColumn(m.rectype, F.lit(rt.delete))
-                    .withColumn(m.version, F.col(m.version) + 1)
-                    .withColumn(m.start_time, F.lit(process_time).cast("timestamp"))
-                    .withColumn(m.end_time, F.lit(process_time).cast("timestamp"))
-                    .withColumn(m.process_date, F.lit(process_time).cast("date"))
+                deletes = self._tombstones(
+                    cur.where(F.col(m.rectype) != rt.delete).join(
+                        keyed.select(*pair), pair, "left_anti"
+                    ),
+                    process_time,
                 )
             delta = inserts if deletes is None else inserts.unionByName(deletes)
             delta = delta.cache()

@@ -18,8 +18,6 @@ cut the exponentially growing lineage.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -67,11 +65,11 @@ def connected_components(
     non-increasing, so convergence probes and the fixed point are
     unchanged.
 
-    Warns if `max_iterations` is exhausted while labels were still
-    changing (component diameter > max_iterations): the returned
-    labels are then PARTIAL — ids in one component may carry
-    different labels. Raise `max_iterations` for deep graphs. The
-    exhaustion probe compares the LAST round against the round before
+    Raises RuntimeError if `max_iterations` is exhausted while labels
+    were still changing (component diameter beyond what the rounds
+    reach): the labels would be PARTIAL — ids in one component could
+    carry different labels — so none are returned. Raise
+    `max_iterations` for deep graphs. The exhaustion probe compares the LAST round against the round before
     it (an iteration with no change is a fixed point), so a graph that
     converges exactly on the final round is not misreported as partial
     even when the change landed mid-probe-window (ADVICE r3).
@@ -198,13 +196,11 @@ def connected_components(
             converged = True
     labels = labels.select("id", "component")
     if not converged:
-        warnings.warn(
+        raise RuntimeError(
             f"connected_components: max_iterations={max_iterations} "
             "exhausted before convergence — returned labels are partial "
             "(some components carry multiple labels); raise "
-            "max_iterations for graphs with larger diameter",
-            RuntimeWarning,
-            stacklevel=2,
+            "max_iterations for graphs with larger diameter"
         )
     return labels
 

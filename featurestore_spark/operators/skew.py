@@ -119,7 +119,6 @@ def write_bucketed(
     sort_cols: list[str] | None = None,
     fmt: str = "parquet",
     mode: str = "overwrite",
-    path: str | None = None,
 ) -> None:
     """Persist bucketed (and optionally sorted) by the join key:
     subsequent equi-joins / groupBys on `bucket_cols` between tables
@@ -140,12 +139,6 @@ def write_bucketed(
     writer = df.write.mode(mode).format(fmt).bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
-    if path is not None:
-        # external table at a caller-owned location: the data lives
-        # where the caller can provably clean it up (BucketedMirror
-        # keeps its mirrors under the loader's own base instead of a
-        # GUESSED warehouse location — ADVICE r12)
-        writer = writer.option("path", path)
     writer.saveAsTable(table)
 
 
@@ -173,147 +166,6 @@ class BucketedTableSink:
 
     def apply(self, df, ctx):
         return self(df, ctx)
-
-
-class BucketedMirror:
-    """Shared bucketed-mirror machinery for the merge loaders
-    (VaultLoader.bucket_current / StarLoader.bucket_dims): a catalog
-    table bucketed+sorted by the merge join key, maintained alongside
-    a path-based source of truth so repeated merge batches get
-    co-located joins.
-
-    Crash-safety contract (one place, both loaders): the mirror is
-    DROPPED before the caller swaps its path data and REWRITTEN after
-    — so at every crash point an EXISTING mirror written by a
-    mirror-enabled loader is in sync with the path (a missing mirror
-    just falls back to the path read, never a stale snapshot). The
-    drop also clears the mirror's data location, so a crash
-    mid-`saveAsTable` cannot orphan files that would fail every later
-    refresh.
-
-    That drop-before-swap discipline only covers writers that HAVE
-    the knob enabled — a plain loader over the same base, or any
-    external job rewriting the path, updates the source of truth
-    without touching the mirror. So `refresh` additionally stamps a
-    snapshot FINGERPRINT of the path data (mtime + byte count, see
-    `HadoopFS.fingerprint`) into the mirror's table properties, and
-    `read` verifies it against the path's current value before
-    serving — a mirror that no longer matches is skipped (path read
-    wins), never silently served stale (ADVICE r12, medium).
-
-    The mirror data lives UNDER THE LOADER'S OWN BASE
-    (`{base}/_mirror/{table}`, an external table) — not at a guessed
-    warehouse location — so `drop`'s cleanup provably owns what it
-    deletes and works under any current database / custom warehouse
-    layout (ADVICE r12, low). Table names additionally embed an 8-hex
-    digest of the base path — two loaders over different vaults in
-    one metastore can never clobber (or silently serve) each other's
-    mirror.
-
-    `read` caches the bucket-layout verification per table name (the
-    layout only changes through `refresh`/`drop` on this instance, so
-    the DESCRIBE round-trip runs once); the fingerprint check runs on
-    EVERY read — the path can change under any cache."""
-
-    FINGERPRINT_PROP = "featurestore.mirror.fingerprint"
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        prefix: str,
-        base_path: str,
-        n_buckets: int,
-        fmt: str = "parquet",
-    ):
-        import hashlib
-        import re as _re
-
-        if n_buckets < 1:
-            raise ValueError(
-                f"BucketedMirror: n_buckets must be >= 1, got {n_buckets}"
-            )
-        self.spark = spark
-        self.prefix = prefix
-        self.base = base_path.rstrip("/")
-        self.digest = hashlib.md5(base_path.encode()).hexdigest()[:8]
-        self.n_buckets = n_buckets
-        self.fmt = fmt
-        self._sanitize = lambda s: _re.sub(r"[^A-Za-z0-9_]", "_", s)
-        self._verified: dict[str, bool] = {}
-
-    def table_for(self, name: str) -> str:
-        return f"{self.prefix}{self._sanitize(name)}_{self.digest}_current"
-
-    def _location(self, t: str) -> str:
-        # loader-owned, not warehouse-guessed: cleanup targets a path
-        # this mirror provably created (ADVICE r12)
-        return f"{self.base}/_mirror/{t.lower()}"
-
-    def drop(self, name: str) -> None:
-        from featurestore_spark.io.fs import HadoopFS
-
-        t = self.table_for(name)
-        self._verified.pop(t, None)
-        self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-        # the mirror is an EXTERNAL table (drop leaves its files), and
-        # a crash mid-saveAsTable leaves files with no catalog entry;
-        # clearing the loader-owned location here keeps refresh
-        # retryable instead of failing 'location already exists'
-        fs = HadoopFS(self.spark)
-        loc = self._location(t)
-        if fs.exists(loc):
-            fs.delete(loc)
-
-    def refresh(
-        self,
-        name: str,
-        frame: DataFrame,
-        keys: list[str],
-        fingerprint: str | None = None,
-    ) -> None:
-        """Rebuild the mirror from `frame` and stamp `fingerprint`
-        (the path source of truth's snapshot identity at refresh
-        time) into the table properties — `read` refuses to serve a
-        mirror whose stamp no longer matches the path."""
-        t = self.table_for(name)
-        self.drop(name)
-        write_bucketed(
-            frame, t, keys, self.n_buckets,
-            sort_cols=keys, fmt=self.fmt, mode="errorifexists",
-            path=self._location(t),
-        )
-        if fingerprint is not None:
-            self.spark.sql(
-                f"ALTER TABLE {t} SET TBLPROPERTIES "
-                f"('{self.FINGERPRINT_PROP}'='{fingerprint}')"
-            )
-        self._verified[t] = True
-
-    def _stamped(self, t: str) -> str | None:
-        rows = self.spark.sql(f"SHOW TBLPROPERTIES {t}").collect()
-        props = {r["key"]: r["value"] for r in rows}
-        return props.get(self.FINGERPRINT_PROP)
-
-    def read(self, name: str, keys_of, fingerprint: str | None = None) -> DataFrame | None:
-        """The mirror frame when it exists, carries the expected
-        bucket layout, AND (when `fingerprint` is given) its stamped
-        snapshot identity matches the path source of truth's current
-        one — else None (caller falls back to its path read).
-        ``keys_of(columns)`` maps the mirror's columns to the expected
-        bucket keys (or None for un-mirrorable frames). The layout
-        check is cached per table; the fingerprint check runs every
-        read (an external writer can change the path at any time)."""
-        t = self.table_for(name)
-        if not self._verified.get(t):
-            if not self.spark.catalog.tableExists(t):
-                return None
-            keys = keys_of(self.spark.table(t).columns)
-            if keys is None or not is_bucketed_on(self.spark, t, keys):
-                return None
-            self._verified[t] = True
-        if fingerprint is not None and self._stamped(t) != fingerprint:
-            return None
-        return self.spark.table(t)
 
 
 def is_bucketed_on(

@@ -53,15 +53,7 @@ def _now() -> str:
 
 
 class StarLoader:
-    def __init__(
-        self,
-        spark: SparkSession,
-        base_path: str,
-        fmt: str = "parquet",
-        *,
-        bucket_dims: int | None = None,
-        bucket_table_prefix: str = "star_",
-    ):
+    def __init__(self, spark: SparkSession, base_path: str, fmt: str = "parquet"):
         # fmt: "parquet" (default) or "orc" — S11 HiveWriter wrote ORC
         # (star/io/HiveWriter.scala:14); both are columnar, same API.
         self.spark = spark
@@ -72,51 +64,12 @@ class StarLoader:
         # always report "missing" and silently re-initialize the dim,
         # destroying SCD2 history (ADVICE r1, medium).
         self.fs = HadoopFS(spark)
-        if bucket_dims is not None and bucket_dims < 1:
-            raise ValueError(
-                f"bucket_dims must be >= 1 buckets, got {bucket_dims}"
-            )
-        # Optional co-located-merge knob (same trade as VaultLoader's
-        # `bucket_current`): mirror each written dim into a catalog
-        # table bucketed + sorted by hashed_key — the join key of the
-        # SCD2 merge (new-rows anti-join, changed-rows inner join) —
-        # so repeated `load_dim` batches never re-exchange the
-        # accumulated dim; only the incoming batch shuffles into the
-        # bucket layout. Fact FK resolution keeps its broadcast path
-        # (dims broadcast; bucketing is for the dim-vs-dim merges).
-        # Crash safety, cross-store naming, and the layout cache live
-        # in skew.BucketedMirror (dropped before each path swap,
-        # rewritten after, and fingerprint-stamped — read_dim
-        # re-verifies the stamp against the path, so an unmirrored
-        # writer or external rewrite never serves a stale mirror).
-        self.bucket_dims = bucket_dims
-        self.bucket_table_prefix = bucket_table_prefix
-        self._mirror = None
-        if bucket_dims is not None:
-            from featurestore_spark.operators.skew import BucketedMirror
-
-            self._mirror = BucketedMirror(
-                spark, bucket_table_prefix, self.base, bucket_dims, fmt=fmt
-            )
 
     def _path(self, name: str) -> str:
         return f"{self.base}/{name}.{self.fmt}"
 
     def read_dim(self, name: str) -> DataFrame:
-        """Current stored state of dim `name` — the bucketed catalog
-        mirror when the `bucket_dims` knob maintains one (co-located
-        merge joins), else the parquet/orc path."""
-        if self._mirror is not None:
-            # serve the mirror only when its stamped fingerprint
-            # matches the path's current snapshot (ADVICE r12: an
-            # unmirrored writer / external rewrite must win)
-            mirror = self._mirror.read(
-                f"dim_{name}",
-                lambda cols: ["hashed_key"],
-                fingerprint=self.fs.fingerprint(self._path(f"dim_{name}")),
-            )
-            if mirror is not None:
-                return mirror
+        """Current stored state of dim `name`."""
         return self.spark.read.format(self.fmt).load(
             self._path(f"dim_{name}")
         )
@@ -210,13 +163,6 @@ class StarLoader:
             unknown = self._unknown_row(dim, cols, process_time)
             dim = dim.unionByName(unknown)
             dim.write.mode("overwrite").format(self.fmt).save(dim_path)
-            if self._mirror is not None:
-                self._mirror.refresh(
-                    f"dim_{spec.name}",
-                    self.spark.read.format(self.fmt).load(dim_path),
-                    ["hashed_key"],
-                    fingerprint=self.fs.fingerprint(dim_path),
-                )
             return self.read_dim(spec.name)
 
         prev = self.read_dim(spec.name)
@@ -274,21 +220,9 @@ class StarLoader:
         # VaultLoader._write_current): works on any scheme, and a crash
         # mid-write can't destroy the previous dim.
         tmp = dim_path + ".tmp"
-        # tmp write first (`merged` reads the mirror via read_dim),
-        # mirror dropped before the swap, rewritten after — the
-        # BucketedMirror crash contract (see VaultLoader._write_current)
         merged.write.mode("overwrite").format(self.fmt).save(tmp)
-        if self._mirror is not None:
-            self._mirror.drop(f"dim_{spec.name}")
         self.fs.delete(dim_path)
         self.fs.rename(tmp, dim_path)
-        if self._mirror is not None:
-            self._mirror.refresh(
-                f"dim_{spec.name}",
-                self.spark.read.format(self.fmt).load(dim_path),
-                ["hashed_key"],
-                fingerprint=self.fs.fingerprint(dim_path),
-            )
         return self.read_dim(spec.name)
 
     @staticmethod
@@ -320,7 +254,7 @@ class StarLoader:
         out = df
         fk_cols = []
         for spec in config.dims:
-            dim = self.spark.read.format(self.fmt).load(self._path(f"dim_{spec.name}"))
+            dim = self.read_dim(spec.name)
             lookup = F.broadcast(
                 dim.where(F.col("current")).select(
                     F.col("hashed_key").alias(f"_hk_{spec.name}"),

@@ -89,3 +89,22 @@ def test_bench_flag_for_solo_selection_rule():
     # d: noisy but absent from prev sidecar -> no baseline, NOT flagged
     assert flag_for_solo(timings, noise, prev) == ["a"]
     assert flag_for_solo(timings, noise, {}) == []
+
+
+def test_bench_prev_baseline_requires_same_run_shape(tmp_path):
+    """The worst-movers digest and the solo re-runs compare against the
+    previous sidecar only when it was written at the same scale factor
+    and core count; any other sidecar reads as no baseline."""
+    import json
+
+    from bench import prev_baseline
+
+    sidecar = tmp_path / "bench_full.json"
+    assert prev_baseline(str(sidecar), 0.1, 32) == ({}, 0.0)
+    sidecar.write_text(json.dumps({
+        "sf": 0.1, "default_parallelism": 32,
+        "queries": {"q": 1.5}, "tpch_control_wall": 11.9,
+    }))
+    assert prev_baseline(str(sidecar), 0.1, 32) == ({"q": 1.5}, 11.9)
+    assert prev_baseline(str(sidecar), 0.001, 32) == ({}, 0.0)
+    assert prev_baseline(str(sidecar), 0.1, 4) == ({}, 0.0)

@@ -164,6 +164,37 @@ def test_fingerprint_matches_a_stat_walk(spark, tmp_path):
     assert HadoopFS(spark).fingerprint(path) == f"{top}:{total}:{n}:{newest}"
 
 
+def test_fingerprint_sees_same_size_rewrite_with_inert_dir_mtime(
+    spark, tmp_path
+):
+    """The fingerprint is the schema cache's snapshot key, so a rewrite
+    must change it even where the directory entry carries no signal:
+    on object stores it is synthetic (mtime typically 0), and a
+    <dir-mtime>:<bytes> identity would then see an external rewrite
+    with the SAME byte count as unchanged and keep serving the old
+    schema. Folding in the files' count and newest mtime moves the
+    key for that rewrite — dir mtime and total bytes unchanged, file
+    contents rewritten later."""
+    fs = HadoopFS(spark)
+    d = tmp_path / "fp"
+    d.mkdir()
+    f = d / "part-0"
+    f.write_text("abcdefgh")
+    dir_mtime = os.stat(d).st_mtime
+    before = fs.fingerprint(str(d))
+    # external rewrite: same byte count, later file mtime, and the
+    # directory entry pinned back to its original stamp (the object
+    # store behavior: directory metadata carries no signal)
+    f.write_text("ABCDEFGH")
+    st = os.stat(f)
+    os.utime(f, (st.st_atime, st.st_mtime + 10))
+    os.utime(d, (dir_mtime, dir_mtime))
+    after = fs.fingerprint(str(d))
+    assert before is not None and after is not None
+    assert before.split(":")[1] == after.split(":")[1]  # same bytes
+    assert before != after  # ...but the identity still moved
+
+
 def test_job_description_restores_the_callers_own(spark):
     sc = spark.sparkContext
     key = "spark.job.description"

@@ -150,324 +150,3 @@ def test_bucketed_sink_guard_and_half_bucketed_join(spark):
         write_bucketed(a, "t", ["k"], 0)
     with pytest.raises(ValueError, match="bucket column"):
         write_bucketed(a, "t", [], 4)
-
-
-def _drop_table(spark, t):
-    import shutil
-
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
-    loc = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    shutil.rmtree(f"{loc.removeprefix('file:')}/{t}", ignore_errors=True)
-
-
-def test_vault_bucketed_current_mirror_and_colocated_merge(spark, tmp_path):
-    """VERDICT r11 #6: the vault's optional `bucket_current` knob —
-    every current snapshot is mirrored into a catalog table bucketed
-    by entity_id, read_current prefers it, results are byte-identical
-    to the plain loader across a multi-batch merge sequence, and the
-    re-join against an unbucketed batch exchanges ONLY that batch."""
-    from featurestore_spark.load import VaultLoader
-    from featurestore_spark.operators.skew import is_bucketed_on
-
-    plain = VaultLoader(spark, str(tmp_path / "plain"))
-    bucketed = VaultLoader(
-        spark, str(tmp_path / "bucketed"), bucket_current=4,
-        bucket_table_prefix="vault_",
-    )
-    mt = bucketed._mirror.table_for("bh")
-    _drop_table(spark, mt)
-    with pytest.raises(ValueError, match="bucket_current"):
-        VaultLoader(spark, str(tmp_path), bucket_current=0)
-
-    def batch(ids):
-        return spark.createDataFrame(
-            [(str(i), i % 2) for i in ids], ["cust_id", "age_flag"]
-        )
-
-    kw = dict(table="bh", entity_type="c", id_fields=["cust_id"],
-              id_type="customer")
-    for ldr in (plain, bucketed):
-        ldr.load_hub(batch(range(50)), process_time="2024-01-01 00:00:00", **kw)
-    assert spark.catalog.tableExists(mt)
-    assert is_bucketed_on(spark, mt, ["entity_id"])
-    # second (overlapping) batch merges through the bucketed mirror
-    for ldr in (plain, bucketed):
-        ldr.load_hub(batch(range(40, 70)), process_time="2024-01-02 00:00:00", **kw)
-    a = sorted(map(tuple, plain.read_current("bh").collect()))
-    b = sorted(map(tuple, bucketed.read_current("bh").collect()))
-    assert a == b and len(a) == 70
-    # plan pin: bucketed current joined to an unbucketed keyed batch
-    # shuffles exactly the batch side (test_bucketed_sink pattern)
-    prev_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        cur = bucketed.read_current("bh")
-        incoming = spark.range(30).select(
-            F.md5(F.concat(F.lit("customer"), F.col("id").cast("string")))
-            .alias("entity_id"),
-            F.lit(1).alias("x"),
-        )
-        plan = (
-            cur.join(incoming, "entity_id")
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert plan.count("Exchange hashpartitioning") == 1
-        assert "Bucketed: true" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thr)
-        _drop_table(spark, mt)
-
-
-def test_star_bucketed_dim_mirror_and_colocated_merge(spark, tmp_path):
-    """StarLoader's `bucket_dims` twin: the SCD2 dim mirror is
-    bucketed by hashed_key, load_dim's multi-batch output matches the
-    plain loader exactly (ids, versions, end-dating), and the merge
-    re-join exchanges only the incoming batch."""
-    from featurestore_spark.operators.skew import is_bucketed_on
-    from featurestore_spark.star.loader import DimSpec, StarLoader
-
-    plain = StarLoader(spark, str(tmp_path / "plain"))
-    bucketed = StarLoader(
-        spark, str(tmp_path / "bucketed"), bucket_dims=4
-    )
-    mt = bucketed._mirror.table_for("dim_d")
-    _drop_table(spark, mt)
-    with pytest.raises(ValueError, match="bucket_dims"):
-        StarLoader(spark, str(tmp_path), bucket_dims=-1)
-    spec = DimSpec(name="d", key_cols=["k"], attr_cols=["attr"])
-
-    def batch(pairs):
-        return spark.createDataFrame(pairs, ["k", "attr"])
-
-    b1 = batch([(f"k{i}", f"a{i}") for i in range(40)])
-    # second batch: 10 changed attrs + 10 new keys
-    b2 = batch(
-        [(f"k{i}", f"CHANGED{i}") for i in range(10)]
-        + [(f"k{i}", f"a{i}") for i in range(40, 50)]
-    )
-    for ldr in (plain, bucketed):
-        ldr.load_dim(b1, spec, process_time="2024-01-01 00:00:00")
-        ldr.load_dim(b2, spec, process_time="2024-01-02 00:00:00")
-    assert spark.catalog.tableExists(mt)
-    assert is_bucketed_on(spark, mt, ["hashed_key"])
-    a = sorted(map(tuple, plain.read_dim("d").collect()))
-    b = sorted(map(tuple, bucketed.read_dim("d").collect()))
-    assert a == b
-    # 40 originals + unknown + 10 new + 10 changed new-versions +
-    # 10 end-dated olds stay as history rows
-    assert len(a) == 61
-    prev_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        incoming = spark.range(20).select(
-            F.md5(F.col("id").cast("string")).alias("hashed_key"),
-            F.lit(1).alias("x"),
-        )
-        plan = (
-            bucketed.read_dim("d").join(incoming, "hashed_key")
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert plan.count("Exchange hashpartitioning") == 1
-        assert "Bucketed: true" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thr)
-        _drop_table(spark, mt)
-
-
-def test_vault_bucketed_mirror_links_key_on_entity_pair(spark, tmp_path):
-    """load_link currents have no entity_id — the mirror must bucket
-    on the (src, dst) entity pair instead of crashing (and a truly
-    keyless frame would skip the mirror, falling back to parquet)."""
-    from featurestore_spark.load import VaultLoader
-    from featurestore_spark.operators.skew import is_bucketed_on
-
-    plain = VaultLoader(spark, str(tmp_path / "p"))
-    bucketed = VaultLoader(spark, str(tmp_path / "b"), bucket_current=4)
-    mt = bucketed._mirror.table_for("bl")
-    _drop_table(spark, mt)
-    pairs = spark.createDataFrame(
-        [(str(i), str(i * 10)) for i in range(30)], ["cust_id", "ord_id"]
-    )
-    pairs2 = spark.createDataFrame(
-        [(str(i), str(i * 10)) for i in range(20, 45)],
-        ["cust_id", "ord_id"],
-    )
-    kw = dict(table="bl", src_fields=["cust_id"], src_id_type="customer",
-              dst_fields=["ord_id"], dst_id_type="order")
-    for ldr in (plain, bucketed):
-        ldr.load_link(pairs, process_time="2024-01-01 00:00:00", **kw)
-        ldr.load_link(pairs2, process_time="2024-01-02 00:00:00", **kw)
-    assert spark.catalog.tableExists(mt)
-    assert is_bucketed_on(spark, mt, ["src_entity_id", "dst_entity_id"])
-    a = sorted(map(tuple, plain.read_current("bl").collect()))
-    b = sorted(map(tuple, bucketed.read_current("bl").collect()))
-    assert a == b and len(a) == 45
-    _drop_table(spark, mt)
-
-
-def test_bucketed_mirror_isolated_per_base_path_and_retryable(spark, tmp_path):
-    """Review findings r12: (a) two bucketed loaders over DIFFERENT
-    vaults sharing a metastore must not clobber (or serve) each
-    other's mirror — names embed a base-path digest; (b) an orphaned
-    managed-table location (crash mid-saveAsTable: files on disk, no
-    catalog entry) must not fail every later refresh — drop() clears
-    the location."""
-    import os
-
-    from featurestore_spark.load import VaultLoader
-
-    dev = VaultLoader(spark, str(tmp_path / "dev"), bucket_current=4)
-    prod = VaultLoader(spark, str(tmp_path / "prod"), bucket_current=4)
-    t_dev, t_prod = dev._mirror.table_for("c"), prod._mirror.table_for("c")
-    assert t_dev != t_prod  # digest makes the names distinct
-    for t in (t_dev, t_prod):
-        _drop_table(spark, t)
-
-    def batch(ids):
-        return spark.createDataFrame(
-            [(str(i),) for i in ids], ["cust_id"]
-        )
-
-    kw = dict(table="c", entity_type="c", id_fields=["cust_id"],
-              id_type="customer")
-    dev.load_hub(batch(range(10)), process_time="2024-01-01 00:00:00", **kw)
-    prod.load_hub(batch(range(50)), process_time="2024-01-01 00:00:00", **kw)
-    # each loader reads ITS OWN snapshot, not the other's
-    assert dev.read_current("c").count() == 10
-    assert prod.read_current("c").count() == 50
-    # orphan-location recovery: fake a crash's leftovers at dev's
-    # mirror location, then reload — the refresh must succeed
-    _drop_table(spark, t_dev)
-    dev2 = VaultLoader(spark, str(tmp_path / "dev"), bucket_current=4)
-    loc = dev2._mirror._location(t_dev)
-    os.makedirs(loc, exist_ok=True)
-    with open(f"{loc}/orphan.bin", "wb") as f:
-        f.write(b"leftover")
-    dev2.load_hub(batch(range(10, 15)),
-                  process_time="2024-01-02 00:00:00", **kw)
-    assert spark.catalog.tableExists(t_dev)
-    assert dev2.read_current("c").count() == 15
-    for t in (t_dev, t_prod):
-        _drop_table(spark, t)
-
-
-def test_bucketed_mirror_fingerprint_rejects_stale_snapshot(spark, tmp_path):
-    """ADVICE r12 (medium): the drop-before-swap contract only covers
-    mirror-ENABLED writers. A plain loader over the same base (or any
-    external job rewriting the parquet path) updates the source of
-    truth without touching the mirror — the fingerprint stamped at
-    refresh and re-verified at read must then disqualify the mirror,
-    so read_current serves the path's data, never the stale
-    snapshot."""
-    from featurestore_spark.load import VaultLoader
-
-    base = str(tmp_path / "v")
-    kw = dict(table="h", entity_type="c", id_fields=["cust_id"],
-              id_type="customer")
-
-    def batch(ids):
-        return spark.createDataFrame([(str(i),) for i in ids], ["cust_id"])
-
-    bucketed = VaultLoader(spark, base, bucket_current=4)
-    mt = bucketed._mirror.table_for("h")
-    _drop_table(spark, mt)
-    bucketed.load_hub(batch(range(10)),
-                      process_time="2024-01-01 00:00:00", **kw)
-    # sanity: in-sync mirror serves (scan of the catalog table, not
-    # the parquet path)
-    plan = (
-        bucketed.read_current("h")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert mt in plan
-
-    # a PLAIN loader (no mirror knob) advances the path underneath
-    plain = VaultLoader(spark, base)
-    plain.load_hub(batch(range(10, 30)),
-                   process_time="2024-01-02 00:00:00", **kw)
-    # ...a fresh bucketed loader must NOT serve the 10-row mirror
-    reader = VaultLoader(spark, base, bucket_current=4)
-    assert reader.read_current("h").count() == 30
-    plan = (
-        reader.read_current("h")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert mt not in plan  # fell back to the path read
-    # ...and the SAME instance that wrote the mirror (warm _verified
-    # cache) re-checks the fingerprint on every read too
-    assert bucketed.read_current("h").count() == 30
-
-    # the next mirrored load re-stamps and the mirror serves again
-    bucketed.load_hub(batch(range(30, 35)),
-                      process_time="2024-01-03 00:00:00", **kw)
-    plan = (
-        reader.read_current("h")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert mt in plan
-    assert reader.read_current("h").count() == 35
-    _drop_table(spark, mt)
-
-
-def test_bucketed_mirror_location_is_loader_owned(spark, tmp_path):
-    """ADVICE r12 (low): the mirror's data lives under the loader's
-    own base ({base}/_mirror/<table>) as an external table — cleanup
-    targets a provably-owned path and works regardless of the current
-    database or warehouse layout."""
-    import os
-
-    from featurestore_spark.load import VaultLoader
-
-    base = str(tmp_path / "v2")
-    ldr = VaultLoader(spark, base, bucket_current=2)
-    mt = ldr._mirror.table_for("h")
-    _drop_table(spark, mt)
-    ldr.load_hub(
-        spark.createDataFrame([("1",), ("2",)], ["cust_id"]),
-        process_time="2024-01-01 00:00:00",
-        table="h", entity_type="c", id_fields=["cust_id"],
-        id_type="customer",
-    )
-    loc = ldr._mirror._location(mt)
-    assert loc.startswith(base)
-    assert os.path.isdir(loc) and any(
-        f.endswith(".parquet") for f in os.listdir(loc)
-    )
-    # drop() removes exactly that owned location
-    ldr._mirror.drop("h")
-    assert not os.path.exists(loc)
-    assert not spark.catalog.tableExists(mt)
-
-
-def test_fingerprint_sees_same_size_rewrite_with_inert_dir_mtime(
-    spark, tmp_path
-):
-    """ADVICE r13: on object stores the directory entry is synthetic
-    (mtime typically 0), so the old <dir-mtime>:<bytes> identity
-    degraded to byte-length alone — an external rewrite producing the
-    SAME byte count would still serve a stale mirror. The fingerprint
-    must fold in child-file mtimes (and count) so that scenario — dir
-    mtime and total bytes unchanged, file contents rewritten later —
-    changes the identity."""
-    import os
-
-    from featurestore_spark.io.fs import HadoopFS
-
-    fs = HadoopFS(spark)
-    d = tmp_path / "fp"
-    d.mkdir()
-    f = d / "part-0"
-    f.write_text("abcdefgh")
-    dir_mtime = os.stat(d).st_mtime
-    before = fs.fingerprint(str(d))
-    # external rewrite: same byte count, later file mtime, and the
-    # directory entry pinned back to its original stamp (the object
-    # store behavior: directory metadata carries no signal)
-    f.write_text("ABCDEFGH")
-    st = os.stat(f)
-    os.utime(f, (st.st_atime, st.st_mtime + 10))
-    os.utime(d, (dir_mtime, dir_mtime))
-    after = fs.fingerprint(str(d))
-    assert before is not None and after is not None
-    assert before.split(":")[1] == after.split(":")[1]  # same bytes
-    assert before != after  # ...but the identity still moved

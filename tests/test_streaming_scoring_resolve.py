@@ -1,6 +1,7 @@
 """Tests: streaming variants (cross-checked vs batch operators via a
 real micro-batch run), pandas-batch scoring, entity resolution."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from featurestore_spark.functions.dates import (
@@ -121,52 +122,37 @@ def test_connected_components_and_resolution(spark):
 
 
 def test_connected_components_exhaustion_warns_partial(spark):
-    """Contract check (VERDICT r3 #10): a chain graph with diameter >
-    max_iterations must fire the partial-labels warning, and the
-    returned labels must indeed be partial (the far end of the chain
-    has not yet received the minimum label)."""
-    import warnings as w
-
-    n = 12  # chain 0-1-2-...-12, diameter 12
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], ["src", "dst"]
-    )
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        comp = connected_components(edges, max_iterations=3)
-        labels = {r["id"]: r["component"] for r in comp.collect()}
-    assert any(
-        "max_iterations" in str(c.message) for c in caught
-    ), "exhaustion warning did not fire"
-    assert len(set(labels.values())) > 1, "labels unexpectedly converged"
-    # with enough rounds the same graph fully converges, no warning
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        comp = connected_components(edges, max_iterations=n + 1)
-        labels = {r["id"]: r["component"] for r in comp.collect()}
-    assert not any("max_iterations" in str(c.message) for c in caught)
-    assert set(labels.values()) == {0}
+    """Contract check (VERDICT r3 #10): a path graph whose diameter the
+    allowed rounds cannot reach must not come back with partial labels
+    (a 65-node path at max_iterations=2 would carry 63 of them) —
+    exhausting `max_iterations` raises. With enough rounds the same
+    graph converges to one label."""
+    for n, kw in (
+        (12, dict(max_iterations=3)),
+        (64, dict(max_iterations=2, shortcut_after=100)),
+    ):
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(n)], ["src", "dst"]
+        )
+        with pytest.raises(RuntimeError, match="max_iterations=") as exc:
+            connected_components(edges, **kw)
+        assert "partial" in str(exc.value)
+    edges = spark.createDataFrame([(i, i + 1) for i in range(12)], ["src", "dst"])
+    comp = connected_components(edges, max_iterations=13)
+    assert {r["component"] for r in comp.collect()} == {0}
 
 
 def test_connected_components_final_round_convergence_not_misreported(spark):
     """ADVICE r3: convergence landing exactly on the last allowed round
-    (with the change mid-probe-window) must NOT warn — the final probe
-    compares one-round delta, not delta-since-last-probe."""
-    import warnings as w
-
+    (with the change mid-probe-window) must NOT be reported as
+    exhaustion — the final probe compares one-round delta, not
+    delta-since-last-probe."""
     # chain 0-1-2-3: last label change happens in round 3, round 4 is
     # a no-op; old code probed round 4 against the round-0 baseline
-    # and falsely warned partial
+    # and falsely reported partial labels
     edges = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], ["src", "dst"])
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        comp = connected_components(
-            edges, max_iterations=4, probe_every=5
-        )
-        labels = {r["id"]: r["component"] for r in comp.collect()}
-    assert not any(
-        "max_iterations" in str(c.message) for c in caught
-    ), [str(c.message) for c in caught]
+    comp = connected_components(edges, max_iterations=4, probe_every=5)
+    labels = {r["id"]: r["component"] for r in comp.collect()}
     assert set(labels.values()) == {0}
 
 
@@ -176,23 +162,14 @@ def test_connected_components_shortcut_converges_deep_chain(spark):
     rounds and halves the remaining depth each round (round 5 measured
     on a 10^4 chain: 11s vs an extrapolated ~33min one-hop; PLANS.md).
     Pure one-hop propagation on the same graph must exhaust."""
-    import warnings as w
-
     n = 200
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["src", "dst"])
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        comp = connected_components(edges)  # defaults: 20 rounds, jump@5
-        labels = {r["id"]: r["component"] for r in comp.collect()}
-    assert not any("max_iterations" in str(c.message) for c in caught)
+    comp = connected_components(edges)  # defaults: 20 rounds, jump@5
+    labels = {r["id"]: r["component"] for r in comp.collect()}
     assert set(labels.values()) == {0} and len(labels) == n
     # disabling the shortcut restores pure one-hop: 20 rounds < 199 hops
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        partial = connected_components(edges, shortcut_after=10**9)
-        plabels = {r["id"]: r["component"] for r in partial.collect()}
-    assert any("max_iterations" in str(c.message) for c in caught)
-    assert len(set(plabels.values())) > 1
+    with pytest.raises(RuntimeError, match="max_iterations"):
+        connected_components(edges, shortcut_after=10**9)
 
 
 def test_connected_components_shortcut_equals_one_hop(spark):

@@ -381,6 +381,10 @@ def test_table_vault_loader_managed_tables(spark):
     )
     assert res4.updates == 10
     assert spark.table("default.tv_sat2_changed").count() == 10
+    # catalog tables have no file listing to compact: refused, not a
+    # silent 0-file no-op that leaves every appended history file
+    with _pytest.raises(NotImplementedError, match="catalog tables"):
+        tv.compact_history("tv_sat", target_files=1)
 
 
 def test_satellite_delete_then_resurrect(spark, loader):
