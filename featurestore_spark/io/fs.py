@@ -36,6 +36,13 @@ class HadoopFS:
         _, jdst = self._fs_path(dst)
         fs.rename(jsrc, jdst)
 
+    def replace(self, src: str, dst: str) -> None:
+        """Move `src` onto `dst`, dropping whatever `dst` held: the
+        swap step of write-new-then-swap. A crash while `src` is being
+        written leaves `dst` untouched."""
+        self.delete(dst)
+        self.rename(src, dst)
+
     def write_text(self, path: str, text: str) -> None:
         """Create/overwrite a small text file (meta.json / proc.csv
         sidecars)."""

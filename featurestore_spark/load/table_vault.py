@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, DataFrameWriter
 
 from featurestore_spark.load.vault import LoadResult, VaultLoader
 
@@ -52,15 +52,18 @@ class TableVaultLoader(VaultLoader):
     def read_history(self, table: str) -> DataFrame:
         return self.spark.table(self._tbl(table, "history"))
 
+    def _replace_table(self, writer: DataFrameWriter, name: str) -> None:
+        # Stage-then-rename: a replacing plan may read the table it
+        # replaces (new current reads old current), so it must be fully
+        # materialized (into the staging table) before the old one is
+        # dropped.
+        staged = f"{name}_staging"
+        writer.mode("overwrite").saveAsTable(staged)
+        self.spark.sql(f"DROP TABLE IF EXISTS {name}")
+        self.spark.sql(f"ALTER TABLE {staged} RENAME TO {name}")
+
     def _write_current(self, df: DataFrame, table: str) -> None:
-        # Stage-then-rename: the new-current plan reads the old current
-        # table, so it must be fully materialized (into the staging
-        # table) before the old one is dropped.
-        staged = self._tbl(table, "current_staging")
-        df.write.mode("overwrite").saveAsTable(staged)
-        out = self._tbl(table, "current")
-        self.spark.sql(f"DROP TABLE IF EXISTS {out}")
-        self.spark.sql(f"ALTER TABLE {staged} RENAME TO {out}")
+        self._replace_table(df.write, self._tbl(table, "current"))
 
     def _append_history(self, df: DataFrame, table: str, partition_by=None) -> None:
         name = self._tbl(table, "history")
@@ -108,11 +111,7 @@ class TableVaultLoader(VaultLoader):
         return self.spark.table(prev)
 
     def _overwrite_history(self, df: DataFrame, table: str) -> None:
-        staged = self._tbl(table, "history_staging")
-        df.write.mode("overwrite").saveAsTable(staged)
-        out = self._tbl(table, "history")
-        self.spark.sql(f"DROP TABLE IF EXISTS {out}")
-        self.spark.sql(f"ALTER TABLE {staged} RENAME TO {out}")
+        self._replace_table(df.write, self._tbl(table, "history"))
 
     def compact_history(self, table: str, **kwargs) -> dict:
         raise NotImplementedError(
@@ -131,8 +130,6 @@ class TableVaultLoader(VaultLoader):
 
         cutoff = date.today() - timedelta(days=retention_days)
         for leaf, df in (("new", inserts), ("changed", updates), ("removed", deletes)):
-            if df is None:
-                continue
             name = self._tbl(table, leaf)
             df.write.mode("append").partitionBy(self.m.process_date).saveAsTable(name)
             # Retention pruning: staged rewrite of the recent window
@@ -148,14 +145,4 @@ class TableVaultLoader(VaultLoader):
                     F.col(self.m.process_date)
                     >= F.lit(cutoff.isoformat()).cast("date")
                 )
-                staged = self._tbl(table, f"{leaf}_staging")
-                kept.write.mode("overwrite").partitionBy(
-                    self.m.process_date
-                ).saveAsTable(staged)
-                self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-                self.spark.sql(f"ALTER TABLE {staged} RENAME TO {name}")
-
-    def _fs_exists(self, path: str) -> bool:  # pragma: no cover - guard
-        raise NotImplementedError(
-            "TableVaultLoader stores in the catalog; FS paths unused"
-        )
+                self._replace_table(kept.write.partitionBy(self.m.process_date), name)

@@ -1,7 +1,14 @@
 """Data Vault 2.0 incremental loaders (hub / satellite / link / mapping).
 
 Rebuilds diamond/load/ParquetDataLoader.scala (M1–M5 in SURVEY.md §2.8)
-as modern DataFrame dataflows:
+as modern DataFrame dataflows. Every load runs ONE merge, `_merge`:
+`load_hub`, `load_satellite`, `load_link` and `load_mapping` only build
+the keyed frame they store, and the merge classifies it against the
+live current rows, continues the version chain, writes tombstones,
+appends the delta to history and rebuilds current. Duplicates are
+dropped from the keyed frame (the satellite: from its input, whose
+columns it all stores), so input rows that differ only in a column a
+hub or link does not store are one stored row.
 
 - MD5 `entity_id` from (id_type ++ natural key) — `hash_key` built-in
   (ParquetDataLoader.scala:304).
@@ -91,32 +98,37 @@ def classify_upserts(
     incoming: DataFrame,
     current: DataFrame,
     *,
-    key_col: str = META.entity_id,
+    key_col: str | list[str] = META.entity_id,
     hash_col: str = META.hashed_value,
     version_col: str = META.version,
     rectype_col: str = META.rectype,
     rectype: Rectype = RECTYPE,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame | None]:
     """Split `incoming` into (inserts, updates) against `current`.
 
     The core of M2 change classification (ParquetDataLoader.scala:
     340-456): inserts = keys absent from current (J1, left_anti);
     updates = keys present with a different row fingerprint (J3),
     version = current version + 1. Shuffles once on the MD5 key —
-    uniform by construction, no skew.
+    uniform by construction, no skew. `key_col` is one column or a
+    list (a link's (src, dst) pair). Rows without a `hash_col`
+    fingerprint (hubs, links) cannot change, so updates is None.
     """
+    keys = [key_col] if isinstance(key_col, str) else list(key_col)
     inserts = (
-        incoming.join(current.select(key_col), key_col, "left_anti")
+        incoming.join(current.select(*keys), keys, "left_anti")
         .withColumn(rectype_col, F.lit(rectype.insert))
         .withColumn(version_col, F.lit(1))
     )
+    if hash_col not in incoming.columns:
+        return inserts, None
     cur_keyhash = current.select(
-        key_col,
+        *keys,
         F.col(hash_col).alias("_cur_hash"),
         F.col(version_col).alias("_cur_version"),
     )
     updates = (
-        incoming.join(cur_keyhash, key_col, "inner")
+        incoming.join(cur_keyhash, keys, "inner")
         .where(F.col(hash_col) != F.col("_cur_hash"))
         .withColumn(rectype_col, F.lit(rectype.update))
         .withColumn(version_col, F.col("_cur_version") + 1)
@@ -146,6 +158,7 @@ class VaultLoader:
         self.fp_method = fingerprint_method
         self.open_end = open_end
         self.collect_counts = collect_counts
+        self._fs = HadoopFS(spark)
 
     # -- storage helpers ----------------------------------------------------
     #
@@ -159,21 +172,8 @@ class VaultLoader:
     def _path(self, table: str, leaf: str) -> str:
         return f"{self._dir(table)}/{leaf}"
 
-    @property
-    def _fs(self) -> HadoopFS:
-        return HadoopFS(self.spark)
-
-    def _fs_exists(self, path: str) -> bool:
-        return self._fs.exists(path)
-
-    def _fs_delete(self, path: str) -> None:
-        self._fs.delete(path)
-
-    def _fs_rename(self, src: str, dst: str) -> None:
-        self._fs.rename(src, dst)
-
     def _exists(self, table: str) -> bool:
-        return self._fs_exists(self._path(table, CURRENT_FILE))
+        return self._fs.exists(self._path(table, CURRENT_FILE))
 
     def read_current(self, table: str) -> DataFrame:
         """The table's current snapshot. The read infers its schema
@@ -194,10 +194,7 @@ class VaultLoader:
         # staging keeps a crash from destroying `current`.
         tmp = self._path(table, CURRENT_FILE + ".tmp")
         df.write.mode("overwrite").parquet(tmp)
-        final = self._path(table, CURRENT_FILE)
-        if self._fs_exists(final):
-            self._fs_delete(final)
-        self._fs_rename(tmp, final)
+        self._fs.replace(tmp, self._path(table, CURRENT_FILE))
 
     def _append_history(self, df: DataFrame, table: str, partition_by=None) -> None:
         writer = df.write.mode("append")
@@ -227,9 +224,7 @@ class VaultLoader:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
-        final = self._path(table, HISTORY_FILE)
-        self._fs_delete(final)
-        self._fs_rename(tmp, final)
+        self._fs.replace(tmp, self._path(table, HISTORY_FILE))
 
     def compact_history(
         self,
@@ -311,8 +306,9 @@ class VaultLoader:
 
     # -- shared column builders --------------------------------------------
 
-    def _meta_cols(self, process: ProcessInfo, process_time: str) -> list[Column]:
+    def _meta_cols(self, process: ProcessInfo | None, process_time: str) -> list[Column]:
         m = self.m
+        process = process or ProcessInfo()
         return [
             F.lit(process_time).cast("timestamp").alias(m.start_time),
             F.lit(self.open_end).cast("timestamp").alias(m.end_time),
@@ -326,14 +322,23 @@ class VaultLoader:
     def _prepare(
         df: DataFrame, projection: list[str] | None, new_names: dict[str, str] | None
     ) -> DataFrame:
-        """Optional projection + rename + dedup (P1–P3,
-        ParquetDataLoader.scala:292-300)."""
+        """Optional projection + rename (P1–P2,
+        ParquetDataLoader.scala:292-300); each load dedups (P3) itself."""
         out = df
         if projection:
             out = out.select(*projection)
         if new_names:
             out = out.withColumnsRenamed(new_names)
-        return out.distinct()
+        return out
+
+    @staticmethod
+    def _delete_flag(delete_indicator: tuple[str, object] | None) -> list[Column]:
+        """The boolean `_is_delete` column `_merge` splits flagged
+        deletes on, or none without a delete indicator."""
+        if delete_indicator is None:
+            return []
+        col_name, del_value = delete_indicator
+        return [(F.col(col_name) == F.lit(del_value)).alias("_is_delete")]
 
     def _resurrect(self, inserts: DataFrame, cur: DataFrame, keys: list[str]) -> DataFrame:
         """Continue the version chain for re-inserted (resurrected) keys.
@@ -390,12 +395,6 @@ class VaultLoader:
 
     # -- process log / meta sidecar (S16/S17) ------------------------------
 
-    def _fs_write_text(self, path: str, text: str) -> None:
-        self._fs.write_text(path, text)
-
-    def _fs_read_text(self, path: str) -> str | None:
-        return self._fs.read_text(path)
-
     def _write_process_log(self, table: str, result: LoadResult) -> None:
         """Append one summary row to proc.csv (read-old + rewrite —
         the reference's read-union-overwrite protocol,
@@ -403,17 +402,17 @@ class VaultLoader:
         if not self.collect_counts:
             return
         path = self._path(table, PROC_FILE)
-        existing = self._fs_read_text(path)
+        existing = self._fs.read_text(path)
         if existing is None:
             existing = "process_time,table,read_count,duplicates,inserts,updates,deletes\n"
         line = (
             f"{result.process_time},{result.table},{result.read_count},"
             f"{result.duplicates},{result.inserts},{result.updates},{result.deletes}\n"
         )
-        self._fs_write_text(path, existing + line)
+        self._fs.write_text(path, existing + line)
 
     def _write_meta(self, table: str, params: dict) -> None:
-        self._fs_write_text(
+        self._fs.write_text(
             self._path(table, META_FILE), json.dumps(params, indent=2, default=str)
         )
 
@@ -424,8 +423,6 @@ class VaultLoader:
         retention_days: int = 3,
     ) -> None:
         for leaf, df in (("new", inserts), ("changed", updates), ("removed", deletes)):
-            if df is None:
-                continue
             path = self._path(table, f"{leaf}.parquet")
             df.write.mode("append").partitionBy(self.m.process_date).parquet(path)
             self._prune_partitions(path, retention_days)
@@ -437,18 +434,136 @@ class VaultLoader:
         from datetime import date, timedelta
 
         cutoff = date.today() - timedelta(days=retention_days)
-        fs, jpath = self._fs._fs_path(path)
-        if not fs.exists(jpath):
-            return
-        for status in fs.listStatus(jpath):
-            name = status.getPath().getName()
+        for name in self._fs.list_names(path):
             if "=" in name:
                 try:
                     d = date.fromisoformat(name.split("=", 1)[1])
                 except ValueError:
                     continue
                 if d < cutoff:
-                    fs.delete(status.getPath(), True)
+                    self._fs.delete(f"{path}/{name}")
+
+    # -- the merge (M1-M4) --------------------------------------------------
+
+    def _merge(
+        self,
+        df: DataFrame,
+        keyed: DataFrame,
+        *,
+        table: str,
+        keys: list[str],
+        process_time: str,
+        meta: dict,
+        scope: Column | None = None,
+        partition_by: str | None = None,
+        full_refresh: bool = False,
+        overwrite: bool = False,
+        write_change_tables: bool = False,
+    ) -> LoadResult:
+        """Merge `keyed`, the deduplicated stored rows built from the raw
+        input `df`, into `table`: the one dataflow behind every load.
+
+        The data picks the branches: `keyed` rows carrying
+        `hashed_value` (satellites) can classify as updates, and a
+        boolean `_is_delete` column (a delete indicator) splits off
+        flagged deletes. Classification runs against the live current
+        rows within `scope` (the hub's id_type slice), but current is
+        rebuilt from the FULL previous current so rows outside the
+        scope survive.
+        """
+        m, rt = self.m, self.rt
+        read_count = self._count(df)
+        dedup_count = self._count(keyed)
+        result = LoadResult(
+            table=table,
+            read_count=read_count,
+            duplicates=(read_count - dedup_count) if self.collect_counts else -1,
+            process_time=process_time,
+        )
+        flagged = None
+        if "_is_delete" in keyed.columns:
+            flagged = keyed.where(F.col("_is_delete")).drop("_is_delete")
+            keyed = keyed.where(~F.col("_is_delete")).drop("_is_delete")
+
+        if not self._exists(table):
+            new_rows = keyed.withColumn(m.rectype, F.lit(rt.insert)).withColumn(
+                m.version, F.lit(1)
+            )
+            self._append_history(new_rows, table, partition_by)
+            self._write_current(new_rows, table)
+            result.inserts = self._count(new_rows)
+        else:
+            cur_all = self.read_current(table)
+            cur = cur_all if scope is None else cur_all.where(scope)
+            # J1 + J3 classification (shared with the oracle-checked
+            # query) against LIVE current only (rectype <> 'D',
+            # ParquetDataLoader.scala:343-345): a deleted entity
+            # re-appearing with identical values must re-insert, not
+            # fingerprint-match the tombstone and vanish.
+            live = cur.where(F.col(m.rectype) != rt.delete)
+            inserts, updates = classify_upserts(
+                keyed,
+                live,
+                key_col=keys,
+                hash_col=m.hashed_value,
+                version_col=m.version,
+                rectype_col=m.rectype,
+                rectype=rt,
+            )
+            delta = self._resurrect(inserts, cur, keys)
+            if updates is not None:
+                delta = delta.unionByName(updates)
+            # J2 / delete-indicator: flagged or vanished keys → rectype D
+            gone = None
+            if flagged is not None:
+                gone = live.join(flagged.select(*keys), keys, "inner")
+            elif full_refresh:
+                gone = live.join(keyed.select(*keys), keys, "left_anti")
+            if gone is not None:
+                delta = delta.unionByName(self._tombstones(gone, process_time))
+            delta = delta.cache()
+            counts = self._delta_counts(delta)  # materializes the cache
+            result.inserts = counts.get(rt.insert, 0)
+            result.updates = counts.get(rt.update, 0)
+            result.deletes = counts.get(rt.delete, 0)
+
+            if overwrite:
+                # End-date the previous row-version of changed/deleted
+                # keys: carry forward untouched history (J11 left_anti on
+                # (keys, version)), rewrite affected rows with
+                # end_time = new start_time. prev snapshot escape hatch
+                # first.
+                prev = self._snapshot_history_to_prev(table)
+                affected = delta.where(F.col(m.rectype) != rt.insert).select(
+                    *keys, (F.col(m.version) - 1).alias(m.version)
+                )
+                on = [*keys, m.version]
+                end_dated = prev.join(affected, on, "inner").withColumn(
+                    m.end_time, F.lit(process_time).cast("timestamp")
+                )
+                untouched = prev.join(affected, on, "left_anti")
+                self._overwrite_history(
+                    untouched.unionByName(end_dated).unionByName(delta), table
+                )
+            else:
+                self._append_history(delta, table, partition_by)
+            if write_change_tables:
+                # Slices of the cached delta — safe to write at any point.
+                self._write_change_tables(
+                    table,
+                    *(
+                        delta.where(F.col(m.rectype) == r)
+                        for r in (rt.insert, rt.update, rt.delete)
+                    ),
+                )
+            self._write_current(
+                latest_per_key(cur_all.unionByName(delta), keys, [m.version]), table
+            )
+            delta.unpersist()
+
+        self._write_process_log(table, result)
+        self._write_meta(table, meta)
+        return result
 
     # -- hub (M1) -----------------------------------------------------------
 
@@ -521,20 +636,9 @@ class VaultLoader:
         registered into the same hub (CustomerMappingSpec.scala:20-87)
         — keep a uniform schema across loads.
         """
-        m, rt = self.m, self.rt
-        process = process or ProcessInfo()
+        m = self.m
         process_time = process_time or _now_str()
-        read_count = self._count(df)
-
-        inp = self._prepare(df, projection, new_names)
-        dedup_count = self._count(inp)
-
-        delete_flag = None
-        if delete_indicator is not None:
-            col_name, del_value = delete_indicator
-            delete_flag = F.col(col_name) == F.lit(del_value)
-
-        keyed = inp.select(
+        keyed = self._prepare(df, projection, new_names).select(
             hash_key(F.lit(id_type), *id_fields).alias(m.entity_id),
             F.lit(entity_type).alias(m.entity_type),
             F.lit(id_type).alias(m.id_type),
@@ -542,78 +646,15 @@ class VaultLoader:
                 natural_key_col
             ),
             *self._meta_cols(process, process_time),
-            *( [delete_flag.alias("_is_delete")] if delete_flag is not None else [] ),
+            *self._delete_flag(delete_indicator),
         )
-
-        result = LoadResult(
+        return self._merge(
+            df,
+            keyed.distinct(),
             table=table,
-            read_count=read_count,
-            duplicates=(read_count - dedup_count) if self.collect_counts else -1,
+            keys=[m.entity_id],
             process_time=process_time,
-        )
-
-        if not self._exists(table):
-            new_rows = keyed
-            if delete_flag is not None:
-                new_rows = new_rows.where(~F.col("_is_delete")).drop("_is_delete")
-            new_rows = new_rows.withColumn(m.rectype, F.lit(rt.insert)).withColumn(
-                m.version, F.lit(1)
-            )
-            self._append_history(new_rows, table, partition_by=m.id_type)
-            self._write_current(new_rows, table)
-            result.inserts = self._count(new_rows)
-        else:
-            # Classify against this id_type's slice, but rebuild current
-            # from the FULL previous current so other id_types survive.
-            cur_all = self.read_current(table)
-            cur = cur_all.where(F.col(m.id_type) == id_type)
-            incoming = keyed
-            if delete_flag is not None:
-                flagged_deletes = incoming.where(F.col("_is_delete")).drop("_is_delete")
-                incoming = incoming.where(~F.col("_is_delete")).drop("_is_delete")
-            else:
-                flagged_deletes = None
-
-            live_keys = cur.where(F.col(m.rectype) != rt.delete).select(m.entity_id)
-            inserts = (
-                incoming.join(live_keys, m.entity_id, "left_anti")
-                .withColumn(m.rectype, F.lit(rt.insert))
-                .withColumn(m.version, F.lit(1))
-            )
-            inserts = self._resurrect(inserts, cur, [m.entity_id])
-
-            deletes = None
-            delete_src = None
-            if flagged_deletes is not None:
-                delete_src = flagged_deletes.select(m.entity_id)
-            elif full_refresh:
-                delete_src = cur.where(F.col(m.rectype) != rt.delete).join(
-                    incoming.select(m.entity_id), m.entity_id, "left_anti"
-                ).select(m.entity_id)
-            if delete_src is not None:
-                deletes = self._tombstones(
-                    cur.where(F.col(m.rectype) != rt.delete).join(
-                        delete_src, m.entity_id, "inner"
-                    ),
-                    process_time,
-                )
-
-            delta = inserts if deletes is None else inserts.unionByName(deletes)
-            delta = delta.cache()
-            self._append_history(delta, table, partition_by=m.id_type)
-            counts = self._delta_counts(delta)
-            result.inserts = counts.get(rt.insert, 0)
-            result.deletes = counts.get(rt.delete, 0)
-            new_current = latest_per_key(
-                cur_all.unionByName(delta), [m.entity_id], [m.version]
-            )
-            self._write_current(new_current, table)
-            delta.unpersist()
-
-        self._write_process_log(table, result)
-        self._write_meta(
-            table,
-            {
+            meta={
                 "table": table,
                 "entity_type": entity_type,
                 "id_type": id_type,
@@ -621,8 +662,10 @@ class VaultLoader:
                 "process_time": process_time,
                 "full_refresh": full_refresh,
             },
+            scope=F.col(m.id_type) == id_type,
+            partition_by=m.id_type,
+            full_refresh=full_refresh,
         )
-        return result
 
     # -- satellite (M2) -----------------------------------------------------
 
@@ -651,145 +694,28 @@ class VaultLoader:
         ParquetDataLoader.scala:302,519-521). `hashed_value` over those
         columns drives update detection.
         """
-        m, rt = self.m, self.rt
-        process = process or ProcessInfo()
+        m = self.m
         process_time = process_time or _now_str()
-        read_count = self._count(df)
-
-        inp = self._prepare(df, projection, new_names)
-        dedup_count = self._count(inp)
-
-        delete_flag = None
-        if delete_indicator is not None:
-            col_name, del_value = delete_indicator
-            delete_flag = F.col(col_name) == F.lit(del_value)
-
-        value_cols = [
-            c
-            for c in inp.columns
-            if c not in id_fields and (delete_indicator is None or c != delete_indicator[0])
-        ]
-        enriched = inp.select(
+        # A satellite stores every input column but the delete indicator
+        # (the id fields as entity_id), so it dedups the narrower raw
+        # rows rather than the keyed frame.
+        inp = self._prepare(df, projection, new_names).distinct()
+        flag_col = delete_indicator[0] if delete_indicator else None
+        value_cols = [c for c in inp.columns if c not in id_fields and c != flag_col]
+        keyed = inp.select(
             hash_key(F.lit(id_type), *id_fields).alias(m.entity_id),
             *[F.col(c) for c in value_cols],
             fingerprint(value_cols, self.fp_method).alias(m.hashed_value),
             *self._meta_cols(process, process_time),
-            *( [delete_flag.alias("_is_delete")] if delete_flag is not None else [] ),
+            *self._delete_flag(delete_indicator),
         )
-
-        result = LoadResult(
+        return self._merge(
+            df,
+            keyed,
             table=table,
-            read_count=read_count,
-            duplicates=(read_count - dedup_count) if self.collect_counts else -1,
+            keys=[m.entity_id],
             process_time=process_time,
-        )
-
-        if not self._exists(table):
-            new_rows = enriched
-            if delete_flag is not None:
-                new_rows = new_rows.where(~F.col("_is_delete")).drop("_is_delete")
-            new_rows = new_rows.withColumn(m.rectype, F.lit(rt.insert)).withColumn(
-                m.version, F.lit(1)
-            )
-            self._append_history(new_rows, table)
-            self._write_current(new_rows, table)
-            result.inserts = self._count(new_rows)
-            self._write_process_log(table, result)
-            self._write_meta(table, {"table": table, "process_time": process_time})
-            return result
-
-        cur = self.read_current(table)
-        incoming = enriched
-        flagged_deletes = None
-        if delete_flag is not None:
-            flagged_deletes = incoming.where(F.col("_is_delete")).drop("_is_delete")
-            incoming = incoming.where(~F.col("_is_delete")).drop("_is_delete")
-
-        # J1 + J3 classification (shared with the oracle-checked query).
-        # Classify against LIVE current only (rectype <> 'D',
-        # ParquetDataLoader.scala:343-345): a deleted entity re-appearing
-        # with identical values must re-insert, not fingerprint-match the
-        # tombstone and vanish.
-        inserts, updates = classify_upserts(
-            incoming,
-            cur.where(F.col(m.rectype) != rt.delete),
-            key_col=m.entity_id,
-            hash_col=m.hashed_value,
-            version_col=m.version,
-            rectype_col=m.rectype,
-            rectype=rt,
-        )
-        inserts = self._resurrect(inserts, cur, [m.entity_id])
-
-        # J2 / delete-indicator: vanished or flagged keys → rectype D
-        deletes = None
-        delete_src = None
-        if flagged_deletes is not None:
-            delete_src = flagged_deletes.select(m.entity_id)
-        elif full_refresh:
-            delete_src = cur.where(F.col(m.rectype) != rt.delete).join(
-                incoming.select(m.entity_id), m.entity_id, "left_anti"
-            ).select(m.entity_id)
-        if delete_src is not None:
-            deletes = self._tombstones(
-                cur.where(F.col(m.rectype) != rt.delete).join(
-                    delete_src, m.entity_id, "inner"
-                ),
-                process_time,
-            )
-
-        delta = inserts.unionByName(updates)
-        if deletes is not None:
-            delta = delta.unionByName(deletes)
-        delta = delta.cache()
-        counts = self._delta_counts(delta)  # materializes the cache
-        result.inserts = counts.get(rt.insert, 0)
-        result.updates = counts.get(rt.update, 0)
-        result.deletes = counts.get(rt.delete, 0)
-
-        if overwrite:
-            # End-date the previous row-version of changed/deleted
-            # entities: carry forward untouched history (J11 left_anti on
-            # (entity_id, version)), rewrite affected rows with
-            # end_time = new start_time. prev snapshot escape hatch first.
-            prev = self._snapshot_history_to_prev(table)
-            affected = delta.where(F.col(m.rectype) != rt.insert).select(
-                F.col(m.entity_id).alias("_e"), (F.col(m.version) - 1).alias("_v")
-            )
-            end_dated = (
-                prev.join(
-                    affected,
-                    (F.col(m.entity_id) == F.col("_e")) & (F.col(m.version) == F.col("_v")),
-                    "inner",
-                )
-                .drop("_e", "_v")
-                .withColumn(m.end_time, F.lit(process_time).cast("timestamp"))
-            )
-            untouched = prev.join(
-                affected,
-                (F.col(m.entity_id) == F.col("_e")) & (F.col(m.version) == F.col("_v")),
-                "left_anti",
-            )
-            new_history = untouched.unionByName(end_dated).unionByName(delta)
-            self._overwrite_history(new_history, table)
-        else:
-            self._append_history(delta, table)
-
-        if write_change_tables:
-            # Slices of the cached delta — safe to write at any point.
-            self._write_change_tables(
-                table,
-                delta.where(F.col(m.rectype) == rt.insert),
-                delta.where(F.col(m.rectype) == rt.update),
-                delta.where(F.col(m.rectype) == rt.delete),
-            )
-        new_current = latest_per_key(cur.unionByName(delta), [m.entity_id], [m.version])
-        self._write_current(new_current, table)
-        delta.unpersist()
-        self._write_process_log(table, result)
-        self._write_meta(
-            table,
-            {
+            meta={
                 "table": table,
                 "entity_type": entity_type,
                 "id_type": id_type,
@@ -798,8 +724,10 @@ class VaultLoader:
                 "overwrite": overwrite,
                 "full_refresh": full_refresh,
             },
+            full_refresh=full_refresh,
+            overwrite=overwrite,
+            write_change_tables=write_change_tables,
         )
-        return result
 
     # -- link (M3) / mapping (M4) ------------------------------------------
 
@@ -818,16 +746,11 @@ class VaultLoader:
         process_time: str | None,
         full_refresh: bool,
     ) -> LoadResult:
-        """Shared M3/M4 dataflow: hashed (src, dst) pair registry with
+        """Shared M3/M4 keying: hashed (src, dst) pair registry with
         versioning (ParquetDataLoader.scala:555-975)."""
-        m, rt = self.m, self.rt
-        process = process or ProcessInfo()
+        m = self.m
         process_time = process_time or _now_str()
-        read_count = self._count(df)
-        inp = df.distinct()
-        dedup_count = self._count(inp)
-
-        keyed = inp.select(
+        keyed = df.select(
             hash_key(F.lit(src_id_type), *src_fields).alias(m.src_entity_id),
             hash_key(F.lit(dst_id_type), *dst_fields).alias(m.dst_entity_id),
             F.lit(entity_type).alias(m.entity_type),
@@ -836,52 +759,24 @@ class VaultLoader:
             *[F.col(c) for c in extra_cols],
             *self._meta_cols(process, process_time),
         )
-        pair = [m.src_entity_id, m.dst_entity_id]
-
-        result = LoadResult(
+        return self._merge(
+            df,
+            keyed.distinct(),
             table=table,
-            read_count=read_count,
-            duplicates=(read_count - dedup_count) if self.collect_counts else -1,
+            keys=[m.src_entity_id, m.dst_entity_id],
             process_time=process_time,
+            meta={
+                "table": table,
+                "entity_type": entity_type,
+                "src_id_type": src_id_type,
+                "src_fields": src_fields,
+                "dst_id_type": dst_id_type,
+                "dst_fields": dst_fields,
+                "process_time": process_time,
+                "full_refresh": full_refresh,
+            },
+            full_refresh=full_refresh,
         )
-
-        if not self._exists(table):
-            new_rows = keyed.withColumn(m.rectype, F.lit(rt.insert)).withColumn(
-                m.version, F.lit(1)
-            )
-            self._append_history(new_rows, table)
-            self._write_current(new_rows, table)
-            result.inserts = self._count(new_rows)
-        else:
-            cur = self.read_current(table)
-            live_pairs = cur.where(F.col(m.rectype) != rt.delete).select(*pair)
-            inserts = (
-                keyed.join(live_pairs, pair, "left_anti")
-                .withColumn(m.rectype, F.lit(rt.insert))
-                .withColumn(m.version, F.lit(1))
-            )
-            inserts = self._resurrect(inserts, cur, pair)
-            deletes = None
-            if full_refresh:
-                deletes = self._tombstones(
-                    cur.where(F.col(m.rectype) != rt.delete).join(
-                        keyed.select(*pair), pair, "left_anti"
-                    ),
-                    process_time,
-                )
-            delta = inserts if deletes is None else inserts.unionByName(deletes)
-            delta = delta.cache()
-            self._append_history(delta, table)
-            counts = self._delta_counts(delta)
-            result.inserts = counts.get(rt.insert, 0)
-            result.deletes = counts.get(rt.delete, 0)
-            new_current = latest_per_key(cur.unionByName(delta), pair, [m.version])
-            self._write_current(new_current, table)
-            delta.unpersist()
-
-        self._write_process_log(table, result)
-        self._write_meta(table, {"table": table, "process_time": process_time})
-        return result
 
     def load_link(
         self,
@@ -973,16 +868,13 @@ class VaultLoader:
         """Run hubs → satellites → links → mappings from a plain config
         dict (DataLoader.scala:98-151, conf.scala:87-119)."""
         results: dict[str, LoadResult] = {}
-        for spec in config.get("hubs", []):
-            kwargs = {k: v for k, v in spec.items() if k != "source"}
-            results[spec["table"]] = self.load_hub(sources[spec["source"]], **kwargs)
-        for spec in config.get("satellites", []):
-            kwargs = {k: v for k, v in spec.items() if k != "source"}
-            results[spec["table"]] = self.load_satellite(sources[spec["source"]], **kwargs)
-        for spec in config.get("links", []):
-            kwargs = {k: v for k, v in spec.items() if k != "source"}
-            results[spec["table"]] = self.load_link(sources[spec["source"]], **kwargs)
-        for spec in config.get("mappings", []):
-            kwargs = {k: v for k, v in spec.items() if k != "source"}
-            results[spec["table"]] = self.load_mapping(sources[spec["source"]], **kwargs)
+        for section, load in (
+            ("hubs", self.load_hub),
+            ("satellites", self.load_satellite),
+            ("links", self.load_link),
+            ("mappings", self.load_mapping),
+        ):
+            for spec in config.get(section, []):
+                kwargs = {k: v for k, v in spec.items() if k != "source"}
+                results[spec["table"]] = load(sources[spec["source"]], **kwargs)
         return results

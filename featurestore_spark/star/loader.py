@@ -221,8 +221,7 @@ class StarLoader:
         # mid-write can't destroy the previous dim.
         tmp = dim_path + ".tmp"
         merged.write.mode("overwrite").format(self.fmt).save(tmp)
-        self.fs.delete(dim_path)
-        self.fs.rename(tmp, dim_path)
+        self.fs.replace(tmp, dim_path)
         return self.read_dim(spec.name)
 
     @staticmethod

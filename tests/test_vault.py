@@ -4,6 +4,7 @@ LoadHubParquetSpec / LoadSatelliteParquetSpec / Overwrite variants
 current snapshot, end-dating)."""
 
 import hashlib
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -159,7 +160,7 @@ def test_satellite_full_delta_update_sequence(spark, loader):
     assert cur.where((F.col("version") == 1) & (F.col("rectype") == "I")).count() == 100
     # proc.csv accumulated one clean line per load (S16; the r1
     # Hadoop-FS read returned NUL bytes, corrupting the append)
-    proc = loader._fs_read_text(loader._path("cust_sat", "proc.csv"))
+    proc = loader._fs.read_text(loader._path("cust_sat", "proc.csv"))
     lines = proc.strip().split("\n")
     assert lines[0].startswith("process_time,") and len(lines) == 4
     assert "\x00" not in proc
@@ -535,3 +536,172 @@ def test_compact_history_read_equivalence_and_file_counts(spark, loader):
     noop = loader.compact_history("cs", target_files=1_000_000)
     assert noop["files_before"] == noop["files_after"]
     assert noop["rows"] is None
+
+
+def test_hub_and_link_store_one_row_per_key(spark, loader):
+    """Input rows that share a key but differ in a column the hub or
+    link does not store are one stored row: the dedup runs on the
+    keyed frame, and `duplicates` counts what it removed."""
+    hub = dict(table="dup_hub", entity_type="c", id_fields=["k"], id_type="customer")
+    rows = spark.createDataFrame([("a", "x"), ("a", "y"), ("b", "z")], ["k", "name"])
+    res = loader.load_hub(rows, process_time=T0, **hub)
+    assert (res.read_count, res.duplicates, res.inserts) == (3, 1, 2)
+    assert loader.read_history("dup_hub").count() == 2
+    cur = loader.read_current("dup_hub")
+    assert cur.count() == 2 and cur.select("entity_id").distinct().count() == 2
+
+    flagged = spark.createDataFrame(
+        [("a", "x", "D"), ("a", "y", "D")], ["k", "name", "op"]
+    )
+    res = loader.load_hub(
+        flagged, process_time=T1, delete_indicator=("op", "D"), **hub
+    )
+    assert (res.duplicates, res.deletes) == (1, 1)
+    hist = loader.read_history("dup_hub")
+    assert hist.where("version = 2").count() == 1
+    assert hist.groupBy("entity_id", "version").count().where("count > 1").count() == 0
+
+    link = dict(
+        table="dup_link", src_fields=["c"], src_id_type="customer",
+        dst_fields=["o"], dst_id_type="order",
+    )
+    pairs = spark.createDataFrame(
+        [("c1", "o1", 5.0), ("c1", "o1", 7.0), ("c2", "o2", 1.0)], ["c", "o", "amount"]
+    )
+    res = loader.load_link(pairs, process_time=T0, **link)
+    assert (res.read_count, res.duplicates, res.inserts) == (3, 1, 2)
+    for df in (loader.read_current("dup_link"), loader.read_history("dup_link")):
+        assert df.count() == 2
+        assert df.select("src_entity_id", "dst_entity_id").distinct().count() == 2
+
+
+def test_meta_sidecar_keeps_its_shape_across_loads(spark, loader):
+    kwargs = dict(table="meta_sat", entity_type="c", id_fields=["cust_id"], id_type="customer")
+    path = loader._path("meta_sat", "meta.json")
+    loader.load_satellite(_customers(spark, range(5)), process_time=T0, **kwargs)
+    first = json.loads(loader._fs.read_text(path))
+    loader.load_satellite(_customers(spark, range(5), flag=1), process_time=T1, **kwargs)
+    second = json.loads(loader._fs.read_text(path))
+    assert first.keys() == second.keys()
+    assert {"entity_type", "id_type", "id_fields", "full_refresh"} <= first.keys()
+    assert (first["process_time"], second["process_time"]) == (T0, T1)
+
+
+def _rowset(df):
+    return sorted(tuple(r) for r in df.select(*sorted(df.columns)).collect())
+
+
+def test_parquet_and_table_loaders_merge_identically(spark, tmp_path):
+    """`TableVaultLoader` only swaps storage: one load sequence gives
+    the same current and history rows and the same `LoadResult`s
+    through both loaders."""
+    import glob
+    import shutil
+
+    from featurestore_spark.load.table_vault import TableVaultLoader
+
+    db = "vault_parity"
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+    for d in glob.glob(f"{warehouse.removeprefix('file:')}/{db}.db"):
+        shutil.rmtree(d, ignore_errors=True)
+    loaders = [
+        VaultLoader(spark, str(tmp_path / "pq"), fingerprint_method="md5"),
+        TableVaultLoader(spark, database=db, fingerprint_method="md5"),
+    ]
+
+    hub = dict(table="p_hub", entity_type="c", id_fields=["cust_id"], id_type="customer")
+    sat = dict(
+        table="p_sat", entity_type="c", id_fields=["cust_id"], id_type="customer",
+        delete_indicator=("status", "deleted"),
+    )
+    pair = dict(src_fields=["cust_id"], src_id_type="customer",
+                dst_fields=["order_id"], dst_id_type="order")
+
+    def status(df, deleted=()):
+        return df.withColumn(
+            "status",
+            F.when(F.col("cust_id").isin(*deleted), "deleted").otherwise("active"),
+        )
+
+    orders = spark.createDataFrame(
+        [(str(i), f"o{i}", 0.5) for i in range(6)], ["cust_id", "order_id", "conf"]
+    )
+    steps = [
+        ("load_hub", _customers(spark, range(10)), dict(process_time=T0, **hub)),
+        ("load_satellite", status(_customers(spark, range(8))),
+         dict(process_time=T0, **sat)),
+        ("load_satellite",
+         status(_customers(spark, range(4, 10), flag=3), deleted=["5"]),
+         dict(process_time=T1, **sat)),
+        ("load_hub", _customers(spark, range(7)),
+         dict(process_time=T1, full_refresh=True, **hub)),
+        ("load_satellite", status(_customers(spark, [5], flag=3)),
+         dict(process_time=T2, **sat)),
+        ("load_link", orders.drop("conf"), dict(table="p_link", process_time=T0, **pair)),
+        ("load_mapping", orders,
+         dict(table="p_map", confidence_col="conf", process_time=T0, **pair)),
+    ]
+    results = [[getattr(ld, name)(df, **kw) for name, df, kw in steps] for ld in loaders]
+    assert results[0] == results[1]
+    assert [(r.inserts, r.updates, r.deletes) for r in results[0]] == [
+        (10, 0, 0), (8, 0, 0), (2, 3, 1), (0, 0, 3), (1, 0, 0), (6, 0, 0), (6, 0, 0),
+    ]
+    for table in ("p_hub", "p_sat", "p_link", "p_map"):
+        pq_ld, tv_ld = loaders
+        assert _rowset(pq_ld.read_current(table)) == _rowset(tv_ld.read_current(table))
+        assert _rowset(pq_ld.read_history(table)) == _rowset(tv_ld.read_history(table))
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def test_vault_set_up_job_counts(spark, tmp_path):
+    """The Spark jobs each load of a perfbench-shaped set-up launches
+    (hub, satellite, link, satellite delta, flagged hub delta, history
+    compaction), counted per call under a job group once the listener
+    bus has drained. A merge change that adds a pass shows here."""
+    src = {}
+    for name, rows, cols in (
+        ("entities", [(f"E{i}",) for i in range(40)], ["entity"]),
+        ("labels_0", [(f"E{i}", f"E{i}", "gold") for i in range(30)],
+         ["entity_key", "entity", "label"]),
+        ("links", [(f"E{i}", f"D{i}") for i in range(40)] + [("E1", "D1")],
+         ["entity", "device"]),
+        ("labels_1",
+         [(f"E{i}", f"E{i}", "silver") for i in [*range(25, 35), 30]],
+         ["entity_key", "entity", "label"]),
+        ("entities_1",
+         [(f"E{i}", "U") for i in range(35, 45)] + [(f"E{i}", "D") for i in range(5)],
+         ["entity", "op"]),
+    ):
+        path = str(tmp_path / f"{name}.parquet")
+        spark.createDataFrame(rows, cols).write.parquet(path)
+        src[name] = spark.read.parquet(path)
+    loader = VaultLoader(spark, str(tmp_path / "vault"))
+    hub = dict(table="hub", entity_type="entity", id_fields=["entity"], id_type="ent")
+    labels = dict(table="labels", entity_type="entity", id_fields=["entity_key"], id_type="ent")
+    calls = [
+        lambda: loader.load_hub(src["entities"], process_time=T0, **hub),
+        lambda: loader.load_satellite(src["labels_0"], process_time=T0, **labels),
+        lambda: loader.load_link(
+            src["links"], table="link", src_fields=["entity"], src_id_type="ent",
+            dst_fields=["device"], dst_id_type="dev", process_time=T0,
+        ),
+        lambda: loader.load_satellite(src["labels_1"], process_time=T1, **labels),
+        lambda: loader.load_hub(
+            src["entities_1"], process_time=T1, delete_indicator=("op", "D"), **hub
+        ),
+        lambda: loader.compact_history("labels", target_files=1),
+    ]
+    sc = spark.sparkContext
+    jobs = []
+    try:
+        for i, call in enumerate(calls):
+            group = f"test-vault-jobs-{i}"
+            sc.setJobGroup(group, "vault set-up job count")
+            call()
+            sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == [12, 12, 12, 17, 17, 6]
