@@ -38,10 +38,14 @@ this is net-new scale scope alongside the dedup family.
 
 from __future__ import annotations
 
+import functools
+import re
+
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from featurestore_spark.io.fs import HadoopFS
 from featurestore_spark.operators.dedup import (
     _H2_SEED,
     _collapse_exact_texts,
@@ -491,7 +495,9 @@ def dedup_embeddings_against_index(
         collapse_exact_vectors(hashed, "dedup_embeddings_against_index",
                                rep_col=id_col)
     )
-    members = materialize(
+    # members feeds the single drops-expansion join — lazy, as on the
+    # text side; reps has three consumers and stays materialized
+    members = (
         hashed.select("member_id", "_h1", "_h2")
         .join(reps.select("_h1", "_h2", F.col(id_col).alias("rep_id")),
               ["_h1", "_h2"])
@@ -566,6 +572,80 @@ def dedup_embeddings_against_index(
     return batch.join(drops, id_col, "left_anti")
 
 
+# -- the `batch=<id>` state protocol behind every foreachBatch wrapper ---------
+
+_PARTITION = re.compile(r"batch=(c?)(-?\d+)")
+
+
+def _batch_ids(names) -> dict[str, int]:
+    """The batch id of each partition name: ``n`` for `batch=<n>`,
+    ``k`` for a compacted `batch=c<k>` (the highest id it holds).
+    Other names (`batch=seed`, `_temporary`, …) are left out."""
+    return {
+        name: int(m.group(2)) for name in names if (m := _PARTITION.fullmatch(name))
+    }
+
+
+def _sum_by_rest(df: DataFrame, sum_col: str) -> DataFrame:
+    """Group by every other column and sum ``sum_col``: how the
+    per-batch count deltas of the line/span indexes add up."""
+    keys = [c for c in df.columns if c != sum_col]
+    return df.groupBy(*keys).agg(F.sum(sum_col).alias(sum_col))
+
+
+def _read_state(spark, root: str, batch_id: int, *, sum_col=None, empty=None):
+    """Every partition of a state root but the current batch's, without
+    the `batch` column: a retry must not see its failed attempt's
+    writes (its survivors would match themselves in the index and
+    drop). ``sum_col`` sums the count deltas. ``empty`` is the schema
+    returned when the root does not exist yet — without it a missing
+    root raises AnalysisException."""
+    try:
+        df = spark.read.parquet(root)
+    except AnalysisException:
+        if empty is None:
+            raise
+        return spark.createDataFrame([], empty)
+    df = df.where(F.col("batch").cast("string") != str(batch_id)).drop("batch")
+    return df if sum_col is None else _sum_by_rest(df, sum_col)
+
+
+def _guard_restart(spark, root: str, batch_id: int, op_name: str) -> None:
+    """Raise when ``root`` already holds a batch id above ``batch_id``.
+    A foreachBatch retry only ever re-runs the highest id, so a higher
+    one means the stream was restarted with a fresh checkpoint, whose
+    overwrites would replace accepted batches. Decides from a listing
+    of the partition names, so it launches no Spark job."""
+    head = max(_batch_ids(HadoopFS(spark).list_names(root)).values(),
+               default=batch_id)
+    if head > batch_id:
+        raise RuntimeError(
+            f"{op_name}: kept root {root!r} already contains "
+            f"batch={head} > current batch_id={batch_id} — the stream "
+            "was restarted with a fresh checkpoint against existing state "
+            "roots; reuse the original checkpointLocation or point at "
+            "fresh state roots"
+        )
+
+
+def _foreach_batch(op_name: str, guard_root: str, step):
+    """The `foreachBatch` callback behind every stream wrapper
+    (docs/usage.md §6 states the protocol). After `_guard_restart`
+    checks ``guard_root``, ``step(batch_df, read)`` returns ``{root:
+    frame}``, reading state through ``read(root, sum_col=None,
+    empty=None)`` (`_read_state` without the current batch). Each
+    frame then overwrites ``<root>/batch=<id>``, in insertion order."""
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        _guard_restart(spark, guard_root, batch_id, op_name)
+        read = functools.partial(_read_state, spark, batch_id=batch_id)
+        for root, frame in step(batch_df, read).items():
+            frame.write.mode("overwrite").parquet(f"{root}/batch={batch_id}")
+
+    return process
+
+
 def dedup_stream_against_index(
     index_path: str,
     kept_path: str,
@@ -581,29 +661,11 @@ def dedup_stream_against_index(
     max_bucket: int | None = 1000,
 ):
     """`foreachBatch` callback for streaming ingestion dedup: each
-    micro-batch is deduped against the persisted band index, and the
-    survivors' bands are added so batch N+1 dedups against everything
-    accepted through batch N.
-
-    Layout: every path is a directory of `batch=<id>` subdirectories —
-    standard Hive-style partitioning, read back as one frame via
-    partition discovery. Each micro-batch OVERWRITES its own
-    `batch=<id>` subdir and the reads EXCLUDE the current batch id —
-    so a foreachBatch retry (micro-batches carry at-least-once
-    semantics; only the sink write must be idempotent) neither appends
-    duplicates nor sees the failed attempt's own writes, making the
-    pipeline exactly-once WITHIN one checkpoint lineage.
-
-    The state roots are bound to that lineage: Structured Streaming
-    numbers batches per checkpoint, so a stream restarted with a
-    FRESH checkpointLocation would re-issue batch ids 0, 1, … and its
-    overwrites would silently replace earlier accepted batches. The
-    callback guards this — if the kept root already contains a batch
-    id HIGHER than the current one, it raises instead of overwriting
-    (a genuine retry only ever re-runs the highest id). To resume an
-    interrupted pipeline, reuse the original checkpointLocation; to
-    start a new lineage, point at fresh state roots (or re-seed from
-    the old ones).
+    micro-batch is deduped against the persisted band index
+    (`dedup_against_index`), and the survivors' bands are added so
+    batch N+1 dedups against everything accepted through batch N.
+    State layout, retries and the fresh-checkpoint guard follow the
+    shared `batch=<id>` protocol (docs/usage.md §6).
 
     - `index_path`: band index root. Seed it with
       `minhash_band_index(corpus).write.parquet(f"{index_path}/batch=seed")`.
@@ -627,54 +689,28 @@ def dedup_stream_against_index(
             "dedup_stream_against_index: verified mode requires base_path"
         )
 
-    def _load(spark, root, exclude_batch):
-        # Partition discovery surfaces `batch` as a column; the CURRENT
-        # batch id is excluded so a foreachBatch RETRY does not see the
-        # failed attempt's own writes (survivors would collide with
-        # themselves in the index and be dropped — breaking the
-        # overwrite-idempotency this layout exists for).
-        df = spark.read.parquet(root)
-        return df.where(
-            F.col("batch").cast("string") != str(exclude_batch)
-        ).drop("batch")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _guard_restart(spark, kept_path, batch_id, "dedup_stream_against_index")
-        idx = _load(spark, index_path, batch_id)
-        base = (
-            _load(spark, base_path, batch_id).select(id_col, text_col)
-            if base_path is not None
-            else None
-        )
-        kept = dedup_against_index(
-            batch_df,
-            idx,
-            base=base,
-            threshold=threshold,
-            verify_measure=verify_measure,
-            text_col=text_col,
-            id_col=id_col,
-            n=n,
-            k=k,
-            bands=bands,
-            max_bucket=max_bucket,
-        )
-        # One pass, fanned out to the 2-3 writes below — and the
-        # read/write barrier: the index is both read and re-written
-        # inside this callback, so the writes must not start until the
-        # reads have fully materialized.
-        kept = materialize(kept)
-        kept.write.mode("overwrite").parquet(f"{kept_path}/batch={batch_id}")
-        minhash_band_index(
-            kept, text_col, id_col, n=n, k=k, bands=bands
-        ).write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
+    def step(batch_df: DataFrame, read) -> dict:
+        base = (read(base_path).select(id_col, text_col)
+                if base_path is not None else None)
+        # One pass, fanned out to the 2-3 writes — and the read/write
+        # barrier: the index is both read and re-written in one batch,
+        # so the writes must not start until the reads have finished.
+        kept = materialize(dedup_against_index(
+            batch_df, read(index_path), base=base, threshold=threshold,
+            verify_measure=verify_measure, text_col=text_col, id_col=id_col,
+            n=n, k=k, bands=bands, max_bucket=max_bucket,
+        ))
+        state = {
+            kept_path: kept,
+            index_path: minhash_band_index(
+                kept, text_col, id_col, n=n, k=k, bands=bands
+            ),
+        }
         if base_path is not None:
-            kept.select(id_col, text_col).write.mode("overwrite").parquet(
-                f"{base_path}/batch={batch_id}"
-            )
+            state[base_path] = kept.select(id_col, text_col)
+        return state
 
-    return process
+    return _foreach_batch("dedup_stream_against_index", kept_path, step)
 
 
 def extend_index(
@@ -1065,11 +1101,7 @@ def extend_line_index(
     delta = line_frequency_index(
         batch, text_col, id_col, delimiter=delimiter, normalize=normalize
     )
-    return (
-        index.unionByName(delta)
-        .groupBy("line_hash")
-        .agg(F.sum("doc_freq").alias("doc_freq"))
-    )
+    return _sum_by_rest(index.unionByName(delta), "doc_freq")
 
 
 def dedup_lines_stream_against_index(
@@ -1086,9 +1118,12 @@ def dedup_lines_stream_against_index(
 ):
     """`foreachBatch` callback for streaming line-level dedup: each
     micro-batch's lines are counted against the persisted line
-    frequency accumulated so far, over-frequent lines are dropped, and
-    the batch's OWN line frequencies are recorded so batch N+1 counts
-    against everything seen through batch N.
+    frequency accumulated so far (`dedup_lines_against_index`),
+    over-frequent lines are dropped, and the batch's OWN line
+    frequencies are recorded so batch N+1 counts against everything
+    seen through batch N. State follows the shared `batch=<id>`
+    protocol (docs/usage.md §6); the index is a set of per-batch count
+    deltas, summed on read and never rewritten in place.
 
     Prefix semantics (inherent to streaming): a batch is deduped
     against counts seen SO FAR — the first `max_docs` sightings of a
@@ -1098,60 +1133,33 @@ def dedup_lines_stream_against_index(
     future occurrences keep dropping — matching the corpus-wide
     semantic rather than resetting.
 
-    Layout and retry discipline mirror `dedup_stream_against_index`:
-    every path is a root of `batch=<id>` subdirs; each micro-batch
-    OVERWRITES its own subdir and index reads EXCLUDE the current
-    batch id (retry-idempotent within one checkpoint lineage), and a
-    restart with a fresh checkpoint against existing state roots
-    raises instead of silently overwriting accepted batches. Reads
-    sum `doc_freq` across batch partitions — the index is a set of
-    per-batch count deltas, never rewritten in place.
-
     Seed with
     `line_frequency_index(corpus).write.parquet(f"{index_path}/batch=seed")`.
     """
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _guard_restart(
-            spark, kept_path, batch_id, "dedup_lines_stream_against_index"
+    def step(batch_df: DataFrame, read) -> dict:
+        # no index yet reads as an EMPTY index (not None), so
+        # include_batch=False means "no corpus counts, nothing drops"
+        # rather than falling back to within-batch counting
+        idx = read(
+            index_path,
+            sum_col="doc_freq",
+            empty="line_hash struct<h1:bigint,h2:bigint>, doc_freq long",
         )
-        try:
-            idx = (
-                spark.read.parquet(index_path)
-                .where(F.col("batch").cast("string") != str(batch_id))
-                .groupBy("line_hash")
-                .agg(F.sum("doc_freq").alias("doc_freq"))
-            )
-        except AnalysisException:
-            # no index yet: an EMPTY index (not None) so
-            # include_batch=False correctly means "no corpus counts,
-            # nothing drops" rather than falling back to within-batch
-            # counting
-            idx = spark.createDataFrame(
-                [], "line_hash struct<h1:bigint,h2:bigint>, doc_freq long"
-            )
-        from featurestore_spark.operators.curation import dedup_lines
-
-        kept = materialize(
-            dedup_lines(
-                batch_df,
-                text_col,
-                id_col,
-                max_docs=max_docs,
-                delimiter=delimiter,
-                output_delimiter=output_delimiter,
+        kept = materialize(dedup_lines_against_index(
+            batch_df, idx, text_col, id_col, max_docs=max_docs,
+            include_batch=include_batch, delimiter=delimiter,
+            output_delimiter=output_delimiter, normalize=normalize,
+        ))
+        return {
+            kept_path: kept,
+            index_path: line_frequency_index(
+                batch_df, text_col, id_col, delimiter=delimiter,
                 normalize=normalize,
-                index=idx,
-                include_batch=include_batch,
-            )
-        )
-        kept.write.mode("overwrite").parquet(f"{kept_path}/batch={batch_id}")
-        line_frequency_index(
-            batch_df, text_col, id_col, delimiter=delimiter, normalize=normalize
-        ).write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
+            ),
+        }
 
-    return process
+    return _foreach_batch("dedup_lines_stream_against_index", kept_path, step)
 
 
 # -- shared-span window index (incremental span removal) ----------------------
@@ -1294,67 +1302,7 @@ def extend_span_index(
     sketch probe can detect it from (window_hash, doc_freq) state —
     the `batch=<id>` partition name is the idempotency key."""
     delta = span_window_index(batch, text_col, id_col, n=n)
-    return (
-        index.unionByName(delta)
-        .groupBy("window_hash")
-        .agg(F.sum("doc_freq").alias("doc_freq"))
-    )
-
-
-_RESTART_GUARD_SEEN: dict[tuple[str, str], int] = {}
-
-
-def _guard_restart(spark, kept_path: str, batch_id: int, op_name: str) -> None:
-    """Fresh-checkpoint restart guard shared by every stream wrapper:
-    Structured Streaming numbers batches per checkpoint lineage, so a
-    stream restarted with a NEW checkpointLocation re-issues ids 0, 1,
-    … and its `batch=<id>` overwrites would silently replace earlier
-    accepted batches. A genuine retry only ever re-runs the HIGHEST
-    id — anything lower means a new lineage against old state roots.
-    A `batch=c<k>` partition (the :func:`compact_index` layout)
-    carries batches up to id ``k``, so its ``k`` counts toward the
-    highest-seen id — compaction must not weaken the guard.
-
-    Cost (VERDICT r14 #8): the disk probe is a per-batch listing +
-    collect job, paid once per micro-batch while the answer inside one
-    run is already known — this wrapper WROTE the previous batches. A
-    driver-side memo keyed on (applicationId, kept root) records the
-    highest id seen/accepted and short-circuits the PASS case only;
-    any would-raise still consults the live listing first, so wiping
-    the state roots mid-run (or a memo from a finished stream against
-    since-cleared paths) can never produce a false failure. The one
-    contract change: an EXTERNAL writer appending a higher batch to an
-    operator-owned state root mid-run is no longer detected — those
-    roots are owned by the wrapper per the exactly-once layout, so
-    that was never supported."""
-    key = (spark.sparkContext.applicationId, kept_path)
-    memo = _RESTART_GUARD_SEEN.get(key)
-    if memo is not None and memo <= batch_id:
-        _RESTART_GUARD_SEEN[key] = batch_id
-        return
-    try:
-        existing = spark.read.parquet(kept_path).select("batch").distinct()
-        ids = []
-        for (v,) in existing.collect():
-            s = str(v)
-            if s.lstrip("-").isdigit():
-                ids.append(int(s))
-            elif s.startswith("c") and s[1:].isdigit():
-                ids.append(int(s[1:]))
-    except AnalysisException:
-        # kept root does not exist yet (first batch)
-        _RESTART_GUARD_SEEN[key] = batch_id
-        return
-    if not (ids and max(ids) > batch_id):
-        _RESTART_GUARD_SEEN[key] = max(ids + [batch_id])
-    if ids and max(ids) > batch_id:
-        raise RuntimeError(
-            f"{op_name}: kept root {kept_path!r} already contains "
-            f"batch={max(ids)} > current batch_id={batch_id} — the stream "
-            "was restarted with a fresh checkpoint against existing state "
-            "roots; reuse the original checkpointLocation or point at "
-            "fresh state roots"
-        )
+    return _sum_by_rest(index.unionByName(delta), "doc_freq")
 
 
 def dedup_embeddings_stream_against_index(
@@ -1372,12 +1320,12 @@ def dedup_embeddings_stream_against_index(
     max_bucket: int | None = 1000,
 ):
     """`foreachBatch` callback for streaming embedding dedup — the
-    vector-side analog of `dedup_stream_against_index`, with the same
-    state layout and retry discipline (`batch=<id>` overwrite
-    partitions, current-batch-excluded reads, fresh-checkpoint guard).
-    Each micro-batch is deduped against the persisted SRP code index;
-    survivors' codes (and, in verified mode, their vectors) are added
-    so batch N+1 dedups against everything accepted through batch N.
+    vector-side analog of `dedup_stream_against_index`, on the shared
+    `batch=<id>` protocol (docs/usage.md §6). Each micro-batch is
+    deduped against the persisted SRP code index
+    (`dedup_embeddings_against_index`); survivors' codes (and, in
+    verified mode, their vectors) are added so batch N+1 dedups
+    against everything accepted through batch N.
 
     Seed with
     `srp_code_index(corpus).write.parquet(f"{index_path}/batch=seed")`
@@ -1389,48 +1337,28 @@ def dedup_embeddings_stream_against_index(
             "requires base_path"
         )
 
-    def _load(spark, root, exclude_batch):
-        df = spark.read.parquet(root)
-        return df.where(
-            F.col("batch").cast("string") != str(exclude_batch)
-        ).drop("batch")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _guard_restart(
-            spark, kept_path, batch_id, "dedup_embeddings_stream_against_index"
-        )
-        idx = _load(spark, index_path, batch_id)
-        base = (
-            _load(spark, base_path, batch_id).select(id_col, vec_col)
-            if base_path is not None
-            else None
-        )
-        kept = materialize(
-            dedup_embeddings_against_index(
-                batch_df,
-                idx,
-                base=base,
-                threshold=threshold,
-                id_col=id_col,
-                vec_col=vec_col,
-                bits=bits,
-                bands=bands,
-                seed=seed,
+    def step(batch_df: DataFrame, read) -> dict:
+        base = (read(base_path).select(id_col, vec_col)
+                if base_path is not None else None)
+        kept = materialize(dedup_embeddings_against_index(
+            batch_df, read(index_path), base=base, threshold=threshold,
+            id_col=id_col, vec_col=vec_col, bits=bits, bands=bands,
+            seed=seed, dim=dim, max_bucket=max_bucket,
+        ))
+        state = {
+            kept_path: kept,
+            index_path: srp_code_index(
+                kept, id_col, vec_col, bits=bits, bands=bands, seed=seed,
                 dim=dim,
-                max_bucket=max_bucket,
-            )
-        )
-        kept.write.mode("overwrite").parquet(f"{kept_path}/batch={batch_id}")
-        srp_code_index(
-            kept, id_col, vec_col, bits=bits, bands=bands, seed=seed, dim=dim
-        ).write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
+            ),
+        }
         if base_path is not None:
-            kept.select(id_col, vec_col).write.mode("overwrite").parquet(
-                f"{base_path}/batch={batch_id}"
-            )
+            state[base_path] = kept.select(id_col, vec_col)
+        return state
 
-    return process
+    return _foreach_batch(
+        "dedup_embeddings_stream_against_index", kept_path, step
+    )
 
 
 def remove_spans_stream_against_index(
@@ -1446,49 +1374,31 @@ def remove_spans_stream_against_index(
 ):
     """`foreachBatch` callback for streaming span removal — the
     span-side analog of `dedup_lines_stream_against_index` (per-batch
-    count DELTAS under `batch=<id>`, summed on read; prefix semantics;
-    deltas record the ORIGINAL batch's window frequencies; same retry
-    and restart discipline). Seed with
+    count DELTAS, summed on read; prefix semantics; deltas record the
+    ORIGINAL batch's window frequencies), on the shared `batch=<id>`
+    protocol (docs/usage.md §6). Seed with
     `span_window_index(corpus, n=n).write.parquet(f"{index_path}/batch=seed")`.
 
     Mind the span-index sizing bound (docs/scale.md): the window index
     is O(corpus tokens); prefer large `n` and consider cadenced batch
     reprocessing when the state budget binds."""
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _guard_restart(
-            spark, kept_path, batch_id, "remove_spans_stream_against_index"
+    def step(batch_df: DataFrame, read) -> dict:
+        idx = read(
+            index_path,
+            sum_col="doc_freq",
+            empty="window_hash struct<h1:bigint,h2:bigint>, doc_freq long",
         )
-        try:
-            idx = (
-                spark.read.parquet(index_path)
-                .where(F.col("batch").cast("string") != str(batch_id))
-                .groupBy("window_hash")
-                .agg(F.sum("doc_freq").alias("doc_freq"))
-            )
-        except AnalysisException:
-            idx = spark.createDataFrame(
-                [], "window_hash struct<h1:bigint,h2:bigint>, doc_freq long"
-            )
-        kept = materialize(
-            remove_spans_against_index(
-                batch_df,
-                idx,
-                text_col,
-                id_col,
-                n=n,
-                min_df=min_df,
-                include_batch=include_batch,
-                collapse_exact=collapse_exact,
-            )
-        )
-        kept.write.mode("overwrite").parquet(f"{kept_path}/batch={batch_id}")
-        span_window_index(
-            batch_df, text_col, id_col, n=n
-        ).write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
+        kept = materialize(remove_spans_against_index(
+            batch_df, idx, text_col, id_col, n=n, min_df=min_df,
+            include_batch=include_batch, collapse_exact=collapse_exact,
+        ))
+        return {
+            kept_path: kept,
+            index_path: span_window_index(batch_df, text_col, id_col, n=n),
+        }
 
-    return process
+    return _foreach_batch("remove_spans_stream_against_index", kept_path, step)
 
 
 # last line of a complete _SOURCES manifest: a manifest without it is
@@ -1547,8 +1457,6 @@ def compact_index(
     offline op. Returns a stats dict (`compacted`, `into`,
     `files_before`, `files_after`; resumed runs add `resumed: True`,
     with `files_before` counted at resume time)."""
-    from featurestore_spark.io.fs import HadoopFS
-
     fs = HadoopFS(spark)
     tmp = f"{path}/_compact_tmp"
     manifest = f"{tmp}/_SOURCES"
@@ -1581,7 +1489,7 @@ def compact_index(
             len(lines) >= 3
             and lines[-1] == _MANIFEST_END
             and lines[0].startswith("batch=c")
-            and lines[0][len("batch=c"):].lstrip("-").isdigit()
+            and lines[0] in _batch_ids(lines[:1])
             and all(ln.startswith("batch=") for ln in lines[1:-1])
         )
         if not valid:
@@ -1602,11 +1510,11 @@ def compact_index(
         n for n in fs.list_names(path)
         if n.startswith("batch=") and not n.startswith("batch=.")
     ]
-    numeric = sorted(
-        (int(n[len("batch="):]) for n in parts
-         if n[len("batch="):].lstrip("-").isdigit())
+    ids = _batch_ids(parts)
+    live_head = max(
+        (n for n in ids if not n.startswith("batch=c")), key=ids.get,
+        default=None,
     )
-    live_head = f"batch={numeric[-1]}" if numeric else None
     sources = [n for n in parts if n != live_head]
     if len(sources) < 2:
         return {"compacted": [], "into": None,
@@ -1614,21 +1522,13 @@ def compact_index(
                 "files_after": fs.file_count(path)}
     # high-water mark of the consumed partitions: numeric ids and any
     # previous compaction's k (seed contributes nothing)
-    consumed_ids = [-1]
-    for n in sources:
-        v = n[len("batch="):]
-        if v.lstrip("-").isdigit():
-            consumed_ids.append(int(v))
-        elif v.startswith("c") and v[1:].isdigit():
-            consumed_ids.append(int(v[1:]))
-    final = f"batch=c{max(consumed_ids)}"
+    final = f"batch=c{max([-1] + [ids[n] for n in sources if n in ids])}"
 
     files_before = fs.file_count(path)
     src_paths = [f"{path}/{n}" for n in sources]
     df = spark.read.parquet(*src_paths)
     if sum_col is not None:
-        keys = [c for c in df.columns if c != sum_col]
-        df = df.groupBy(*keys).agg(F.sum(sum_col).alias(sum_col))
+        df = _sum_by_rest(df, sum_col)
     if target_files is None:
         total = sum(fs.size_bytes(p) for p in src_paths)
         target_files = max(1, -(-total // target_file_bytes))

@@ -16,6 +16,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from featurestore_spark.operators.incremental import _foreach_batch
 from featurestore_spark.operators.materialize import materialize
 
 HASH_BUCKETS = 1_000_000
@@ -699,11 +700,10 @@ def hashed_ngram_stream_model(
     include_bigrams: bool = True,
 ):
     """`foreachBatch` callback maintaining a DSIR hashed-n-gram model
-    over a document stream — same state layout and retry discipline as
-    the other stream wrappers (`bm25_stream_index`, the dedup index
-    streams): each micro-batch OVERWRITES its own ``batch=<id>``
-    subdir under ``<model_path>``, and a restart with a fresh
-    checkpoint against existing state raises via the shared guard.
+    over a document stream: each micro-batch writes its bucket counts
+    under ``<model_path>`` on the shared `batch=<id>` protocol
+    (docs/usage.md §6), like `bm25_stream_index` and the dedup index
+    streams.
 
     A checkpointed stream delivers each document exactly once, so the
     per-batch models cover DISJOINT doc sets — the accumulated model
@@ -713,19 +713,15 @@ def hashed_ngram_stream_model(
     ``hashed_ngram_model(corpus).write.parquet(f"{model_path}/batch=seed")``.
     """
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        from featurestore_spark.operators.incremental import _guard_restart
+    def step(batch_df: DataFrame, read) -> dict:
+        return {
+            model_path: hashed_ngram_model(
+                batch_df, text_col, id_col,
+                n_buckets=n_buckets, include_bigrams=include_bigrams,
+            )
+        }
 
-        _guard_restart(
-            batch_df.sparkSession, model_path, batch_id,
-            "hashed_ngram_stream_model",
-        )
-        hashed_ngram_model(
-            batch_df, text_col, id_col,
-            n_buckets=n_buckets, include_bigrams=include_bigrams,
-        ).write.mode("overwrite").parquet(f"{model_path}/batch={batch_id}")
-
-    return process
+    return _foreach_batch("hashed_ngram_stream_model", model_path, step)
 
 
 def read_hashed_ngram_model(spark, model_path: str) -> DataFrame:

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from featurestore_spark.operators.incremental import _foreach_batch
 from featurestore_spark.operators.materialize import materialize
 from featurestore_spark.operators.probes import verify_disjoint_ids as _verify_disjoint_ids
 from featurestore_spark.operators.text import clean_tokens as _clean_tokens
@@ -217,11 +218,9 @@ def bm25_stream_index(
 ):
     """`foreachBatch` callback maintaining a BM25 inverted index over a
     document stream — the retrieval-side analog of the incremental
-    dedup wrappers (same state layout and retry discipline: each
-    micro-batch OVERWRITES its own ``batch=<id>`` subdirs under
-    ``<index_path>/postings`` and ``<index_path>/stats``, and a
-    restart with a fresh checkpoint against existing state raises via
-    the shared guard instead of silently replacing accepted batches).
+    dedup wrappers: each micro-batch writes its postings and stats under
+    ``<index_path>/postings`` and ``<index_path>/stats`` on the shared
+    `batch=<id>` protocol (docs/usage.md §6).
 
     Because a checkpointed stream delivers each document exactly once,
     per-batch postings cover DISJOINT doc sets — the accumulated index
@@ -237,24 +236,11 @@ def bm25_stream_index(
     s.write.parquet(f"{index_path}/stats/batch=seed")``.
     """
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        from featurestore_spark.operators.incremental import _guard_restart
-
-        _guard_restart(
-            batch_df.sparkSession,
-            f"{index_path}/postings",
-            batch_id,
-            "bm25_stream_index",
-        )
+    def step(batch_df: DataFrame, read) -> dict:
         postings, stats = bm25_index(batch_df, id_col=id_col, text_col=text_col)
-        postings.write.mode("overwrite").parquet(
-            f"{index_path}/postings/batch={batch_id}"
-        )
-        stats.write.mode("overwrite").parquet(
-            f"{index_path}/stats/batch={batch_id}"
-        )
+        return {f"{index_path}/postings": postings, f"{index_path}/stats": stats}
 
-    return process
+    return _foreach_batch("bm25_stream_index", f"{index_path}/postings", step)
 
 
 def read_bm25_index(spark, index_path: str) -> tuple[DataFrame, DataFrame]:

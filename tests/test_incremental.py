@@ -1,5 +1,7 @@
 """Tests for incremental (against-index) corpus deduplication."""
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -845,11 +847,13 @@ def test_url_index_recrawl_round_trip(spark):
         dedup_urls_against_index(batch, old)
 
 
-def test_against_index_rejects_64bit_line_index(spark, corpus):
+def test_against_index_rejects_64bit_line_index(spark, tmp_path, corpus):
     """A pre-round-6 bigint-keyed index fails fast with the rebuild
-    instruction, not an opaque join type-mismatch (ADVICE r6)."""
+    instruction, not an opaque join type-mismatch (ADVICE r6) — in the
+    stream form too."""
     from featurestore_spark.operators.incremental import (
         dedup_lines_against_index,
+        dedup_lines_stream_against_index,
         remove_spans_against_index,
     )
 
@@ -862,6 +866,13 @@ def test_against_index_rejects_64bit_line_index(spark, corpus):
     missing = spark.createDataFrame([], "wrong_col bigint, doc_freq long")
     with pytest.raises(ValueError, match="no 'line_hash' column"):
         dedup_lines_against_index(corpus, missing)
+    idx_root = str(tmp_path / "lidx")
+    spark.createDataFrame([(1, 2)], "line_hash bigint, doc_freq long").write.parquet(
+        f"{idx_root}/batch=seed"
+    )
+    cb = dedup_lines_stream_against_index(idx_root, str(tmp_path / "lkept"))
+    with pytest.raises(ValueError, match="128-bit"):
+        cb(corpus, 0)
 
 
 @pytest.mark.slow  # multi-batch/sweep twin — slow tier (r15)
@@ -1123,42 +1134,161 @@ def test_compact_index_discards_truncated_manifest_tail(spark, tmp_path):
     ]
 
 
-def test_restart_guard_memo_short_circuits_but_never_false_fails(
-    spark, tmp_path
-):
-    """r15: the guard memoizes the highest batch id per (app, root) so
-    accepted batches stop paying a listing+collect job each — but the
-    memo may only short-circuit the PASS case. A would-raise must
-    consult the live listing (so wiping the state roots mid-run can
-    never produce a false failure), and a fresh-checkpoint restart in
-    the same session must still raise."""
+_JOB_GROUPS = itertools.count()
+
+
+def _jobs_of(spark, call) -> int:
+    """Spark jobs launched by `call()`, counted per job group after
+    the listener bus has caught up with every posted event."""
+    sc = spark.sparkContext
+    group = f"test-incremental-jobs-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, "incremental job count")
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_restart_guard_decides_from_the_partition_listing(spark, tmp_path):
+    """The fresh-checkpoint guard lists the root's `batch=` partitions
+    on every call and launches no Spark job. A retry of the head
+    passes, a lower id raises, a higher batch written by another
+    writer mid-run raises, `batch=c<k>` counts as id k, and after the
+    roots are wiped id 0 passes."""
     import shutil
 
-    from featurestore_spark.operators.incremental import (
-        _RESTART_GUARD_SEEN,
-        _guard_restart,
-    )
+    from featurestore_spark.operators.incremental import _guard_restart
 
     root = str(tmp_path / "kept")
-    key = (spark.sparkContext.applicationId, root)
-    # first batch: root absent -> pass, memo primed
-    _guard_restart(spark, root, 0, "t")
-    assert _RESTART_GUARD_SEEN[key] == 0
-    spark.createDataFrame([(1,)], ["k"]).write.parquet(f"{root}/batch=0")
-    # later batches: memo pass (monotone ids), memo tracks the head;
-    # the caller writes each accepted batch, as the wrappers do
-    _guard_restart(spark, root, 1, "t")
-    spark.createDataFrame([(2,)], ["k"]).write.parquet(f"{root}/batch=1")
-    _guard_restart(spark, root, 2, "t")
-    spark.createDataFrame([(3,)], ["k"]).write.parquet(f"{root}/batch=2")
-    assert _RESTART_GUARD_SEEN[key] == 2
-    # fresh-checkpoint restart (id resets) still raises: the memo
-    # must not weaken the guard
+
+    def write(name):
+        spark.createDataFrame([(1,)], ["k"]).write.parquet(f"{root}/{name}")
+
+    write("batch=0")
+    write("batch=1")
+    assert _jobs_of(spark, lambda: _guard_restart(spark, root, 1, "t")) == 0
     with pytest.raises(RuntimeError, match="fresh checkpoint"):
         _guard_restart(spark, root, 0, "t")
-    # ...and the raise path read DISK, not the memo: after the state
-    # roots are wiped, a legitimately fresh id-0 run passes even
-    # though the stale memo says 2
+    _guard_restart(spark, root, 2, "t")
+    write("batch=2")
+    write("batch=5")  # another writer, mid-run
+    with pytest.raises(RuntimeError, match="batch=5 > current batch_id=3"):
+        _guard_restart(spark, root, 3, "t")
     shutil.rmtree(root)
-    _guard_restart(spark, root, 0, "t")
-    assert _RESTART_GUARD_SEEN[key] == 0
+    write("batch=seed")
+    write("batch=c7")
+    with pytest.raises(RuntimeError, match="fresh checkpoint"):
+        _guard_restart(spark, root, 6, "t")
+    _guard_restart(spark, root, 7, "t")
+    shutil.rmtree(root)
+    _guard_restart(spark, root, 0, "t")  # absent root: the first batch
+
+
+_TEXT_BATCHES = [
+    [(10, f"{BASE_TXT}\ncookie banner"),
+     (11, "el perro y la casa que los una con para nada el dia")],
+    [(20, "el perro y la casa que los una con para nada el dia\ncookie banner"),
+     (21, "and now for something completely different a walk in the park")],
+    [(30, "a third batch of novel words about stream state roots"),
+     (31, "and now for something completely different a walk in the park\nok")],
+]
+_VEC_BATCHES = [
+    [(10, [1.0, 0.0, 0.0]), (11, [0.0, 0.0, 1.0])],
+    [(20, [0.0, 0.0, 1.0]), (21, [0.5, 0.5, 0.5])],
+    [(30, [0.2, 0.9, 0.1]), (31, [0.5, 0.5, 0.5])],
+]
+
+
+def _stream_case(spark, tmp, name):
+    """(callback, state roots, three micro-batches) for one stream
+    wrapper, its roots seeded from a small corpus."""
+    from featurestore_spark.operators import incremental as inc
+    from featurestore_spark.operators.sampling import (
+        hashed_ngram_model,
+        hashed_ngram_stream_model,
+    )
+    from featurestore_spark.operators.search import bm25_index, bm25_stream_index
+
+    idx, kept, base = (str(tmp / r) for r in ("idx", "kept", "base"))
+    schema = "doc_id long, text string"
+    corpus = spark.createDataFrame(
+        [(0, BASE_TXT), (1, "cookie banner\ncorpus one")], schema
+    )
+    batches = [spark.createDataFrame(rows, schema) for rows in _TEXT_BATCHES]
+    if name == "dedup":
+        inc.minhash_band_index(corpus, k=16, bands=8).write.parquet(
+            f"{idx}/batch=seed"
+        )
+        corpus.write.parquet(f"{base}/batch=seed")
+        cb = inc.dedup_stream_against_index(
+            idx, kept, base_path=base, threshold=0.8, k=16, bands=8
+        )
+        return cb, [kept, idx, base], batches
+    if name == "lines":
+        inc.line_frequency_index(corpus).write.parquet(f"{idx}/batch=seed")
+        return inc.dedup_lines_stream_against_index(idx, kept), [kept, idx], batches
+    if name == "spans":
+        inc.span_window_index(corpus, n=5).write.parquet(f"{idx}/batch=seed")
+        cb = inc.remove_spans_stream_against_index(idx, kept, n=5, min_df=2)
+        return cb, [kept, idx], batches
+    if name == "emb":
+        vecs = "vec_id long, embedding array<double>"
+        inc.srp_code_index(
+            spark.createDataFrame([(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])], vecs),
+            dim=3,
+        ).write.parquet(f"{idx}/batch=seed")
+        cb = inc.dedup_embeddings_stream_against_index(idx, kept, dim=3)
+        return cb, [kept, idx], [
+            spark.createDataFrame(rows, vecs) for rows in _VEC_BATCHES
+        ]
+    if name == "bm25":
+        postings, stats = bm25_index(corpus)
+        postings.write.parquet(f"{idx}/postings/batch=seed")
+        stats.write.parquet(f"{idx}/stats/batch=seed")
+        return bm25_stream_index(idx), [f"{idx}/postings", f"{idx}/stats"], batches
+    hashed_ngram_model(corpus).write.parquet(f"{idx}/batch=seed")
+    return hashed_ngram_stream_model(idx), [idx], batches
+
+
+# Ceilings on the Spark jobs per micro-batch (batches 1/2/3) of the
+# `_stream_case` fixtures at local[4]. Some runs add one job where AQE
+# launches a broadcast build on its own, so each ceiling is the highest
+# count seen.
+_STREAM_JOBS = {
+    "dedup": [35, 35, 35],
+    "lines": [24, 24, 24],
+    "spans": [23, 23, 23],
+    "emb": [21, 21, 21],
+    "bm25": [4, 4, 4],
+    "ngram": [2, 2, 2],
+}
+
+
+@pytest.mark.parametrize("name", [
+    # the four dedup callbacks run 20-35 jobs a batch: slow tier
+    pytest.param(n, marks=pytest.mark.slow)
+    if n in ("dedup", "emb", "lines", "spans") else n
+    for n in sorted(_STREAM_JOBS)
+])
+def test_stream_callbacks_share_the_batch_protocol(spark, tmp_path, name):
+    """Every `foreachBatch` callback: pinned Spark jobs per batch; a
+    retry of the head batch leaves every state root's row count
+    unchanged; a lower batch id raises the fresh-checkpoint error."""
+    cb, roots, batches = _stream_case(spark, tmp_path, name)
+    jobs = [
+        _jobs_of(spark, lambda b=b, i=i: cb(b, i))
+        for i, b in enumerate(batches, start=1)
+    ]
+
+    def counts():
+        return [spark.read.parquet(r).count() for r in roots]
+
+    before = counts()
+    cb(batches[-1], len(batches))
+    assert counts() == before
+    with pytest.raises(RuntimeError, match="fresh checkpoint"):
+        cb(batches[0], 0)
+    assert all(n <= cap for n, cap in zip(jobs, _STREAM_JOBS[name])), jobs
