@@ -516,7 +516,9 @@ class VaultLoader:
             # J2 / delete-indicator: flagged or vanished keys → rectype D
             gone = None
             if flagged is not None:
-                gone = live.join(flagged.select(*keys), keys, "inner")
+                # semi join: one tombstone per flagged key, however
+                # many input rows flag it
+                gone = live.join(flagged.select(*keys), keys, "left_semi")
             elif full_refresh:
                 gone = live.join(keyed.select(*keys), keys, "left_anti")
             if gone is not None:

@@ -490,17 +490,14 @@ def decontaminate(
     corpora (see `_should_collapse`)."""
     collapse_exact = _should_collapse(docs, text_col, collapse_exact)
     if collapse_exact:
-        from featurestore_spark.operators.dedup import _collapse_exact_texts
+        from featurestore_spark.operators.dedup import _collapse_exact
 
         # members feeds the single expansion join below — lazy
-        reps, members = _collapse_exact_texts(
-            docs.select(id_col, text_col), text_col, id_col,
-            "decontaminate", materialize_members=False,
-        )
+        reps, members = _collapse_exact(docs, text_col, id_col, "decontaminate")
         doc_sh = plan_fence(
             reps.select(
                 F.col("rep_id").alias("_uid"),
-                shingles(F.col("_text"), n).alias("_shl"),
+                shingles(F.col(text_col), n).alias("_shl"),
             )
         ).select("_uid", F.explode("_shl").alias("_sh"))
     else:
@@ -615,17 +612,14 @@ def boilerplate_flags(
     """
     collapse_exact = _should_collapse(docs, text_col, collapse_exact)
     if collapse_exact:
-        from featurestore_spark.operators.dedup import _collapse_exact_texts
+        from featurestore_spark.operators.dedup import _collapse_exact
 
         # members feeds the single expansion join below — lazy
-        reps, members = _collapse_exact_texts(
-            docs.select(id_col, text_col), text_col, id_col,
-            "boilerplate_flags", materialize_members=False,
-        )
+        reps, members = _collapse_exact(docs, text_col, id_col, "boilerplate_flags")
         base = reps.select(
             F.col("rep_id").alias("_uid"),
             F.col("n_members").alias("_w"),
-            shingles(F.col("_text"), n).alias("_shl"),
+            shingles(F.col(text_col), n).alias("_shl"),
         )
     else:
         base = docs.select(
@@ -1100,7 +1094,7 @@ def dedup_lines(
       plan; the former two-barrier form paid a second action + driver
       gap for the same protection, r15).
     - `collapse_exact=True` factors the whole operator through the
-      exact-duplicate collapse (`_collapse_exact_texts`): exploding,
+      exact-duplicate collapse (`dedup._collapse_exact`): exploding,
       counting, and rebuilding run once per DISTINCT text, with a
       line's document frequency recovered as the sum of its reps'
       duplicate counts — identical output (replicas each count as a
@@ -1117,7 +1111,7 @@ def dedup_lines(
       never broadcast unconditionally); only hashes present in the
       batch are probed.
     """
-    from featurestore_spark.operators.dedup import _collapse_exact_texts
+    from featurestore_spark.operators.dedup import _collapse_exact
     from featurestore_spark.operators.materialize import materialize
 
     if index is None and not include_batch:
@@ -1138,12 +1132,9 @@ def dedup_lines(
     if collapse_exact:
         # members feeds the final attach join ONCE — lazy membership
         # skips its checkpoint job (equal passes, one fewer action)
-        reps, members = _collapse_exact_texts(
-            df.select(id_col, text_col), text_col, id_col, "dedup_lines",
-            materialize_members=False,
-        )
+        reps, members = _collapse_exact(df, text_col, id_col, "dedup_lines")
         unit = reps.select(
-            F.col("rep_id").alias("_uid"), F.col("_text").alias("_utext")
+            F.col("rep_id").alias("_uid"), F.col(text_col).alias("_utext")
         )
         weights = reps.select(
             F.col("rep_id").alias("_uid"), F.col("n_members").alias("_w")
@@ -1169,24 +1160,9 @@ def dedup_lines(
         else per_line.groupBy("_lh").agg(F.count(F.lit(1)).alias("_df"))
     )
     if index is not None:
-        idx = index.select(
-            F.col("line_hash").alias("_lh"),
-            F.col("doc_freq").cast("long").alias("_idf"),
+        doc_freq = _with_index_freq(
+            doc_freq, per_line, "_lh", index, "line_hash", include_batch
         )
-        if include_batch:
-            doc_freq = doc_freq.join(idx, "_lh", "left").select(
-                "_lh",
-                (F.col("_df") + F.coalesce(F.col("_idf"), F.lit(0))).alias(
-                    "_df"
-                ),
-            )
-        else:
-            doc_freq = (
-                per_line.select("_lh")
-                .distinct()
-                .join(idx, "_lh", "left")
-                .select("_lh", F.coalesce(F.col("_idf"), F.lit(0)).alias("_df"))
-            )
     # ONE barrier for the whole counting pass (r15, VERDICT r14 #3
     # "one barrier per stage boundary, not per operator"): `hot` is
     # every (unit, line-hash) pair of an over-frequent line — tiny
@@ -1254,6 +1230,35 @@ def dedup_lines(
     ).drop("_uid", "_new_text", "_n_kept", "_aff")
 
 
+def _with_index_freq(
+    doc_freq: DataFrame,
+    per_unit: DataFrame,
+    key: str,
+    index: DataFrame,
+    index_key: str,
+    include_batch: bool,
+) -> DataFrame:
+    """(key, _df) frequencies against a persisted (``index_key``,
+    doc_freq) index — the rolling-ingestion shape of `dedup_lines` and
+    `remove_shared_spans`: index + this batch's counts
+    (``include_batch``), or index counts alone for the keys in
+    ``per_unit``. The index joins by hash (equi-join, never broadcast
+    unconditionally); only keys present in the batch are probed."""
+    idx = index.select(
+        F.col(index_key).alias(key), F.col("doc_freq").cast("long").alias("_idf")
+    )
+    if include_batch:
+        return doc_freq.join(idx, key, "left").select(
+            key, (F.col("_df") + F.coalesce(F.col("_idf"), F.lit(0))).alias("_df")
+        )
+    return (
+        per_unit.select(key)
+        .distinct()
+        .join(idx, key, "left")
+        .select(key, F.coalesce(F.col("_idf"), F.lit(0)).alias("_df"))
+    )
+
+
 # -- cross-document shared-span removal --------------------------------------
 
 
@@ -1265,6 +1270,8 @@ def remove_shared_spans(
     n: int = 10,
     min_df: int = 2,
     collapse_exact: bool | str = "auto",
+    index: DataFrame | None = None,
+    include_batch: bool = True,
 ) -> DataFrame:
     """Exact-substring dedup, Spark-native (the RefinedWeb / "Deduplicating
     Training Data Makes Language Models Better" span-removal step):
@@ -1321,18 +1328,24 @@ def remove_shared_spans(
       three materializations paid checkpoint round-trips + driver
       gaps without removing any re-execution (the gram pass runs
       twice either way; see `_merged_interval_spans`).
+    - `index` / `include_batch`: as in `dedup_lines`, against a
+      persisted `(window_hash, doc_freq)` frame from
+      `incremental.span_window_index`.
     """
-    from featurestore_spark.operators.dedup import _collapse_exact_texts
+    from featurestore_spark.operators.dedup import _collapse_exact
 
+    if index is None and not include_batch:
+        raise ValueError(
+            "remove_shared_spans: include_batch=False is only meaningful "
+            "against an index (it means 'count corpus frequencies only'); "
+            "pass index= or drop include_batch"
+        )
     collapse_exact = _should_collapse(df, text_col, collapse_exact)
     if collapse_exact:
         # members feeds _apply_span_removal's attach join ONCE — lazy
-        reps, members = _collapse_exact_texts(
-            df.select(id_col, text_col), text_col, id_col,
-            "remove_shared_spans", materialize_members=False,
-        )
+        reps, members = _collapse_exact(df, text_col, id_col, "remove_shared_spans")
         unit = reps.select(
-            F.col("rep_id").alias("_uid"), F.col("_text").alias("_utext")
+            F.col("rep_id").alias("_uid"), F.col(text_col).alias("_utext")
         )
         weights = reps.select(
             F.col("rep_id").alias("_uid"), F.col("n_members").alias("_w")
@@ -1351,6 +1364,10 @@ def remove_shared_spans(
         if collapse_exact
         else per_unit.groupBy("_gh").agg(F.count(F.lit(1)).alias("_df"))
     )
+    if index is not None:
+        doc_freq = _with_index_freq(
+            doc_freq, per_unit, "_gh", index, "window_hash", include_batch
+        )
     # frequent feeds the hit semi-join ONCE, and the gram pass it
     # shares with the hits side re-executes either way (grams is not
     # a barrier) — lazy merges the counting pipeline into the single
@@ -1390,17 +1407,14 @@ def decontaminate_spans(
     per DISTINCT corpus text; the `'auto'` default probes the
     duplicate factor and skips the collapse on duplicate-free
     corpora."""
-    from featurestore_spark.operators.dedup import _collapse_exact_texts
+    from featurestore_spark.operators.dedup import _collapse_exact
 
     collapse_exact = _should_collapse(docs, text_col, collapse_exact)
     if collapse_exact:
         # members feeds _apply_span_removal's attach join ONCE — lazy
-        reps, members = _collapse_exact_texts(
-            docs.select(id_col, text_col), text_col, id_col,
-            "decontaminate_spans", materialize_members=False,
-        )
+        reps, members = _collapse_exact(docs, text_col, id_col, "decontaminate_spans")
         unit = reps.select(
-            F.col("rep_id").alias("_uid"), F.col("_text").alias("_utext")
+            F.col("rep_id").alias("_uid"), F.col(text_col).alias("_utext")
         )
     else:
         unit = docs.select(

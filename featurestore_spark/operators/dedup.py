@@ -63,6 +63,13 @@ def exact_dedup(
 _H2_SEED = 0x9E3779B9  # second xxhash64 seed for 128-bit keys
 
 
+def _hash_pair(c: Column) -> tuple[Column, Column]:
+    """The two independently-seeded xxhash64 longs of a 128-bit key —
+    the one definition behind `hash128`, `_collapse_exact` and the
+    persisted ``text_h1/text_h2`` / ``vec_h1/vec_h2`` index columns."""
+    return F.xxhash64(c), F.xxhash64(F.lit(_H2_SEED), c)
+
+
 def hash128(c: Column) -> Column:
     """128-bit grouping key for string content, as a two-field struct
     of seeded xxhash64 longs — join/groupBy on the single struct column
@@ -73,118 +80,211 @@ def hash128(c: Column) -> Column:
     EXPECTED (~n^2/2^65: thousands at 1e11) and a collision silently
     merges unrelated lines/windows — i.e. false removals. Two
     independently-seeded 64-bit halves push that to ~n^2/2^129 (never
-    in practice), the same key discipline `_collapse_exact_texts` and
-    the minhash text index already use."""
-    return F.struct(
-        F.xxhash64(c).alias("h1"),
-        F.xxhash64(F.lit(_H2_SEED), c).alias("h2"),
-    )
+    in practice), the same key discipline `_collapse_exact` uses."""
+    h1, h2 = _hash_pair(c)
+    return F.struct(h1.alias("h1"), h2.alias("h2"))
 
 
-def _collapse_exact_texts(
+# -- the near-dup family's shared skeleton -------------------------------------
+#
+# Every near-dup operator (MinHash, SimHash, media, embedding,
+# against-index) runs the same steps: collapse exact duplicates behind
+# a verified 128-bit hash (`_collapse_exact`), find pairs over the
+# distinct representatives (`_bucket_pairs` for banded LSH), then map
+# back to member ids (`_expand_pairs` for pair lists, `_keep_lowest`
+# for keep-lowest-id dedup).
+
+
+def _collapse_exact(
     df: DataFrame,
-    text_col: str,
+    value_col: str,
     id_col: str,
     op_name: str,
     *,
-    materialize_members: bool = True,
+    fence_reps: bool = True,
+    fence_members: bool = False,
+    with_cols: dict[str, Column] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Collapse exact-duplicate texts. Returns two frames:
+    """Collapse exact duplicates of any orderable value (string text,
+    ``array<double>`` vectors, binary payloads). Returns two frames:
 
-    - ``reps``    — (rep_id, _text, n_members): one row per DISTINCT
-      text, with its duplicate-group size;
+    - ``reps``    — (rep_id, ``value_col``, n_members, _h1, _h2, *
+      ``with_cols``): one row per DISTINCT value, with its duplicate-
+      group size and its 128-bit hash (`_hash_pair`, so callers never
+      re-hash);
     - ``members`` — (rep_id, member_id): one row per INPUT row (the
       representative maps to itself too).
 
-    Grouping key is a 128-bit scalar hash (two seeded xxhash64 longs;
-    the exchange carries two longs, map-side combine collapses
-    duplicates before the shuffle). rep_id is each group's MINIMUM id.
-    Ties are verified in-group (min ⇔ max over the text, null-safe so
-    an all-null group passes) and a collision — ~n^2/2^129, never in
-    practice — raises rather than silently merging distinct texts.
+    The grouping key is the two-long hash (the exchange carries two
+    longs, map-side combine collapses duplicates before the shuffle).
+    rep_id is each group's MINIMUM id. Ties are verified in-group
+    (min ⇔ max over the value, null-safe so an all-null group passes)
+    and a collision — ~n^2/2^129, never in practice — raises naming
+    ``op_name`` rather than silently merging distinct values.
 
     Membership is deliberately a FRAME, not a per-group array: a
     degenerate corpus (10^6–10^8 copies of an empty/boilerplate page —
     exactly what this collapse exists for) would put O(dup-factor)
     bytes into one `collect_list` row, an executor-killing skew row.
-    As a frame, expansion is plain joins on rep_id: same linear
-    output, no single-row bound (VERDICT r4 #1). ``groups`` is always
-    materialized eagerly (see `materialize`): every caller fans it out
-    to 2+ consumers and exchange reuse does not fire across them, so
-    an unmaterialized lineage would re-scan and re-hash the corpus per
-    consumer. ``members`` is materialized only when
-    ``materialize_members=True`` (the default): callers that consume
-    the membership frame ONCE — or not at all — pass ``False`` and
-    skip a corpus-sized checkpoint job whose output would be read a
-    single time anyway; the lazy frame's one execution takes the
-    barrier job's place (``df`` is read twice here either way, so a
-    caller with costly input lineage fences it first, as
-    `dedup_keep_docs` does), so total passes are equal and one
-    action + driver gap is saved per call (r15, guide §5
-    "persist only what is reused")."""
+    As a frame, expansion is plain joins on rep_id (VERDICT r4 #1);
+    the slim join is keyed by the uniform hash, so a huge group
+    streams through one join key, never one buffer.
+
+    Barriers: ``fence_reps`` (default) materializes ``reps`` — most
+    callers fan it out to 2+ consumers and exchange reuse does not fire
+    across them — and ``members`` is then built from the checkpoint, so
+    the collapse aggregate runs once. ``fence_members`` materializes
+    the membership frame for callers that read it more than once; a
+    caller that reads it once, or not at all, leaves it lazy and skips
+    a corpus-sized checkpoint job (r15, guide §5 "persist only what is
+    reused"). ``with_cols`` adds per-rep columns before the reps
+    barrier (e.g. a vector norm every consumer reads)."""
+    v = F.col(value_col)
+    h1, h2 = _hash_pair(v)
     hashed = df.select(
-        F.col(id_col).alias("member_id"),
-        F.col(text_col).alias("_text"),
-        F.xxhash64(text_col).alias("_h1"),
-        F.xxhash64(F.lit(_H2_SEED), F.col(text_col)).alias("_h2"),
+        F.col(id_col).alias("member_id"), v, h1.alias("_h1"), h2.alias("_h2")
     )
-    groups = materialize(
+    reps = (
         hashed.groupBy("_h1", "_h2")
         .agg(
             F.min("member_id").alias("rep_id"),
-            F.min("_text").alias("_text"),
-            F.max("_text").alias("_tmax"),
-            # group size, free in this aggregation — consumers that
-            # weight by duplicate count (line/span/boilerplate document
-            # frequency) read it here instead of re-aggregating members
+            F.min(value_col).alias(value_col),
+            F.max(value_col).alias("_vmax"),
             F.count(F.lit(1)).alias("n_members"),
         )
         .withColumn(
-            "_text",
-            F.when(
-                F.col("_text").eqNullSafe(F.col("_tmax")), F.col("_text")
-            ).otherwise(
+            value_col,
+            F.when(v.eqNullSafe(F.col("_vmax")), v).otherwise(
                 F.raise_error(
-                    F.lit(
-                        f"{op_name}: 128-bit text-hash collision on "
-                        "distinct texts"
-                    )
+                    F.lit(f"{op_name}: 128-bit hash collision on distinct values")
                 )
             ),
         )
-        .drop("_tmax")
+        .drop("_vmax")
     )
-    # Slim (3 longs/row) join keyed by the uniform hash — a huge
-    # duplicate group streams through one join key, never one buffer.
+    if with_cols:
+        reps = reps.withColumns(with_cols)
+    if fence_reps:
+        reps = materialize(reps)
     members = (
         hashed.select("member_id", "_h1", "_h2")
-        .join(groups.select("_h1", "_h2", "rep_id"), ["_h1", "_h2"])
+        .join(reps.select("_h1", "_h2", "rep_id"), ["_h1", "_h2"])
         .select("rep_id", "member_id")
     )
-    if materialize_members:
+    if fence_members:
         members = materialize(members)
-    return groups.drop("_h1", "_h2"), members
+    return reps, members
 
 
-def member_side(members: DataFrame, rep_as: str, member_as: str) -> DataFrame:
-    """Rename helper for joining the membership frame onto pair lists."""
-    return members.select(
-        F.col("rep_id").alias(rep_as), F.col("member_id").alias(member_as)
+def _expand_pairs(
+    rep_pairs: DataFrame, members: DataFrame, groups: DataFrame
+) -> DataFrame:
+    """Member pairs (a_id, b_id, *extra), a_id < b_id, from rep pairs
+    (ra, rb, *extra): every member of ra pairs every member of rb and
+    inherits the pair's extra columns (similarities depend only on the
+    value). ``groups`` — (rep_id, n_members, *extra), one row per rep —
+    adds the pairs WITHIN each duplicate group with its extra columns.
+
+    Each group enters as the self pair (rep, rep), so cross and intra
+    pairs share ONE pair of membership joins. The output is quadratic
+    in the dup factor (the pair list is the product), but it streams
+    through the joins — no row ever carries a whole group. The union
+    also keeps Spark's runtime bloom filter out of these joins: its
+    creation side must trace the join key to a selectively filtered
+    scan, and a Union is not traced, whereas a separate intra branch
+    (members ⋈ filtered reps ⋈ members) ships a 1 MiB
+    ``bloom_filter_agg`` inside every task."""
+    extra = [c for c in rep_pairs.columns if c not in ("ra", "rb")]
+    self_pairs = groups.where(F.col("n_members") > 1).select(
+        F.col("rep_id").alias("ra"), F.col("rep_id").alias("rb"), *extra
+    )
+
+    def side(r: str, x: str) -> DataFrame:
+        return members.select(F.col("rep_id").alias(r), F.col("member_id").alias(x))
+
+    return (
+        rep_pairs.unionByName(self_pairs)
+        .join(side("ra", "xa"), "ra")
+        .join(side("rb", "xb"), "rb")
+        .where((F.col("ra") != F.col("rb")) | (F.col("xa") < F.col("xb")))
+        .select(
+            F.least("xa", "xb").alias("a_id"),
+            F.greatest("xa", "xb").alias("b_id"),
+            *extra,
+        )
     )
 
 
-def intra_group_pairs(members: DataFrame) -> DataFrame:
-    """(a_id, b_id) for every pair WITHIN a duplicate group: a self-
-    equi-join on rep_id with a<b. Output is inherently quadratic in
-    the dup factor (the pair list is the product), but it streams
-    through the join — no row ever carries a whole group (the prior
-    in-row pair-array form built all O(g^2) structs inside one row
-    before its explode, ADVICE r4)."""
+def _keep_lowest(
+    df: DataFrame,
+    id_col: str,
+    rep_pairs: DataFrame,
+    members: DataFrame,
+    *,
+    intra: bool = True,
+) -> DataFrame:
+    """The rows of ``df`` kept by the keep-lowest-id rule over linked
+    duplicate groups: a row drops iff a linked row with a smaller id
+    exists. rep_id IS each group's minimum id, so for a rep pair
+    (ra, rb) the members of either side above the OTHER side's rep
+    drop, and with ``intra`` every non-minimum member of a group drops
+    (identical values are linked by definition). Expanded through the
+    membership frame — linear in the dup factor, never a pair list or
+    a per-group array."""
+    sides = rep_pairs.select(
+        F.col("rb").alias("rep_id"), F.col("ra").alias("_min_other")
+    ).unionByName(
+        rep_pairs.select(F.col("ra").alias("rep_id"), F.col("rb").alias("_min_other"))
+    )
+    drops = (
+        sides.join(members, "rep_id")
+        .where(F.col("member_id") > F.col("_min_other"))
+        .select("member_id")
+    )
+    if intra:
+        drops = drops.unionByName(
+            members.where(F.col("member_id") > F.col("rep_id")).select("member_id")
+        )
+    drops = drops.distinct().withColumnRenamed("member_id", id_col)
+    return df.join(drops, id_col, "left_anti")
+
+
+def _melt_bands(bands_df: DataFrame, id_col: str, bands: int) -> DataFrame:
+    """(id, band_0..band_{b-1}) → (id, band_idx, band_hash)."""
+    return bands_df.selectExpr(
+        id_col,
+        "stack({}, {}) as (band_idx, band_hash)".format(
+            bands, ", ".join(f"'{i}', band_{i}" for i in range(bands))
+        ),
+    )
+
+
+def _bucket_pairs(
+    melted: DataFrame, keys: list[str], id_col: str, max_bucket: int
+) -> DataFrame:
+    """Distinct (ra, rb), ra < rb, of ids sharing at least one bucket
+    (``keys``) of 2 to ``max_bucket`` rows — banded LSH's candidate
+    step. Buckets are sized by a window COUNT, never a collect_list
+    array: a degenerate bucket with 10^7 members would build the whole
+    array in one aggregation buffer BEFORE the size filter could drop
+    it; an oversized bucket costs a spilled single-key sort, not
+    executor memory. The filtered slim frame is materialized so the
+    signature pass upstream runs ONCE — Spark's ReuseExchange does not
+    fire across the self-join's two sides (verified on the executed
+    plan). Buckets above ``max_bucket`` (boilerplate) are dropped to
+    bound the quadratic blowup."""
+    w = Window.partitionBy(*keys)
+    inb = materialize(
+        melted.withColumn("_bn", F.count(F.lit(1)).over(w)).where(
+            (F.col("_bn") >= 2) & (F.col("_bn") <= max_bucket)
+        )
+    )
     return (
-        member_side(members, "rep_id", "xa")
-        .join(member_side(members, "rep_id", "xb"), "rep_id")
-        .where(F.col("xa") < F.col("xb"))
-        .select(F.col("xa").alias("a_id"), F.col("xb").alias("b_id"))
+        inb.select(*keys, F.col(id_col).alias("ra"))
+        .join(inb.select(*keys, F.col(id_col).alias("rb")), keys)
+        .where(F.col("ra") < F.col("rb"))
+        .select("ra", "rb")
+        .distinct()
     )
 
 
@@ -393,60 +493,28 @@ def minhash_candidate_pairs(
     (`minhash_dedup_edges`, `dedup_keep_docs`) pass distinct texts
     already.
     """
+    src = df
     if collapse_exact:
-        groups, members = _collapse_exact_texts(
-            df, text_col, id_col, "minhash_candidate_pairs"
+        reps, members = _collapse_exact(
+            df, text_col, id_col, "minhash_candidate_pairs", fence_members=True
         )
-        # the groups checkpoint froze AQE's post-aggregate coalescing
-        # (ONE partition at bench scale) — without re-widening, the
-        # shingle+signature pass below runs as a single task (r15
-        # profile; guide §2.5). No-op on a wide checkpoint.
-        reps = fan_out(groups.select(
-            F.col("rep_id").alias(id_col), F.col("_text").alias(text_col)
-        ))
-        rep_pairs = minhash_candidate_pairs(
-            reps, text_col, id_col, n=n, k=k, bands=bands, max_bucket=max_bucket
-        )
-        cross = (
-            rep_pairs.join(member_side(members, "a_id", "xa"), "a_id")
-            .join(member_side(members, "b_id", "xb"), "b_id")
-            .select(
-                F.least("xa", "xb").alias("a_id"),
-                F.greatest("xa", "xb").alias("b_id"),
-            )
-        )
-        return cross.unionByName(intra_group_pairs(members))
-    b = minhash_bands(df, text_col, id_col, n=n, k=k, bands=bands)
-    melted = b.selectExpr(
-        id_col,
-        "stack({}, {}) as (band_idx, band_hash)".format(
-            bands, ", ".join(f"'{i}', band_{i}" for i in range(bands))
-        ),
+        src = _rep_texts(reps, text_col, id_col)
+    b = minhash_bands(src, text_col, id_col, n=n, k=k, bands=bands)
+    pairs = _bucket_pairs(
+        _melt_bands(b, id_col, bands), ["band_idx", "band_hash"], id_col, max_bucket
     )
-    # Bucket sizing via a window COUNT (never a collect_list array: a
-    # degenerate band bucket with 10^7 members would build the whole
-    # array in one aggregation buffer BEFORE the size filter could
-    # drop it — the same single-row bound the membership-frame rewrite
-    # removed elsewhere); oversized buckets cost a spilled single-key
-    # sort, not executor memory. The filtered slim frame is
-    # materialized so the shingle→signature pass runs ONCE — Spark's
-    # ReuseExchange does not fire across the self-join's two sides
-    # (verified on the executed plan), so without the barrier each
-    # side would recompute the signatures.
-    w = Window.partitionBy("band_idx", "band_hash")
-    inb = materialize(
-        melted.withColumn("_bn", F.count(F.lit(1)).over(w)).where(
-            (F.col("_bn") >= 2) & (F.col("_bn") <= max_bucket)
-        )
-    )
-    pa = inb.select("band_idx", "band_hash", F.col(id_col).alias("a_id"))
-    pb = inb.select("band_idx", "band_hash", F.col(id_col).alias("b_id"))
-    return (
-        pa.join(pb, ["band_idx", "band_hash"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
+    if collapse_exact:
+        return _expand_pairs(pairs, members, reps)
+    return pairs.select(F.col("ra").alias("a_id"), F.col("rb").alias("b_id"))
+
+
+def _rep_texts(reps: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, text) of the collapse's representatives, re-widened: the
+    reps checkpoint froze AQE's post-aggregate coalescing (ONE
+    partition at bench scale) — without `fan_out`, the shingle and
+    signature passes downstream run as a single task (r15 profile;
+    guide §2.5). No-op on a wide checkpoint."""
+    return fan_out(reps.select(F.col("rep_id").alias(id_col), text_col))
 
 
 def minhash_dedup_edges(
@@ -487,21 +555,14 @@ def minhash_dedup_edges(
     (dedup clusters)."""
     # members feeds the star union ONCE — lazy membership skips its
     # checkpoint job (equal passes, one fewer action; r15)
-    groups, members = _collapse_exact_texts(
-        df, text_col, id_col, "minhash_dedup_edges",
-        materialize_members=False,
-    )
-    # re-widen the checkpoint-frozen reps before the signature pass
-    # (see minhash_candidate_pairs; no-op on a wide checkpoint)
-    reps = fan_out(groups.select(
-        F.col("rep_id").alias(id_col), F.col("_text").alias(text_col)
-    ))
+    reps, members = _collapse_exact(df, text_col, id_col, "minhash_dedup_edges")
+    texts = _rep_texts(reps, text_col, id_col)
     rep_pairs = minhash_candidate_pairs(
-        reps, text_col, id_col, n=n, k=k, bands=bands, max_bucket=max_bucket
+        texts, text_col, id_col, n=n, k=k, bands=bands, max_bucket=max_bucket
     )
     if threshold is not None:
         rep_pairs = (
-            jaccard_pairs(reps, rep_pairs, text_col=text_col, id_col=id_col, n=n)
+            jaccard_pairs(texts, rep_pairs, text_col=text_col, id_col=id_col, n=n)
             .where(F.col("jaccard") >= threshold)
             .select("a_id", "b_id")
         )
@@ -568,49 +629,26 @@ def dedup_keep_docs(
     no more than reading a checkpoint of it."""
     if not _is_bare_scan(df):
         df = materialize(df)
-    groups, members = _collapse_exact_texts(df, text_col, id_col, "dedup_keep_docs")
-    # re-widen the checkpoint-frozen reps before the signature and
-    # Jaccard-verify shingle passes (see minhash_candidate_pairs)
-    reps = fan_out(groups.select(
-        F.col("rep_id").alias(id_col), F.col("_text").alias(text_col)
-    ))
-    cand = minhash_candidate_pairs(
-        reps, text_col, id_col, n=n, k=k, bands=bands, max_bucket=max_bucket
+    reps, members = _collapse_exact(
+        df, text_col, id_col, "dedup_keep_docs", fence_members=True
     )
-    # materialized: the drops_a / drops_b branches below each read
-    # `verified`, and ReuseExchange does not fire across them — left
+    # re-widened before the signature and Jaccard-verify shingle passes
+    texts = _rep_texts(reps, text_col, id_col)
+    cand = minhash_candidate_pairs(
+        texts, text_col, id_col, n=n, k=k, bands=bands, max_bucket=max_bucket
+    )
+    # materialized: the drop rule reads `verified` on both sides of
+    # each pair, and ReuseExchange does not fire across them — left
     # lazy, the Jaccard verify (shingle build + set intersect per
     # candidate pair, the most expensive part of this tail) ran once
-    # per branch. The verified pair list is tiny relative to the
-    # corpus, so the barrier costs one slim checkpoint (r14).
+    # per side. The verified pair list is tiny relative to the corpus,
+    # so the barrier costs one slim checkpoint (r14).
     verified = materialize(
-        jaccard_pairs(reps, cand, text_col=text_col, id_col=id_col, n=n).where(
-            F.col("jaccard") >= threshold
-        )
+        jaccard_pairs(texts, cand, text_col=text_col, id_col=id_col, n=n)
+        .where(F.col("jaccard") >= threshold)
+        .select(F.col("a_id").alias("ra"), F.col("b_id").alias("rb"))
     )
-    # rep_id IS each group's minimum id, so for a verified rep pair
-    # (A, B): B's members above A's rep id drop, and vice versa —
-    # expanded by membership joins, never a per-group array
-    drops_b = (
-        verified.select(
-            F.col("b_id").alias("rep_id"), F.col("a_id").alias("_min_other")
-        )
-        .join(members, "rep_id")
-        .where(F.col("member_id") > F.col("_min_other"))
-    )
-    drops_a = (
-        verified.select(
-            F.col("a_id").alias("rep_id"), F.col("b_id").alias("_min_other")
-        )
-        .join(members, "rep_id")
-        .where(F.col("member_id") > F.col("_min_other"))
-    )
-    drops = drops_a.select("member_id").unionByName(drops_b.select("member_id"))
-    if threshold <= 1.0:
-        intra = members.where(F.col("member_id") > F.col("rep_id"))
-        drops = drops.unionByName(intra.select("member_id"))
-    drops = drops.distinct().withColumnRenamed("member_id", id_col)
-    return df.join(drops, id_col, "left_anti")
+    return _keep_lowest(df, id_col, verified, members, intra=threshold <= 1.0)
 
 
 # Published fuzzy-dedup recipes, wired through the existing ladder by
@@ -1073,37 +1111,25 @@ def simhash_near_dups(
     the end via membership joins — linear in the output, with no
     per-group array held in a single row.
     """
-    groups, members = _collapse_exact_texts(df, text_col, id_col, "simhash_near_dups")
+    reps, members = _collapse_exact(
+        df, text_col, id_col, "simhash_near_dups", fence_members=True
+    )
     # materialized: sig feeds both self-join sides (and the bucket
     # census when max_bucket is set), ReuseExchange does not fire
     # across them, and the SimHash UDF is the expensive stage — the
     # barrier is what makes "the UDF runs once per distinct text"
-    # true (two longs per distinct text; review r5)
+    # true (two longs per distinct text; review r5). The reps are
+    # re-widened so the UDF runs wide, not as one task.
     sig = materialize(
-        with_simhash(
-            # re-widen the checkpoint-frozen reps so the SimHash UDF
-            # runs wide, not as one task (see minhash_candidate_pairs)
-            fan_out(
-                groups.select("rep_id", F.col("_text").alias(text_col))
-            ),
-            text_col,
-        ).select("rep_id", "simhash")
+        with_simhash(_rep_texts(reps, text_col, "rep_id"), text_col).select(
+            "rep_id", "simhash"
+        )
     )
     rep_pairs = banded_hamming_rep_pairs(
         sig, "simhash", max_hamming, max_bucket=max_bucket
     )
-    # cross-group expansion: every member pair inherits its reps'
-    # distance (signatures depend only on the text)
-    cross = (
-        rep_pairs.join(member_side(members, "ra", "xa"), "ra")
-        .join(member_side(members, "rb", "xb"), "rb")
-        .select(
-            F.least("xa", "xb").alias("a_id"),
-            F.greatest("xa", "xb").alias("b_id"),
-            "hamming",
-        )
+    # every member pair inherits its reps' distance (signatures depend
+    # only on the text); exact duplicates pair at distance 0
+    return _expand_pairs(
+        rep_pairs, members, reps.withColumn("hamming", F.lit(0))
     )
-    intra = intra_group_pairs(members).withColumn(
-        "hamming", F.lit(0).cast("int")
-    )
-    return cross.unionByName(intra)

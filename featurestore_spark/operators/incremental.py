@@ -18,7 +18,7 @@ the whole corpus per batch. Instead:
    hash so verbatim duplicates drop INDEPENDENTLY of any bucket cap.
 2. `dedup_against_index(batch, index, base=…, threshold=…)` drops
    batch docs that are near-dups of indexed texts. The batch is
-   exact-collapsed first (`_collapse_exact_texts`), so all band and
+   exact-collapsed first (`dedup._collapse_exact`), so all band and
    verify work is per DISTINCT batch text; the corpus is touched only
    by the verify join, and only for the candidate rep ids — a
    semi-join that prunes to a tiny fraction of the corpus (predicate
@@ -42,13 +42,13 @@ import functools
 import re
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from featurestore_spark.io.fs import HadoopFS
 from featurestore_spark.operators.dedup import (
-    _H2_SEED,
-    _collapse_exact_texts,
+    _collapse_exact,
+    _melt_bands,
     hash128,
     minhash_bands,
     ngram_jaccard,
@@ -81,16 +81,6 @@ def _require_hash128(index: DataFrame, col: str, op_name: str) -> None:
             "version — the corpus scan is the same cost as the "
             "original build."
         )
-
-
-def _melt_bands(bands_df: DataFrame, id_col: str, bands: int) -> DataFrame:
-    """(id, band_0..band_{b-1}) → (id, band_idx, band_hash)."""
-    return bands_df.selectExpr(
-        id_col,
-        "stack({}, {}) as (band_idx, band_hash)".format(
-            bands, ", ".join(f"'{i}', band_{i}" for i in range(bands))
-        ),
-    )
 
 
 def _drop_oversized_buckets(
@@ -150,7 +140,7 @@ def minhash_band_index(
     band_hash, text_h1, text_h2), where doc_id is each exact-duplicate
     group's minimum id and text_h1/text_h2 the group's verified
     128-bit scalar text hash (two seeded xxhash64 longs — the same
-    scheme as `dedup._collapse_exact_texts`). Persist this (parquet;
+    scheme as `dedup._collapse_exact`). Persist this (parquet;
     bucket by band_hash for co-located batch joins) — it is the only
     corpus-derived state a future batch needs. The hash columns let
     `dedup_against_index` drop verbatim duplicates of indexed texts
@@ -159,33 +149,12 @@ def minhash_band_index(
     Lazy on purpose (unlike the dedup operators' eager collapse): the
     index is built to be WRITTEN, a single linear consumer, so no
     materialization barrier is needed."""
-    hashed = df.select(
-        F.col(id_col).alias("member_id"),
-        F.col(text_col).alias("_text"),
-        F.xxhash64(text_col).alias("text_h1"),
-        F.xxhash64(F.lit(_H2_SEED), F.col(text_col)).alias("text_h2"),
+    reps, _ = _collapse_exact(
+        df, text_col, id_col, "minhash_band_index", fence_reps=False
     )
-    reps = (
-        hashed.groupBy("text_h1", "text_h2")
-        .agg(
-            F.min("member_id").alias(id_col),
-            F.min("_text").alias("_text"),
-            F.max("_text").alias("_tmax"),
-        )
-        .withColumn(
-            "_text",
-            F.when(
-                F.col("_text").eqNullSafe(F.col("_tmax")), F.col("_text")
-            ).otherwise(
-                F.raise_error(
-                    F.lit(
-                        "minhash_band_index: 128-bit text-hash collision "
-                        "on distinct texts"
-                    )
-                )
-            ),
-        )
-        .select(id_col, F.col("_text").alias(text_col), "text_h1", "text_h2")
+    reps = reps.select(
+        F.col("rep_id").alias(id_col), text_col,
+        F.col("_h1").alias("text_h1"), F.col("_h2").alias("text_h2"),
     )
     b = minhash_bands(
         reps.select(id_col, text_col), text_col, id_col, n=n, k=k, bands=bands
@@ -293,14 +262,12 @@ def dedup_against_index(
             "disables both directions — pass band-only mode "
             "(threshold=None) if that is intended"
         )
-    # members feeds the single drops-expansion join — lazy (r15)
-    groups, members = _collapse_exact_texts(
-        batch, text_col, id_col, "dedup_against_index",
-        materialize_members=False,
+    reps, members = _collapse_exact(
+        batch, text_col, id_col, "dedup_against_index"
     )
-    reps = groups.select(F.col("rep_id").alias(id_col), F.col("_text").alias(text_col))
+    texts = reps.select(F.col("rep_id").alias(id_col), text_col)
     melt_q = _melt_bands(
-        minhash_bands(reps, text_col, id_col, n=n, k=k, bands=bands), id_col, bands
+        minhash_bands(texts, text_col, id_col, n=n, k=k, bands=bands), id_col, bands
     )
     idx = _drop_oversized_buckets(
         index, ["band_idx", "band_hash"], max_bucket
@@ -308,31 +275,19 @@ def dedup_against_index(
     cand = melt_q.join(idx, ["band_idx", "band_hash"]).select(
         F.col(id_col).alias("_q_id"), "_base_id"
     )
-    if threshold is None:
-        dropped_reps = cand.select(F.col("_q_id").alias("rep_id")).distinct()
-    else:
-        # Materialized: the pair list feeds BOTH the base semi-join and
-        # the verify join — without the barrier the batch-bands ×
-        # index join (the expensive subtree) runs once per consumer.
-        pairs = materialize(cand.distinct())
-        # Verify join reads only the candidate base ids' texts — keep
-        # the base scan slim (id + text) so column pruning reaches the
-        # corpus parquet. `_present` marks rows actually found in
-        # `base`; its absence after the LEFT join means the index
-        # names an id the corpus lookup no longer has — an
-        # index/base consistency bug that must fail, not quietly
-        # keep the near-duplicate.
+    verify = None
+    if threshold is not None:
+        # Verify join reads only the candidate base ids' texts — the
+        # base scan stays slim (id + text) so column pruning reaches
+        # the corpus parquet.
         sh_q = reps.select(
-            F.col(id_col).alias("_q_id"), shingles(text_col, n).alias("_sh_q")
+            F.col("rep_id").alias("_q_id"), shingles(text_col, n).alias("_sh_q")
         )
         sh_b = base.select(
             F.col(id_col).alias("_base_id"), shingles(text_col, n).alias("_sh_b")
-        ).join(pairs.select("_base_id").distinct(), "_base_id").withColumn(
-            "_present", F.lit(True)
         )
         if verify_measure == "jaccard":
-            measure = ngram_jaccard(F.col("_sh_q"), F.col("_sh_b"))
-            hit = measure >= threshold
+            hit = ngram_jaccard(F.col("_sh_q"), F.col("_sh_b")) >= threshold
         else:
             inter = F.size(
                 F.array_intersect(F.col("_sh_q"), F.col("_sh_b"))
@@ -349,34 +304,77 @@ def dedup_against_index(
                 hit = hit | (c_q >= t_q)
             if t_b is not None:
                 hit = hit | (c_b >= t_b)
+        verify = (sh_q, sh_b, hit)
+    return _drop_against_index(
+        batch, id_col, "dedup_against_index", reps, members, cand, verify,
+        index, ("text_h1", "text_h2"),
+    )
+
+
+def _drop_against_index(
+    batch: DataFrame,
+    id_col: str,
+    op_name: str,
+    reps: DataFrame,
+    members: DataFrame,
+    cand: DataFrame,
+    verify: tuple[DataFrame, DataFrame, Column] | None,
+    index: DataFrame,
+    hash_cols: tuple[str, str],
+) -> DataFrame:
+    """The drop tail shared by the text and embedding against-index
+    operators; only the similarity measure differs per side. Returns
+    the batch rows kept.
+
+    ``cand`` holds (_q_id, _base_id) band/code collisions of batch reps
+    with index entries. Band-only mode (``verify=None``) drops every
+    colliding rep. Verified mode passes (rep features keyed _q_id, base
+    features keyed _base_id, hit Column over both): the candidate list
+    is materialized — it feeds BOTH the base semi-join and the verify
+    join, and without the barrier the batch × index join (the
+    expensive subtree) runs once per consumer — and the base lookup is
+    an id semi-join on it, so only candidate ids are read from `base`.
+    `_present` marks ids actually found there; its absence after the
+    LEFT join means the index names an id the corpus no longer has —
+    an index/base consistency bug that raises, not quietly keeps the
+    near-duplicate.
+
+    In both modes reps whose verified 128-bit hash (``reps``' _h1/_h2)
+    is in the index's ``hash_cols`` drop unconditionally, independent
+    of any bucket cap (skipped for an index without those columns).
+    Dropped reps expand to members through the membership frame."""
+    if verify is None:
+        dropped = cand.select(F.col("_q_id").alias("rep_id")).distinct()
+    else:
+        q_side, b_side, hit = verify
+        pairs = materialize(cand.distinct())
+        b_side = b_side.join(
+            pairs.select("_base_id").distinct(), "_base_id"
+        ).withColumn("_present", F.lit(True))
         checked = F.when(F.col("_present").isNotNull(), hit).otherwise(
             F.raise_error(
                 F.lit(
-                    "dedup_against_index: index names a candidate id "
-                    "missing from `base` — index and base are out of sync"
+                    f"{op_name}: index names a candidate id missing from "
+                    "`base` — index and base are out of sync"
                 )
             )
         )
-        verified = (
-            pairs.join(sh_q, "_q_id")
-            .join(sh_b, "_base_id", "left")
+        dropped = (
+            pairs.join(q_side, "_q_id")
+            .join(b_side, "_base_id", "left")
             .where(checked)
+            .select(F.col("_q_id").alias("rep_id"))
+            .distinct()
         )
-        dropped_reps = verified.select(F.col("_q_id").alias("rep_id")).distinct()
-    if {"text_h1", "text_h2"} <= set(index.columns):
-        rep_h = reps.select(
-            F.col(id_col).alias("rep_id"),
-            F.xxhash64(text_col).alias("text_h1"),
-            F.xxhash64(F.lit(_H2_SEED), F.col(text_col)).alias("text_h2"),
-        )
-        exact_reps = rep_h.join(
-            index.select("text_h1", "text_h2"),
-            ["text_h1", "text_h2"],
+    if set(hash_cols) <= set(index.columns):
+        exact = reps.join(
+            index.select(*(F.col(c).alias(h) for c, h in zip(hash_cols, ("_h1", "_h2")))),
+            ["_h1", "_h2"],
             "left_semi",
         ).select("rep_id")
-        dropped_reps = dropped_reps.unionByName(exact_reps).distinct()
+        dropped = dropped.unionByName(exact).distinct()
     drops = (
-        members.join(dropped_reps, "rep_id")
+        members.join(dropped, "rep_id")
         .select(F.col("member_id").alias(id_col))
         .distinct()
     )
@@ -405,24 +403,23 @@ def srp_code_index(
     it without re-reading the corpus's embeddings. Codes use the
     seeded integer-hyperplane SRP family of
     `similarity.srp_band_codes` (exact arithmetic,
-    engine-reproducible); the collapse is
-    `similarity.collapse_exact_vectors` — one shared implementation
-    across the near-dup and incremental operators."""
+    engine-reproducible); the collapse is `dedup._collapse_exact` —
+    one implementation across the near-dup and incremental
+    operators."""
     from featurestore_spark.operators.similarity import (
-        collapse_exact_vectors,
+        _vectors,
         srp_band_codes,
         srp_hyperplanes,
-        vector_hash_frames,
     )
 
-    hashed = vector_hash_frames(df, id_col, vec_col)
+    base = _vectors(df, id_col, vec_col)
     if dim is None:
-        row = hashed.select(F.size("v")).first()
+        row = base.select(F.size("v")).first()
         dim = row[0] if row is not None else 1
-    reps = collapse_exact_vectors(hashed, "srp_code_index", rep_col=id_col)
+    reps, _ = _collapse_exact(base, "v", id_col, "srp_code_index", fence_reps=False)
     hp = srp_hyperplanes(dim, bits * bands, seed)
     coded = reps.select(
-        id_col,
+        F.col("rep_id").alias(id_col),
         F.col("_h1").alias("vec_h1"),
         F.col("_h2").alias("vec_h2"),
         srp_band_codes(F.col("v"), hp, bits, bands).alias("_codes"),
@@ -463,21 +460,22 @@ def dedup_embeddings_against_index(
     In both modes, vectors identical to an indexed vector drop
     unconditionally via the index's `vec_h1/vec_h2` columns,
     independent of `max_bucket` (skipped if a foreign index lacks
-    them). Same scale shape as the text side: batch collapsed to
-    DISTINCT vectors first (`similarity.collapse_exact_vectors`),
+    them). Same scale shape and drop tail as the text side: batch
+    collapsed to DISTINCT vectors first (`dedup._collapse_exact`),
     degenerate index code buckets dropped by a hash aggregate +
     anti-join (`max_bucket=None` for a pre-pruned index), drops
     expanded through the membership frame. Rows with NULL embeddings
     are always kept (no similarity to anything — the
-    `embedding_near_dups` contract)."""
+    `embedding_near_dups` contract), and so are all-zero embeddings
+    in verified mode (their cosine is NULL)."""
     from featurestore_spark.operators.similarity import (
+        _cosine_of,
+        _vectors,
         as_double_array,
-        collapse_exact_vectors,
         dot,
         norm,
         srp_band_codes,
         srp_hyperplanes,
-        vector_hash_frames,
     )
 
     if threshold is not None and base is None:
@@ -485,91 +483,45 @@ def dedup_embeddings_against_index(
             "dedup_embeddings_against_index: verified mode (threshold set) "
             "requires `base` (the corpus embeddings) for the cosine verify"
         )
-    hashed = vector_hash_frames(batch, id_col, vec_col)
+    vecs = _vectors(batch, id_col, vec_col)
     if dim is None:
-        row = hashed.select(F.size("v")).first()
+        row = vecs.select(F.size("v")).first()
         if row is None:
             return batch  # empty/all-null batch: nothing can collide
         dim = row[0]
-    reps = materialize(
-        collapse_exact_vectors(hashed, "dedup_embeddings_against_index",
-                               rep_col=id_col)
+    # reps has three consumers and is materialized; members feeds the
+    # single drops-expansion join — lazy, as on the text side
+    reps, members = _collapse_exact(
+        vecs, "v", id_col, "dedup_embeddings_against_index"
     )
-    # members feeds the single drops-expansion join — lazy, as on the
-    # text side; reps has three consumers and stays materialized
-    members = (
-        hashed.select("member_id", "_h1", "_h2")
-        .join(reps.select("_h1", "_h2", F.col(id_col).alias("rep_id")),
-              ["_h1", "_h2"])
-        .select("rep_id", "member_id")
-    )
-    rep_h = reps.select(
-        F.col(id_col).alias("rep_id"),
-        F.col("_h1").alias("vec_h1"),
-        F.col("_h2").alias("vec_h2"),
-    )
-    reps = reps.drop("_h1", "_h2")
     hp = srp_hyperplanes(dim, bits * bands, seed)
     melt_q = reps.select(
-        id_col, srp_band_codes(F.col("v"), hp, bits, bands).alias("_codes")
-    ).select(id_col, F.posexplode("_codes").alias("band_idx", "code"))
+        "rep_id", srp_band_codes(F.col("v"), hp, bits, bands).alias("_codes")
+    ).select("rep_id", F.posexplode("_codes").alias("band_idx", "code"))
     idx = _drop_oversized_buckets(index, ["band_idx", "code"], max_bucket).select(
         F.col(id_col).alias("_base_id"), "band_idx", "code"
     )
     cand = melt_q.join(idx, ["band_idx", "code"]).select(
-        F.col(id_col).alias("_q_id"), "_base_id"
+        F.col("rep_id").alias("_q_id"), "_base_id"
     )
-    if threshold is None:
-        dropped_reps = cand.select(F.col("_q_id").alias("rep_id")).distinct()
-    else:
-        pairs = materialize(cand.distinct())
-        bvec = (
-            base.select(
-                F.col(id_col).alias("_base_id"),
-                as_double_array(vec_col).alias("bv"),
-            )
-            .join(pairs.select("_base_id").distinct(), "_base_id")
-            .withColumn("_bnorm", norm(F.col("bv")))
-            .withColumn("_present", F.lit(True))
-        )
+    verify = None
+    if threshold is not None:
         qvec = reps.select(
-            F.col(id_col).alias("_q_id"),
+            F.col("rep_id").alias("_q_id"),
             F.col("v").alias("qv"),
             norm(F.col("v")).alias("_qn"),
         )
-        sim = F.when(
-            F.col("_present").isNotNull(),
-            F.round(
-                dot(F.col("qv"), F.col("bv")) / (F.col("_qn") * F.col("_bnorm")),
-                6,
-            ),
-        ).otherwise(
-            F.raise_error(
-                F.lit(
-                    "dedup_embeddings_against_index: index names a candidate "
-                    "id missing from `base` — index and base are out of sync"
-                )
-            )
+        bvec = base.select(
+            F.col(id_col).alias("_base_id"),
+            as_double_array(vec_col).alias("bv"),
         )
-        verified = (
-            pairs.join(qvec, "_q_id")
-            .join(bvec, "_base_id", "left")
-            .where(sim >= threshold)
-        )
-        dropped_reps = verified.select(F.col("_q_id").alias("rep_id")).distinct()
-    if {"vec_h1", "vec_h2"} <= set(index.columns):
-        exact_reps = rep_h.join(
-            index.select("vec_h1", "vec_h2"),
-            ["vec_h1", "vec_h2"],
-            "left_semi",
-        ).select("rep_id")
-        dropped_reps = dropped_reps.unionByName(exact_reps).distinct()
-    drops = (
-        members.join(dropped_reps, "rep_id")
-        .select(F.col("member_id").alias(id_col))
-        .distinct()
+        bv = F.col("bv")
+        sim = _cosine_of(dot(F.col("qv"), bv), F.col("_qn"), norm(bv))
+        verify = (qvec, bvec, sim >= threshold)
+    return _drop_against_index(
+        batch, id_col, "dedup_embeddings_against_index", reps, members, cand,
+        verify, index, ("vec_h1", "vec_h2"),
     )
-    return batch.join(drops, id_col, "left_anti")
 
 
 # -- the `batch=<id>` state protocol behind every foreachBatch wrapper ---------
@@ -620,7 +572,7 @@ def _guard_restart(spark, root: str, batch_id: int, op_name: str) -> None:
                default=batch_id)
     if head > batch_id:
         raise RuntimeError(
-            f"{op_name}: kept root {root!r} already contains "
+            f"{op_name}: state root {root!r} already contains "
             f"batch={head} > current batch_id={batch_id} — the stream "
             "was restarted with a fresh checkpoint against existing state "
             "roots; reuse the original checkpointLocation or point at "
@@ -1016,12 +968,8 @@ def line_frequency_index(
     counts. Counting shuffles are narrow (hash + weight, no line
     text) with map-side partial aggregation. Empty normalized lines
     are excluded (never counted, never dropped)."""
-    # membership frame DISCARDED — lazy skips its checkpoint job (r15)
-    reps, _ = _collapse_exact_texts(
-        df.select(id_col, text_col), text_col, id_col,
-        "line_frequency_index", materialize_members=False,
-    )
-    line = F.explode(F.split(F.col("_text"), delimiter)).alias("_line")
+    reps, _ = _collapse_exact(df, text_col, id_col, "line_frequency_index")
+    line = F.explode(F.split(F.col(text_col), delimiter)).alias("_line")
     norm = (
         F.lower(F.trim(F.col("_line"))) if normalize else F.col("_line")
     )
@@ -1186,13 +1134,9 @@ def span_window_index(
         _positional_gram_hashes,
     )
 
-    # membership frame DISCARDED — lazy skips its checkpoint job (r15)
-    reps, _ = _collapse_exact_texts(
-        df.select(id_col, text_col), text_col, id_col,
-        "span_window_index", materialize_members=False,
-    )
+    reps, _ = _collapse_exact(df, text_col, id_col, "span_window_index")
     unit = reps.select(
-        F.col("rep_id").alias("_uid"), F.col("_text").alias("_utext")
+        F.col("rep_id").alias("_uid"), F.col(text_col).alias("_utext")
     )
     weights = reps.select(
         F.col("rep_id").alias("_uid"), F.col("n_members").alias("_w")
@@ -1221,70 +1165,23 @@ def remove_spans_against_index(
     """Shared-span removal of an ingestion batch against a persisted
     `span_window_index`: a window is over-frequent when its corpus
     frequency plus this batch's (`include_batch=True`) reaches
-    `min_df`; covered spans are removed exactly as in
-    `curation.remove_shared_spans` (same output schema and interval
-    machinery). Equals full-corpus `remove_shared_spans` restricted to
-    the batch rows — test-asserted."""
+    `min_df`. Equals full-corpus `remove_shared_spans` restricted to
+    the batch rows — test-asserted. Same output schema and scale shape
+    as `remove_shared_spans` (this is a thin wrapper passing the index
+    through)."""
+    from featurestore_spark.operators.curation import remove_shared_spans
+
     _require_hash128(index, "window_hash", "remove_spans_against_index")
-    from featurestore_spark.operators.curation import (
-        _apply_span_removal,
-        _merged_interval_spans,
-        _positional_gram_hashes,
-        _should_collapse,
+    return remove_shared_spans(
+        batch,
+        text_col,
+        id_col,
+        n=n,
+        min_df=min_df,
+        collapse_exact=collapse_exact,
+        index=index,
+        include_batch=include_batch,
     )
-    from featurestore_spark.operators.dedup import _collapse_exact_texts
-
-    collapse_exact = _should_collapse(batch, text_col, collapse_exact)
-    if collapse_exact:
-        # members feeds _apply_span_removal's attach join ONCE — lazy
-        reps, members = _collapse_exact_texts(
-            batch.select(id_col, text_col),
-            text_col,
-            id_col,
-            "remove_spans_against_index",
-            materialize_members=False,
-        )
-        unit = reps.select(
-            F.col("rep_id").alias("_uid"), F.col("_text").alias("_utext")
-        )
-        weights = reps.select(
-            F.col("rep_id").alias("_uid"), F.col("n_members").alias("_w")
-        )
-    else:
-        unit = batch.select(
-            F.col(id_col).alias("_uid"), F.col(text_col).alias("_utext")
-        )
-        weights = None
-        members = None
-
-    grams = _positional_gram_hashes(unit, n)
-    per_unit = grams.select("_uid", "_gh").distinct()
-    batch_freq = (
-        per_unit.join(weights, "_uid").groupBy("_gh").agg(F.sum("_w").alias("_bf"))
-        if collapse_exact
-        else per_unit.groupBy("_gh").agg(F.count(F.lit(1)).alias("_bf"))
-    )
-    idx = index.select(
-        F.col("window_hash").alias("_gh"),
-        F.col("doc_freq").cast("long").alias("_if"),
-    )
-    if include_batch:
-        total = batch_freq.join(idx, "_gh", "left").select(
-            "_gh",
-            (F.col("_bf") + F.coalesce(F.col("_if"), F.lit(0))).alias("_df"),
-        )
-    else:
-        total = (
-            per_unit.select("_gh")
-            .distinct()
-            .join(idx, "_gh", "left")
-            .select("_gh", F.coalesce(F.col("_if"), F.lit(0)).alias("_df"))
-        )
-    frequent = materialize(total.where(F.col("_df") >= min_df).select("_gh"))
-    spans = _merged_interval_spans(
-        grams.join(frequent, "_gh", "left_semi"), n
-    )
-    return _apply_span_removal(batch, spans, members, text_col, id_col)
 
 
 def extend_span_index(

@@ -258,44 +258,40 @@ def _media_rep_pairs(
     id_col: str,
     max_hamming: int,
     max_bucket: int | None,
-) -> tuple[DataFrame, DataFrame]:
+    op_name: str,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared core of the media near-dup family: collapse
-    byte-identical payloads on the md5 digest, byte-dhash once per
-    distinct payload, pigeonhole-block. Returns (rep_pairs, members):
+    byte-identical payloads (`dedup._collapse_exact`: verified 128-bit
+    hash, minimum id as representative), byte-dhash once per distinct
+    payload, pigeonhole-block. Returns (rep_pairs, members, sig):
     rep_pairs = (ra, rb, hamming) over representatives, members =
-    (rep_id, member_id) with the representative mapping to itself."""
-    from featurestore_spark.operators.dedup import banded_hamming_rep_pairs
+    (rep_id, member_id) with the representative mapping to itself,
+    sig = (rep_id, byte_dhash, n_members) per representative."""
+    from featurestore_spark.operators.dedup import (
+        _collapse_exact,
+        banded_hamming_rep_pairs,
+    )
     from featurestore_spark.operators.materialize import materialize
 
-    c = F.col(binary_col)
-    hashed = df.where(c.isNotNull()).select(
-        F.col(id_col).alias("_mid"),
-        F.md5(c).alias("_md5"),
-        c.alias("_payload"),
-    )
-    groups = hashed.groupBy("_md5").agg(
-        F.min("_mid").alias("rep_id"),
-        F.first("_payload").alias("_payload"),
-    )
-    # membership frame (multiple consumers) — materialized so the md5
-    # groupBy runs once
-    members = materialize(
-        hashed.select(F.col("_md5"), F.col("_mid").alias("member_id"))
-        .join(groups.select("_md5", "rep_id"), "_md5")
-        .select("rep_id", "member_id")
+    # the membership frame has several consumers — materialized; the
+    # reps stay lazy (the signature checkpoint below is their one
+    # other reader)
+    reps, members = _collapse_exact(
+        df.where(F.col(binary_col).isNotNull()), binary_col, id_col, op_name,
+        fence_reps=False, fence_members=True,
     )
     # materialized for the same reason as simhash_near_dups: the
     # signature feeds both self-join sides, and the UDF must run once
     # per distinct payload
     sig = materialize(
-        with_byte_dhash(groups, "_payload", "byte_dhash").select(
-            "rep_id", "byte_dhash"
+        with_byte_dhash(reps, binary_col, "byte_dhash").select(
+            "rep_id", "byte_dhash", "n_members"
         )
     )
     rep_pairs = banded_hamming_rep_pairs(
         sig, "byte_dhash", max_hamming, max_bucket=max_bucket
     )
-    return rep_pairs, members
+    return rep_pairs, members, sig
 
 
 def media_near_dups(
@@ -312,38 +308,20 @@ def media_near_dups(
     ``max_hamming``. Returns (a_id, b_id, hamming), a_id < b_id.
 
     Scale shape mirrors the text path exactly: byte-identical
-    payloads are collapsed FIRST (groupBy on the md5 string; one
-    representative payload per distinct digest rides the exchange —
-    map-side combine drops the duplicate copies before the shuffle,
-    same convention as `_collapse_exact_texts` shipping min(_text) —
-    and the dhash UDF runs once per distinct payload), the block
-    self-join is
-    quadratic only in distinct-payload bucket sizes
-    (`dedup.banded_hamming_rep_pairs`, ``max_bucket`` guards
-    degenerate blocks), and duplicate groups re-expand at the end via
-    membership joins; exact-duplicate (intra-group) pairs are
-    emitted unconditionally at hamming 0."""
-    from featurestore_spark.operators.dedup import (
-        intra_group_pairs,
-        member_side,
-    )
+    payloads are collapsed FIRST (`dedup._collapse_exact` on the
+    payload's 128-bit hash; map-side combine drops the duplicate
+    copies before the shuffle, and the dhash UDF runs once per
+    distinct payload), the block self-join is quadratic only in
+    distinct-payload bucket sizes (`dedup.banded_hamming_rep_pairs`,
+    ``max_bucket`` guards degenerate blocks), and duplicate groups
+    re-expand at the end via membership joins; exact-duplicate
+    (intra-group) pairs are emitted unconditionally at hamming 0."""
+    from featurestore_spark.operators.dedup import _expand_pairs
 
-    rep_pairs, members = _media_rep_pairs(
-        df, binary_col, id_col, max_hamming, max_bucket
+    rep_pairs, members, sig = _media_rep_pairs(
+        df, binary_col, id_col, max_hamming, max_bucket, "media_near_dups"
     )
-    cross = (
-        rep_pairs.join(member_side(members, "ra", "xa"), "ra")
-        .join(member_side(members, "rb", "xb"), "rb")
-        .select(
-            F.least("xa", "xb").alias("a_id"),
-            F.greatest("xa", "xb").alias("b_id"),
-            "hamming",
-        )
-    )
-    intra = intra_group_pairs(members).withColumn(
-        "hamming", F.lit(0).cast("int")
-    )
-    return cross.unionByName(intra)
+    return _expand_pairs(rep_pairs, members, sig.withColumn("hamming", F.lit(0)))
 
 
 def dedup_media_docs(
@@ -358,51 +336,23 @@ def dedup_media_docs(
     payloads: drop every row whose payload is byte-identical OR
     byte-dhash-near (within ``max_hamming``) to a LOWER-id row's,
     keep everything else. Returns the kept rows of `df` (all
-    columns). Same keep-lowest-id rule as the text ladder: a doc
-    drops when ANY verified pair links it to a smaller id, so chains
-    collapse toward their minimum without an explicit
-    connected-components pass. NULL payloads are kept (nothing to
-    compare; drop them upstream if unwanted).
+    columns). Same keep-lowest-id rule as the text ladder
+    (`dedup._keep_lowest`): a doc drops when ANY verified pair links
+    it to a smaller id, so chains collapse toward their minimum
+    without an explicit connected-components pass. NULL payloads are
+    kept (nothing to compare; drop them upstream if unwanted).
 
     Unlike `media_near_dups`, this never materializes the intra-group
     pair product: exact-duplicate drops come straight off the
     membership frame (every member above its group's rep — LINEAR in
     the dup factor; web image corpora are dominated by re-hosted
-    byte-identical files, where the pair list would be quadratic),
-    and cross-group drops expand the rep pairs through membership
-    with the same member > min-other rule as `dedup_keep_docs`."""
-    rep_pairs, members = _media_rep_pairs(
-        df, binary_col, id_col, max_hamming, max_bucket
+    byte-identical files, where the pair list would be quadratic)."""
+    from featurestore_spark.operators.dedup import _keep_lowest
+
+    rep_pairs, members, _ = _media_rep_pairs(
+        df, binary_col, id_col, max_hamming, max_bucket, "dedup_media_docs"
     )
-    # rep_id IS each group's minimum id, so for a verified rep pair
-    # (ra < rb): rb's members above ra drop, and ra's members above
-    # rb drop (keep-lowest-id across the linked groups)
-    drops_b = (
-        rep_pairs.select(
-            F.col("rb").alias("rep_id"), F.col("ra").alias("_min_other")
-        )
-        .join(members, "rep_id")
-        .where(F.col("member_id") > F.col("_min_other"))
-        .select("member_id")
-    )
-    drops_a = (
-        rep_pairs.select(
-            F.col("ra").alias("rep_id"), F.col("rb").alias("_min_other")
-        )
-        .join(members, "rep_id")
-        .where(F.col("member_id") > F.col("_min_other"))
-        .select("member_id")
-    )
-    intra = members.where(F.col("member_id") > F.col("rep_id")).select(
-        "member_id"
-    )
-    drops = (
-        drops_a.unionByName(drops_b)
-        .unionByName(intra)
-        .distinct()
-        .withColumnRenamed("member_id", id_col)
-    )
-    return df.join(drops, id_col, "left_anti")
+    return _keep_lowest(df, id_col, rep_pairs, members)
 
 
 def parse_gif_frames(payload: bytes | None, max_frames: int = 64):

@@ -32,16 +32,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from featurestore_spark.operators.dedup import member_side
+from featurestore_spark.operators.dedup import _collapse_exact
 from featurestore_spark.operators.materialize import materialize
 from featurestore_spark.operators.similarity import (
+    _cosine_of,
+    _vectors,
     as_double_array,
     assign_to_centroids,
-    collapse_exact_vectors,
     dot,
     norm,
     sign_bucket,
-    vector_hash_frames,
 )
 
 
@@ -487,18 +487,11 @@ def semantic_dedup(
     ~n_distinct/k) that is the algorithm's intended n²/k product. For
     corpora where distinct-vector clusters are still huge, raise k
     (more, smaller clusters), which is also what recall wants."""
-    hashed = vector_hash_frames(df, id_col, vec_col)
-    reps = materialize(
-        collapse_exact_vectors(hashed, "semantic_dedup").withColumn(
-            "_nrm", norm(F.col("v"))
-        )
-    )
     # membership feeds exactly ONE consumer (the final keep join) — no
-    # fan-out, so unlike embedding_near_dups it is NOT materialized
-    members = (
-        hashed.select("member_id", "_h1", "_h2")
-        .join(reps.select("_h1", "_h2", "rep_id"), ["_h1", "_h2"])
-        .select("rep_id", "member_id")
+    # fan-out, so unlike embedding_near_dups it stays lazy
+    reps, members = _collapse_exact(
+        _vectors(df, id_col, vec_col), "v", id_col, "semantic_dedup",
+        with_cols={"_nrm": norm(F.col("v"))},
     )
     # Assignment fans out to the pair join (both sides) and the final
     # member join — materialize once (two scalars per distinct
@@ -543,8 +536,8 @@ def semantic_dedup(
         cand.join(va, "ra")
         .join(vb, "rb")
         .where(
-            F.round(
-                pair_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
+            _cosine_of(
+                pair_dot(F.col("va"), F.col("vb")), F.col("na"), F.col("nb"),
                 decimals,
             )
             >= threshold
@@ -562,14 +555,15 @@ def semantic_dedup(
         .groupBy("rep_id")
         .agg(F.min("_n").alias("_nbr_min"))
     )
+    # a zero vector's NULL self-similarity is "not a duplicate"
     self_sim = reps.select(
         "rep_id",
-        (
-            F.round(
-                dot(F.col("v"), F.col("v")) / (F.col("_nrm") * F.col("_nrm")),
-                decimals,
+        F.coalesce(
+            _cosine_of(
+                dot(F.col("v"), F.col("v")), F.col("_nrm"), F.col("_nrm"), decimals
             )
-            >= threshold
+            >= threshold,
+            F.lit(False),
         ).alias("_self_dup"),
     )
     out = (

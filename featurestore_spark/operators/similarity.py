@@ -26,8 +26,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from featurestore_spark.operators.dedup import member_side
-from featurestore_spark.operators.materialize import materialize
+from featurestore_spark.operators.dedup import (
+    _bucket_pairs,
+    _collapse_exact,
+    _expand_pairs,
+)
 
 
 def as_double_array(col: str | Column) -> Column:
@@ -52,9 +55,28 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column, decimals: int | None = 6) -> Column:
-    c = dot(a, b) / (norm(a) * norm(b))
+def _cosine_of(
+    d: Column, na: Column, nb: Column, decimals: int | None = 6
+) -> Column:
+    """Cosine from a dot product and the two norms. A zero norm gives
+    NULL (not a DIVIDE_BY_ZERO under ANSI), so an all-zero vector never
+    passes a similarity threshold — the same as a NULL vector, and as
+    the DuckDB oracles' ``x / 0``."""
+    c = F.try_divide(d, na * nb)
     return F.round(c, decimals) if decimals is not None else c
+
+
+def cosine(a: Column, b: Column, decimals: int | None = 6) -> Column:
+    return _cosine_of(dot(a, b), norm(a), norm(b), decimals)
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, v) over non-null vectors as ``array<double>`` — the input
+    of the exact-vector collapse. Null vectors are dropped: they have
+    no similarity to anything (and would crash the SRP UDF)."""
+    return df.where(F.col(vec_col).isNotNull()).select(
+        id_col, as_double_array(vec_col).alias("v")
+    )
 
 
 def cosine_topk(
@@ -371,59 +393,6 @@ def ivf_topk(
     )
 
 
-def vector_hash_frames(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(member_id, v, _h1, _h2) over non-null vectors — the shared
-    front of the exact-vector collapse (two seeded xxhash64 longs over
-    the double array; the exchange carries two longs, not the array).
-    Null vectors are dropped: they have no similarity to anything."""
-    return (
-        df.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("member_id"),
-            as_double_array(vec_col).alias("v"),
-        )
-        .select(
-            "member_id",
-            "v",
-            F.xxhash64("v").alias("_h1"),
-            F.xxhash64(F.lit(0x9E3779B9), F.col("v")).alias("_h2"),
-        )
-    )
-
-
-def collapse_exact_vectors(
-    hashed: DataFrame, op_name: str, *, rep_col: str = "rep_id"
-) -> DataFrame:
-    """(rep_col, v, _h1, _h2): one row per DISTINCT vector, minimum
-    member id as representative. The 128-bit scalar-hash group is
-    VERIFIED in-group (min ⇔ max over the orderable array, null-safe);
-    a cross-vector collision — ~n²/2^129, never in practice — raises
-    rather than silently merging distinct vectors. Shared by
-    `embedding_near_dups` and the incremental against-index operators
-    (`operators/incremental.py`) so the hash scheme cannot drift
-    between them."""
-    return (
-        hashed.groupBy("_h1", "_h2")
-        .agg(
-            F.min("member_id").alias(rep_col),
-            F.min("v").alias("v"),
-            F.max("v").alias("_vmax"),
-        )
-        .withColumn(
-            "v",
-            F.when(F.col("v").eqNullSafe(F.col("_vmax")), F.col("v")).otherwise(
-                F.raise_error(
-                    F.lit(
-                        f"{op_name}: 128-bit vector-hash collision "
-                        "on distinct vectors"
-                    )
-                )
-            ),
-        )
-        .drop("_vmax")
-    )
-
-
 def embedding_near_dups(
     df: DataFrame,
     *,
@@ -460,51 +429,22 @@ def embedding_near_dups(
     back on the scalar rep_id. Exact-duplicate (intra-group) pairs are
     emitted unconditionally — identical vectors are near-dups by
     definition and must not depend on bucket caps."""
-    # null vectors have no similarity to anything — drop them up front
-    # (they would otherwise reach the SRP UDF and crash batch-wide)
-    base = df.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("member_id"), as_double_array(vec_col).alias("v")
-    )
+    base = _vectors(df, id_col, vec_col)
     if dim is None:
         row = base.select(F.size("v")).first()
         dim = row[0] if row is not None else 1  # empty corpus: any dim
-    # Exact-dup collapse keyed by a 128-bit scalar hash of the vector
-    # (two independently-seeded xxhash64 longs) instead of the full
-    # array: the exchange and hash-agg comparisons carry two longs,
-    # not an arbitrary-width array, while map-side partial aggregation
-    # still collapses duplicates before the shuffle. A cross-vector
-    # collision needs both 64-bit hashes to agree (~n^2/2^129 — never
-    # at any corpus size) and is still VERIFIED inside each group
-    # (min ⇔ max over the orderable array, null-safe) — a violation
-    # raises rather than silently merging distinct vectors. Membership
-    # is a (rep_id, member_id) FRAME, not a per-group collect_list
-    # array (VERDICT r4 #1): a corpus with 10^6+ copies of one vector
-    # would otherwise put the whole group into a single aggregation
-    # row; as a frame it streams through joins.
-    hashed = base.select(
-        "member_id",
-        "v",
-        F.xxhash64("v").alias("_h1"),
-        F.xxhash64(F.lit(0x9E3779B9), F.col("v")).alias("_h2"),
+    # Exact-dup collapse on the 128-bit hash of the vector (the
+    # exchange carries two longs, not the array; ties verified). The
+    # reps checkpoint feeds FOUR consumers (band coding, both sides of
+    # the cosine verify, the intra-group pairs) and the membership
+    # frame both expansion joins. Measured at sf0.1: near_dups 2.15s
+    # -> 1.36s, clusters 4.19s -> 3.42s against recomputing the
+    # scan+hash+collapse per consumer. Makes the operator eager at
+    # construction.
+    reps, members = _collapse_exact(
+        base, "v", id_col, "embedding_near_dups",
+        fence_members=True, with_cols={"_nrm": norm(F.col("v"))},
     )
-    # reps feeds FOUR consumers (band coding, both pair-join sides,
-    # intra-group pairs) and the executed plan shows no exchange
-    # reuse across them — materialize once instead of recomputing
-    # the scan+hash+collapse per consumer. Measured at sf0.1:
-    # near_dups 2.15s -> 1.36s, clusters 4.19s -> 3.42s. Makes the
-    # operator eager at construction (same pattern as
-    # sampling.token_budget_sample's slim frame).
-    reps = materialize(
-        collapse_exact_vectors(hashed, "embedding_near_dups").withColumn(
-            "_nrm", norm(F.col("v"))
-        )
-    )
-    members = materialize(
-        hashed.select("member_id", "_h1", "_h2")
-        .join(reps.select("_h1", "_h2", "rep_id"), ["_h1", "_h2"])
-        .select("rep_id", "member_id")
-    )
-    reps = reps.drop("_h1", "_h2")
     hp = srp_hyperplanes(dim, bits * bands, seed)
     # The reps checkpoint freezes AQE's one-partition coalescing at
     # small scale, so the SRP UDF runs single-task — but re-widening
@@ -519,66 +459,30 @@ def embedding_near_dups(
         "rep_id", srp_band_codes(F.col("v"), hp, bits, bands).alias("_codes")
     )
     melted = coded.select("rep_id", F.posexplode("_codes").alias("band_idx", "_code"))
-    # window COUNT + self-join, never a collect_list bucket array (see
-    # minhash_candidate_pairs: the array would materialize in one row
-    # BEFORE the size filter); materialized so the SRP UDF runs once —
-    # ReuseExchange does not fire across the self-join's sides.
-    wb = Window.partitionBy("band_idx", "_code")
-    inb = materialize(
-        melted.withColumn("_bn", F.count(F.lit(1)).over(wb)).where(
-            (F.col("_bn") >= 2) & (F.col("_bn") <= max_bucket)
+    cand = _bucket_pairs(melted, ["band_idx", "_code"], "rep_id", max_bucket)
+
+    def side(r: str, v: str, nrm: str) -> DataFrame:
+        return reps.select(
+            F.col("rep_id").alias(r), F.col("v").alias(v), F.col("_nrm").alias(nrm)
         )
-    )
-    cand = (
-        inb.select("band_idx", "_code", F.col("rep_id").alias("ra"))
-        .join(inb.select("band_idx", "_code", F.col("rep_id").alias("rb")),
-              ["band_idx", "_code"])
-        .where(F.col("ra") < F.col("rb"))
-        .select("ra", "rb")
-        .distinct()
-    )
-    a = reps.select(
-        F.col("rep_id").alias("ra"),
-        F.col("v").alias("va"),
-        F.col("_nrm").alias("na"),
-    )
-    b = reps.select(
-        F.col("rep_id").alias("rb"),
-        F.col("v").alias("vb"),
-        F.col("_nrm").alias("nb"),
-    )
-    inter = (
-        cand.join(a, "ra")
-        .join(b, "rb")
-        .withColumn(
-            "sim",
-            F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6),
+
+    hits = (
+        cand.join(side("ra", "va", "na"), "ra")
+        .join(side("rb", "vb", "nb"), "rb")
+        .select(
+            "ra", "rb",
+            _cosine_of(dot(F.col("va"), F.col("vb")), F.col("na"), F.col("nb"))
+            .alias("sim"),
         )
         .where(F.col("sim") >= threshold)
-        .select("ra", "rb", "sim")
-        .join(member_side(members, "ra", "xa"), "ra")
-        .join(member_side(members, "rb", "xb"), "rb")
-        .select(
-            F.least("xa", "xb").alias("a_id"),
-            F.greatest("xa", "xb").alias("b_id"),
-            "sim",
-        )
     )
-    # pairs WITHIN an exact-duplicate group: same expression the naive
-    # join would evaluate for two identical vectors (≈1.0, NaN-safe);
-    # expanded by a membership self-join, never a per-group array
-    intra_sims = reps.withColumn(
-        "sim",
-        F.round(dot(F.col("v"), F.col("v")) / (F.col("_nrm") * F.col("_nrm")), 6),
+    # pairs WITHIN an exact-duplicate group carry the same expression
+    # the naive join would evaluate for two identical vectors (≈1.0;
+    # NULL for a zero vector, which never pairs)
+    self_sim = _cosine_of(dot(F.col("v"), F.col("v")), F.col("_nrm"), F.col("_nrm"))
+    return _expand_pairs(
+        hits, members, reps.withColumn("sim", self_sim)
     ).where(F.col("sim") >= threshold)
-    intra = (
-        member_side(members, "rep_id", "xa")
-        .join(intra_sims.select("rep_id", "sim"), "rep_id")
-        .join(member_side(members, "rep_id", "xb"), "rep_id")
-        .where(F.col("xa") < F.col("xb"))
-        .select(F.col("xa").alias("a_id"), F.col("xb").alias("b_id"), "sim")
-    )
-    return inter.unionByName(intra)
 
 
 def assign_to_centroids(

@@ -1276,7 +1276,8 @@ _STREAM_JOBS = {
 def test_stream_callbacks_share_the_batch_protocol(spark, tmp_path, name):
     """Every `foreachBatch` callback: pinned Spark jobs per batch; a
     retry of the head batch leaves every state root's row count
-    unchanged; a lower batch id raises the fresh-checkpoint error."""
+    unchanged; a lower batch id raises the fresh-checkpoint error,
+    naming the guarded root."""
     cb, roots, batches = _stream_case(spark, tmp_path, name)
     jobs = [
         _jobs_of(spark, lambda b=b, i=i: cb(b, i))
@@ -1289,6 +1290,8 @@ def test_stream_callbacks_share_the_batch_protocol(spark, tmp_path, name):
     before = counts()
     cb(batches[-1], len(batches))
     assert counts() == before
-    with pytest.raises(RuntimeError, match="fresh checkpoint"):
+    with pytest.raises(RuntimeError, match="fresh checkpoint") as err:
         cb(batches[0], 0)
+    # the message names the root the callback guards (roots[0])
+    assert f"state root {roots[0]!r}" in str(err.value)
     assert all(n <= cap for n, cap in zip(jobs, _STREAM_JOBS[name])), jobs

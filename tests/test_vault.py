@@ -215,6 +215,22 @@ def test_satellite_delete_indicator(spark, loader):
     assert drow["version"] == 2
 
 
+def test_satellite_one_tombstone_per_flagged_entity(spark, loader):
+    """Two input rows flagging one entity write one tombstone."""
+    sat = dict(table="tomb_sat", entity_type="c", id_fields=["k"], id_type="customer")
+    cols = ["k", "v", "op"]
+    loader.load_satellite(
+        spark.createDataFrame([("a", "x", "U"), ("b", "z", "U")], cols),
+        process_time=T0, delete_indicator=("op", "D"), **sat,
+    )
+    res = loader.load_satellite(
+        spark.createDataFrame([("b", "z1", "D"), ("b", "z2", "D")], cols),
+        process_time=T1, delete_indicator=("op", "D"), **sat,
+    )
+    assert res.deletes == 1
+    assert loader.read_history("tomb_sat").where("rectype = 'D'").count() == 1
+
+
 def test_link_and_mapping(spark, loader):
     pairs = spark.createDataFrame(
         [(str(i), str(i * 10)) for i in range(20)], ["cust_id", "order_id"]
