@@ -407,6 +407,7 @@ def srp_code_index(
     one implementation across the near-dup and incremental
     operators."""
     from featurestore_spark.operators.similarity import (
+        _infer_dim,
         _vectors,
         srp_band_codes,
         srp_hyperplanes,
@@ -414,8 +415,7 @@ def srp_code_index(
 
     base = _vectors(df, id_col, vec_col)
     if dim is None:
-        row = base.select(F.size("v")).first()
-        dim = row[0] if row is not None else 1
+        dim = _infer_dim(base, "v")
     reps, _ = _collapse_exact(base, "v", id_col, "srp_code_index", fence_reps=False)
     hp = srp_hyperplanes(dim, bits * bands, seed)
     coded = reps.select(

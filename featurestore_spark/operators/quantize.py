@@ -35,7 +35,12 @@ from pyspark.sql import functions as F
 from featurestore_spark.operators.dedup import _collapse_exact
 from featurestore_spark.operators.materialize import materialize
 from featurestore_spark.operators.similarity import (
+    _argmin,
     _cosine_of,
+    _infer_dim,
+    _l2sq,
+    _mean_vectors,
+    _top_k,
     _vectors,
     as_double_array,
     assign_to_centroids,
@@ -45,9 +50,13 @@ from featurestore_spark.operators.similarity import (
 )
 
 
-def _infer_dim(df: DataFrame, vec_col: str | Column) -> int:
-    row = df.select(F.size(vec_col)).first()
-    return row[0] if row is not None and row[0] is not None else 1
+def _subspaces(codebooks: DataFrame) -> int:
+    """m, the codebook's subspace count (one eager `first()`); an
+    empty codebook raises."""
+    m = codebooks.select(F.countDistinct("sub_id")).first()[0]
+    if not m:
+        raise ValueError("empty codebook")
+    return m
 
 
 def pair_dot(a: Column, b: Column) -> Column:
@@ -110,33 +119,6 @@ def explode_subvectors(
     return base.select(F.col(id_col), F.inline(subs))
 
 
-def _sub_d2(a: Column, b: Column, decimals: int) -> Column:
-    """Rounded squared-L2 between two subvectors; the left-to-right
-    `aggregate` fold matches DuckDB's in-order list_sum."""
-    return F.round(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        decimals,
-    )
-
-
-def _mean_subvectors(df: DataFrame, keys: list[str], vec_col: str) -> DataFrame:
-    """Element-wise mean subvector per composite key — posexplode →
-    per-(key, dim) partials → reassemble (bounded memory per group;
-    mirrors similarity._mean_vectors)."""
-    ex = df.select(*keys, F.posexplode(vec_col).alias("pos", "val"))
-    per_dim = ex.groupBy(*keys, "pos").agg(F.avg("val").alias("mean"))
-    return per_dim.groupBy(*keys).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "mean"))),
-            lambda s: s.getField("mean"),
-        ).alias("codeword")
-    )
-
-
 def pq_train(
     df: DataFrame,
     *,
@@ -176,28 +158,14 @@ def pq_train(
     # dim/m dims); Lloyd rounds refine a coarser-than-k seeding fine
     bits = min(max(1, (k - 1).bit_length()), dim // m)
     assigned = ex.withColumn("code_id", sign_bucket(F.col("sv"), bits) % k)
+    keys = ["sub_id", "code_id"]
     for _ in range(iterations):
-        cb = _mean_subvectors(assigned, ["sub_id", "code_id"], "sv")
-        scored = ex.join(
-            F.broadcast(cb), "sub_id"
-        ).withColumn("_d2", _sub_d2(F.col("sv"), F.col("codeword"), decimals))
-        assigned = (
-            scored.groupBy("_rid", "sub_id")
-            .agg(
-                F.min(
-                    F.struct(
-                        F.col("_d2"), F.col("code_id"), F.col("sv").alias("sv")
-                    )
-                ).alias("_b")
-            )
-            .select(
-                "_rid",
-                "sub_id",
-                F.col("_b.sv").alias("sv"),
-                F.col("_b.code_id").alias("code_id"),
-            )
+        cb = _mean_vectors(assigned, keys, "sv", "codeword")
+        scored = ex.join(F.broadcast(cb), "sub_id").withColumn(
+            "_d2", _l2sq(F.col("sv"), F.col("codeword"), decimals)
         )
-    return _mean_subvectors(assigned, ["sub_id", "code_id"], "sv")
+        assigned = _argmin(scored, ["_rid", "sub_id"], "_d2", "code_id", "sv")
+    return _mean_vectors(assigned, keys, "sv", "codeword")
 
 
 def densify_codebook(codebooks: DataFrame) -> DataFrame:
@@ -210,6 +178,30 @@ def densify_codebook(codebooks: DataFrame) -> DataFrame:
         "sub_id",
         (F.row_number().over(w) - 1).alias("code_id"),
         "codeword",
+    )
+
+
+def _codeword_dists(
+    df: DataFrame,
+    codebooks: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int | None,
+    decimals: int,
+) -> DataFrame:
+    """(id, sub_id, code_id, _d2): every subvector's rounded squared-L2
+    to each codeword of its subspace, the codebook broadcast on
+    sub_id — what `pq_encode` takes the argmin of and the ADC lookup
+    tables hold."""
+    ex = explode_subvectors(
+        df, _subspaces(codebooks), id_col=id_col, vec_col=vec_col, dim=dim
+    )
+    cb = codebooks.select(
+        "sub_id", "code_id", as_double_array("codeword").alias("_cw")
+    )
+    return ex.join(F.broadcast(cb), "sub_id").select(
+        id_col, "sub_id", "code_id",
+        _l2sq(F.col("sv"), F.col("_cw"), decimals).alias("_d2"),
     )
 
 
@@ -232,26 +224,78 @@ def pq_encode(
     the m codes with one aggregation keyed on the scalar id (group
     payload is m ints — bounded). Codebook code ids must be dense per
     subspace (`densify_codebook`)."""
-    m = codebooks.select(F.countDistinct("sub_id")).first()[0]
-    if not m:
-        raise ValueError("empty codebook")
-    ex = explode_subvectors(df, m, id_col=id_col, vec_col=vec_col, dim=dim)
-    cb = codebooks.select(
-        "sub_id", "code_id", as_double_array("codeword").alias("_cw")
-    )
-    scored = ex.join(F.broadcast(cb), "sub_id").withColumn(
-        "_d2", _sub_d2(F.col("sv"), F.col("_cw"), decimals)
-    )
-    best = scored.groupBy(id_col, "sub_id").agg(
-        F.min(F.struct(F.col("_d2"), F.col("code_id"))).alias("_b")
+    best = _argmin(
+        _codeword_dists(df, codebooks, id_col, vec_col, dim, decimals),
+        [id_col, "sub_id"], "_d2", "code_id",
     )
     return best.groupBy(id_col).agg(
         F.transform(
-            F.array_sort(
-                F.collect_list(F.struct("sub_id", F.col("_b.code_id").alias("c")))
-            ),
-            lambda s: s.getField("c"),
+            F.array_sort(F.collect_list(F.struct("sub_id", "code_id"))),
+            lambda s: s.getField("code_id"),
         ).alias("codes")
+    )
+
+
+def _adc_topk(
+    pairs: DataFrame,
+    k: int,
+    query_id: str,
+    cand_id: str,
+    codes_col: str,
+    decimals: int,
+) -> DataFrame:
+    """Rank (candidate, query) `pairs` carrying the query's `_lut`: each
+    candidate's distance is its m codes looked up in the table
+    (`zip_with(codes, lut, (c, row) → element_at(row, c+1))`), folded
+    in sub order and rounded to `decimals`; ascending, ties on the
+    lower neighbor id."""
+    dists = pairs.select(
+        query_id,
+        F.col(cand_id).alias("neighbor_id"),
+        F.round(
+            F.aggregate(
+                F.zip_with(
+                    F.col(codes_col),
+                    F.col("_lut"),
+                    lambda c, row: F.element_at(row, c + F.lit(1)),
+                ),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ),
+            decimals,
+        ).alias("adist"),
+    )
+    return _top_k(dists, query_id, ["adist", "neighbor_id"], k).select(
+        query_id, "rnk", "neighbor_id", "adist"
+    )
+
+
+def _adc_luts(
+    queries: DataFrame,
+    codebooks: DataFrame,
+    query_id: str,
+    query_vec: str,
+    dim: int | None,
+    decimals: int,
+) -> DataFrame:
+    """(query_id, _lut): per query, the m×k' table of rounded distances
+    from each query subvector to every codeword — inner arrays indexed
+    by dense code_id, the outer one by sub_id. Group payloads are k'
+    doubles / m arrays — driver-bounded constants."""
+    lut_long = _codeword_dists(
+        queries, codebooks, query_id, query_vec, dim, decimals
+    )
+    per_sub = lut_long.groupBy(query_id, "sub_id").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("code_id", "_d2"))),
+            lambda s: s.getField("_d2"),
+        ).alias("_row")
+    )
+    return per_sub.groupBy(query_id).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("sub_id", "_row"))),
+            lambda s: s.getField("_row"),
+        ).alias("_lut")
     )
 
 
@@ -280,54 +324,10 @@ def pq_adc_topk(
     a vector. Per-sub LUT entries and the final sum are rounded to
     `decimals` (sub order fold), so the DuckDB oracle reproduces the
     ranking exactly; ties break on neighbor id."""
-    m = codebooks.select(F.countDistinct("sub_id")).first()[0]
-    if not m:
-        raise ValueError("empty codebook")
-    qex = explode_subvectors(
-        queries, m, id_col=query_id, vec_col=query_vec, dim=dim
-    )
-    cb = codebooks.select(
-        "sub_id", "code_id", as_double_array("codeword").alias("_cw")
-    )
-    lut_long = qex.join(F.broadcast(cb), "sub_id").withColumn(
-        "_d2", _sub_d2(F.col("sv"), F.col("_cw"), decimals)
-    )
-    # (query, sub) rows: inner array indexed by dense code_id;
-    # then one array of those per query, indexed by sub_id. Group
-    # payloads are k' doubles / m arrays — driver-bounded constants.
-    per_sub = lut_long.groupBy(query_id, "sub_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("code_id", "_d2"))),
-            lambda s: s.getField("_d2"),
-        ).alias("_row")
-    )
-    luts = per_sub.groupBy(query_id).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("sub_id", "_row"))),
-            lambda s: s.getField("_row"),
-        ).alias("_lut")
-    )
-    dists = encoded.crossJoin(F.broadcast(luts)).select(
-        query_id,
-        F.col(cand_id).alias("neighbor_id"),
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col(codes_col),
-                    F.col("_lut"),
-                    lambda c, row: F.element_at(row, c + F.lit(1)),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            decimals,
-        ).alias("adist"),
-    )
-    w = Window.partitionBy(query_id).orderBy("adist", "neighbor_id")
-    return (
-        dists.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select(query_id, "rnk", "neighbor_id", "adist")
+    luts = _adc_luts(queries, codebooks, query_id, query_vec, dim, decimals)
+    return _adc_topk(
+        encoded.crossJoin(F.broadcast(luts)), k, query_id, cand_id, codes_col,
+        decimals,
     )
 
 
@@ -365,83 +365,23 @@ def ivf_pq_topk(
     Same engine-parity discipline as `pq_adc_topk` (rounded LUT
     entries, sub-order fold, ties on neighbor id); probe selection
     uses rounded centroid distances with ties on centroid id."""
-    m = codebooks.select(F.countDistinct("sub_id")).first()[0]
-    if not m:
-        raise ValueError("empty codebook")
     cents = centroids.select(
         F.col(centroid_id_col),
         as_double_array(centroid_vec_col).alias("_cv"),
     )
     # per-query probe lists: rank broadcast centroids by rounded L2
-    probes = (
+    scored = (
         queries.select(F.col(query_id), as_double_array(query_vec).alias("_qv"))
         .crossJoin(F.broadcast(cents))
-        .withColumn(
-            "_d2",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("_qv"), F.col("_cv"), lambda a, b: (a - b) * (a - b)
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                decimals,
-            ),
-        )
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy(query_id).orderBy("_d2", centroid_id_col)
-            ),
-        )
-        .where(F.col("_rn") <= n_probe)
-        .select(query_id, centroid_id_col)
+        .withColumn("_d2", _l2sq(F.col("_qv"), F.col("_cv"), decimals))
     )
-    # per-query LUTs (identical construction to pq_adc_topk)
-    qex = explode_subvectors(
-        queries, m, id_col=query_id, vec_col=query_vec, dim=dim
-    )
-    cb = codebooks.select(
-        "sub_id", "code_id", as_double_array("codeword").alias("_cw")
-    )
-    lut_long = qex.join(F.broadcast(cb), "sub_id").withColumn(
-        "_d2", _sub_d2(F.col("sv"), F.col("_cw"), decimals)
-    )
-    per_sub = lut_long.groupBy(query_id, "sub_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("code_id", "_d2"))),
-            lambda s: s.getField("_d2"),
-        ).alias("_row")
-    )
-    luts = per_sub.groupBy(query_id).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("sub_id", "_row"))),
-            lambda s: s.getField("_row"),
-        ).alias("_lut")
-    )
-    probe_luts = probes.join(luts, query_id)
-    dists = encoded.join(F.broadcast(probe_luts), centroid_id_col).select(
-        query_id,
-        F.col(cand_id).alias("neighbor_id"),
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col(codes_col),
-                    F.col("_lut"),
-                    lambda c, row: F.element_at(row, c + F.lit(1)),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            decimals,
-        ).alias("adist"),
-    )
-    w = Window.partitionBy(query_id).orderBy("adist", "neighbor_id")
-    return (
-        dists.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select(query_id, "rnk", "neighbor_id", "adist")
+    probes = _top_k(
+        scored, query_id, ["_d2", centroid_id_col], n_probe, "_rn"
+    ).select(query_id, centroid_id_col)
+    luts = _adc_luts(queries, codebooks, query_id, query_vec, dim, decimals)
+    return _adc_topk(
+        encoded.join(F.broadcast(probes.join(luts, query_id)), centroid_id_col),
+        k, query_id, cand_id, codes_col, decimals,
     )
 
 

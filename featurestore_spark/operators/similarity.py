@@ -9,7 +9,12 @@
   (equi-join instead of cross product). With b bucket bits the
   candidate set shrinks ~2^b×; `multi_probe=True` raises recall by
   also probing every Hamming-1 neighbor bucket.
-- `vector_norms` / `normalize`: shared helpers.
+- `dot` / `norm` / `cosine`: the scoring columns. Every top-k and
+  argmin of the vector-search family (here and in `quantize.py`) runs
+  one private score → rank skeleton: `_l2sq` (squared L2),
+  `_cosine_of` (NULL for a zero vector), `_top_k` (per-group
+  `row_number` window), `_argmin` (nearest id per key) and
+  `_mean_vectors` (element-wise mean per key).
 
 At 100 TB of embeddings the brute-force path is O(Q×N) — usable only
 for small Q; the bucketed path is the default for pipeline-scale
@@ -70,12 +75,81 @@ def cosine(a: Column, b: Column, decimals: int | None = 6) -> Column:
     return _cosine_of(dot(a, b), norm(a), norm(b), decimals)
 
 
+def _l2sq(a: Column, b: Column, decimals: int | None = None) -> Column:
+    """Squared L2 distance, folded left to right (DuckDB's in-order
+    `list_sum`); rounded to `decimals` only when given — the
+    engine-parity knob before an argmin or a rank."""
+    d = F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return F.round(d, decimals) if decimals is not None else d
+
+
+def _top_k(
+    df: DataFrame, by: str, order: list, k: int, rank_col: str = "rnk"
+) -> DataFrame:
+    """The rows ranked 1..k within each `by` group: `row_number` over
+    `order`, whose last key is an id, so ties break on the lower id."""
+    w = Window.partitionBy(by).orderBy(*order)
+    return df.withColumn(rank_col, F.row_number().over(w)).where(
+        F.col(rank_col) <= k
+    )
+
+
+def _argmin(
+    scored: DataFrame, keys: list[str], dist: str, id_col: str, *carry: str
+) -> DataFrame:
+    """Per `keys` group, the row of least `dist`, ties on the lowest
+    `id_col`: one `min(struct(dist, id, *carry))` aggregate keyed on
+    scalar keys — the shuffle key is never a vector array (r1
+    windowed `PARTITION BY v`, VERDICT §wrong #3). Returns the keys,
+    `dist`, `id_col` and `carry` columns."""
+    best = scored.groupBy(*keys).agg(
+        F.min(F.struct(dist, id_col, *carry)).alias("_b")
+    )
+    return best.select(*keys, "_b.*")
+
+
+def _infer_dim(df: DataFrame, vec_col: str | Column) -> int:
+    """The length of the first vector (one eager `first()`); 1 for an
+    empty frame, where any dimension will do."""
+    row = df.select(F.size(vec_col)).first()
+    return row[0] if row is not None and row[0] is not None else 1
+
+
 def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """(id, v) over non-null vectors as ``array<double>`` — the input
     of the exact-vector collapse. Null vectors are dropped: they have
     no similarity to anything (and would crash the SRP UDF)."""
     return df.where(F.col(vec_col).isNotNull()).select(
         id_col, as_double_array(vec_col).alias("v")
+    )
+
+
+def _cosine_topk(
+    pairs: DataFrame,
+    k: int,
+    query_id: str,
+    cand_id: str,
+    query_vec: str,
+    cand_vec: str,
+) -> DataFrame:
+    """Rank (query, candidate) `pairs` carrying the hoisted norms
+    `_qn` / `_cn`: cosine rounded to 6 places before ranking, highest
+    first, ties on the lower candidate id; a zero vector's NULL cosine
+    ranks last. Hoisted norms are bit-identical to per-pair ones
+    (sqrt(dot(v,v)) has the same input either way)."""
+    sims = pairs.select(
+        query_id,
+        cand_id,
+        _cosine_of(
+            dot(F.col(query_vec), F.col(cand_vec)), F.col("_qn"), F.col("_cn")
+        ).alias("sim"),
+    )
+    return _top_k(sims, query_id, [F.col("sim").desc(), F.col(cand_id)], k).select(
+        query_id, "rnk", cand_id, "sim"
     )
 
 
@@ -89,24 +163,12 @@ def cosine_topk(
     query_vec: str = "qv",
     cand_vec: str = "cv",
 ) -> DataFrame:
-    """Exact brute-force cosine top-k; queries broadcast.
-
-    Norms are hoisted to each side before the cross join (bit-identical
-    to per-pair cosine: sqrt(dot(v,v)) has the same input either way)."""
+    """Exact brute-force cosine top-k; queries broadcast, norms
+    hoisted to each side before the cross join."""
     q = queries.withColumn("_qn", norm(F.col(query_vec)))
     c = candidates.withColumn("_cn", norm(F.col(cand_vec)))
-    sims = c.crossJoin(F.broadcast(q)).select(
-        query_id,
-        cand_id,
-        F.round(
-            dot(F.col(query_vec), F.col(cand_vec)) / (F.col("_qn") * F.col("_cn")), 6
-        ).alias("sim"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("sim").desc(), F.col(cand_id))
-    return (
-        sims.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select(query_id, "rnk", cand_id, "sim")
+    return _cosine_topk(
+        c.crossJoin(F.broadcast(q)), k, query_id, cand_id, query_vec, cand_vec
     )
 
 
@@ -220,18 +282,8 @@ def bucketed_ann_topk(
     c = candidates.withColumn("_bkt", sign_bucket(F.col(cand_vec), bits)).withColumn(
         "_cn", norm(F.col(cand_vec))
     )
-    sims = c.join(F.broadcast(q), "_bkt").select(
-        query_id,
-        cand_id,
-        F.round(
-            dot(F.col(query_vec), F.col(cand_vec)) / (F.col("_qn") * F.col("_cn")), 6
-        ).alias("sim"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("sim").desc(), F.col(cand_id))
-    return (
-        sims.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select(query_id, "rnk", cand_id, "sim")
+    return _cosine_topk(
+        c.join(F.broadcast(q), "_bkt"), k, query_id, cand_id, query_vec, cand_vec
     )
 
 
@@ -270,64 +322,37 @@ def train_centroids(
         "centroid_id", sign_bucket(F.col("v"), bits) % n_centroids
     )
     for _ in range(iterations):
-        cents = _mean_vectors(seeded, "centroid_id", "v", round_decimals)
-        seeded = _assign_nearest(
-            base, cents, "_rid", round_decimals=round_decimals
+        cents = _mean_vectors(
+            seeded, ["centroid_id"], "v", "centroid", round_decimals
         )
-    return _mean_vectors(seeded, "centroid_id", "v", round_decimals)
+        scored = base.crossJoin(F.broadcast(cents)).withColumn(
+            "_d", _l2sq(F.col("v"), F.col("centroid"), round_decimals)
+        )
+        seeded = _argmin(scored, ["_rid"], "_d", "centroid_id", "v")
+    return _mean_vectors(seeded, ["centroid_id"], "v", "centroid", round_decimals)
 
 
 def _mean_vectors(
     df: DataFrame,
-    key_col: str,
+    keys: list[str],
     vec_col: str,
+    out_col: str,
     round_decimals: int | None = None,
 ) -> DataFrame:
-    """Element-wise mean vector per key. posexplode → per-(key, dim)
-    partial sums → reassemble ordered array: bounded memory per group
-    (a collect_list-of-vectors fold would buffer whole clusters)."""
-    ex = df.select(key_col, F.posexplode(vec_col).alias("pos", "val"))
+    """Element-wise mean vector per `keys` group, as `out_col`.
+    posexplode → per-(key, dim) partial sums → reassemble ordered
+    array: bounded memory per group (a collect_list-of-vectors fold
+    would buffer whole clusters)."""
+    ex = df.select(*keys, F.posexplode(vec_col).alias("pos", "val"))
     mean = F.avg("val")
     if round_decimals is not None:
         mean = F.round(mean, round_decimals)
-    per_dim = ex.groupBy(key_col, "pos").agg(mean.alias("mean"))
-    return per_dim.groupBy(key_col).agg(
+    per_dim = ex.groupBy(*keys, "pos").agg(mean.alias("mean"))
+    return per_dim.groupBy(*keys).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "mean"))),
             lambda s: s.getField("mean"),
-        ).alias("centroid")
-    )
-
-
-def _assign_nearest(
-    base: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    *,
-    round_decimals: int | None = None,
-) -> DataFrame:
-    """argmin centroid per row: broadcast cross join + `min_by` keyed
-    on `id_col` — the shuffle key is the scalar row id, never the
-    vector array (r1 windowed `PARTITION BY v`, VERDICT §wrong #3).
-    Returns (id_col, v, centroid_id); ties break on centroid_id."""
-    d = F.aggregate(
-        F.zip_with(F.col("v"), F.col("centroid"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    if round_decimals is not None:
-        d = F.round(d, round_decimals)
-    sims = base.crossJoin(F.broadcast(centroids)).withColumn("_d", d)
-    best = sims.groupBy(id_col).agg(
-        F.min_by(
-            F.struct(F.col("centroid_id"), F.col("v")),
-            F.struct(F.col("_d"), F.col("centroid_id")),
-        ).alias("_best")
-    )
-    return best.select(
-        id_col,
-        F.col("_best.v").alias("v"),
-        F.col("_best.centroid_id").alias("centroid_id"),
+        ).alias(out_col)
     )
 
 
@@ -350,46 +375,27 @@ def ivf_topk(
     is bucketed/partitioned by centroid_id on disk and only probed
     lists are scanned. ``round_decimals`` rounds the assignment/probe
     distances (see `train_centroids` — the oracle-replay knob)."""
+    def scored(df: DataFrame, vec: str, norm_col: str) -> DataFrame:
+        return (
+            df.withColumn(norm_col, norm(F.col(vec)))
+            .crossJoin(F.broadcast(centroids))
+            .withColumn("_d", _l2sq(F.col(vec), F.col("centroid"), round_decimals))
+        )
+
     # id threaded through the assignment — the vector rides along, so
     # no re-join (r1 re-joined on array equality; duplicate vectors
     # cross-multiplied, VERDICT §wrong #3).
-    qd = F.aggregate(
-        F.zip_with(
-            F.col(query_vec), F.col("centroid"), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    cand_assigned = _argmin(
+        scored(candidates.select(cand_id, cand_vec), cand_vec, "_cn"),
+        [cand_id], "_d", "centroid_id", cand_vec, "_cn",
     )
-    if round_decimals is not None:
-        qd = F.round(qd, round_decimals)
-    cand_assigned = _assign_nearest(
-        candidates.select(F.col(cand_id), F.col(cand_vec).alias("v")),
-        centroids,
-        cand_id,
-        round_decimals=round_decimals,
-    ).withColumnRenamed("v", cand_vec)
-    q_assigned = (
-        queries.crossJoin(F.broadcast(centroids))
-        .withColumn("_d", qd)
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy(query_id).orderBy(F.col("_d"), F.col("centroid_id"))
-            ),
-        )
-        .where(F.col("_rn") <= n_probe)
-        .select(query_id, query_vec, "centroid_id")
-    )
-    sims = cand_assigned.join(F.broadcast(q_assigned), "centroid_id").select(
-        query_id,
-        cand_id,
-        cosine(F.col(query_vec), F.col(cand_vec)).alias("sim"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("sim").desc(), F.col(cand_id))
-    return (
-        sims.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select(query_id, "rnk", cand_id, "sim")
+    q_assigned = _top_k(
+        scored(queries, query_vec, "_qn"),
+        query_id, [F.col("_d"), F.col("centroid_id")], n_probe, "_rn",
+    ).select(query_id, query_vec, "_qn", "centroid_id")
+    return _cosine_topk(
+        cand_assigned.join(F.broadcast(q_assigned), "centroid_id"),
+        k, query_id, cand_id, query_vec, cand_vec,
     )
 
 
@@ -431,8 +437,7 @@ def embedding_near_dups(
     definition and must not depend on bucket caps."""
     base = _vectors(df, id_col, vec_col)
     if dim is None:
-        row = base.select(F.size("v")).first()
-        dim = row[0] if row is not None else 1  # empty corpus: any dim
+        dim = _infer_dim(base, "v")
     # Exact-dup collapse on the 128-bit hash of the vector (the
     # exchange carries two longs, not the array; ties verified). The
     # reps checkpoint feeds FOUR consumers (band coding, both sides of
@@ -509,26 +514,11 @@ def assign_to_centroids(
         F.col(centroid_id_col).alias("_cid"),
         as_double_array(centroid_vec_col).alias("_cv"),
     )
-    d2 = F.round(
-        F.aggregate(
-            F.zip_with(F.col("_v"), F.col("_cv"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        decimals,
+    scored = base.crossJoin(F.broadcast(cents)).withColumn(
+        "_d2", _l2sq(F.col("_v"), F.col("_cv"), decimals)
     )
-    best = (
-        base.crossJoin(F.broadcast(cents))
-        .withColumn("_d2", d2)
-        .groupBy(id_col)
-        .agg(
-            F.min(
-                F.struct(F.col("_d2").alias("d2"), F.col("_cid").alias("cid"))
-            ).alias("_b")
-        )
-    )
-    return best.select(
+    return _argmin(scored, [id_col], "_d2", "_cid").select(
         F.col(id_col),
-        F.col("_b.cid").alias(centroid_id_col),
-        F.col("_b.d2").alias("dist2"),
+        F.col("_cid").alias(centroid_id_col),
+        F.col("_d2").alias("dist2"),
     )

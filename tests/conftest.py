@@ -1,3 +1,4 @@
+import itertools
 import os
 
 import pytest
@@ -26,6 +27,28 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     s = get_spark("featurestore-tests", master="local[4]", shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture(scope="session")
+def jobs_of(spark):
+    """`jobs_of(call)`: the Spark jobs launched by `call()`, counted per
+    job group after the listener bus has caught up with every posted
+    event."""
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def count(call) -> int:
+        group = f"test-jobs-{next(groups)}"
+        sc.setJobGroup(group, "job count")
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

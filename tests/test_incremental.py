@@ -1,7 +1,5 @@
 """Tests for incremental (against-index) corpus deduplication."""
 
-import itertools
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -1134,25 +1132,9 @@ def test_compact_index_discards_truncated_manifest_tail(spark, tmp_path):
     ]
 
 
-_JOB_GROUPS = itertools.count()
-
-
-def _jobs_of(spark, call) -> int:
-    """Spark jobs launched by `call()`, counted per job group after
-    the listener bus has caught up with every posted event."""
-    sc = spark.sparkContext
-    group = f"test-incremental-jobs-{next(_JOB_GROUPS)}"
-    sc.setJobGroup(group, "incremental job count")
-    try:
-        call()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_restart_guard_decides_from_the_partition_listing(spark, tmp_path):
+def test_restart_guard_decides_from_the_partition_listing(
+    spark, tmp_path, jobs_of
+):
     """The fresh-checkpoint guard lists the root's `batch=` partitions
     on every call and launches no Spark job. A retry of the head
     passes, a lower id raises, a higher batch written by another
@@ -1169,7 +1151,7 @@ def test_restart_guard_decides_from_the_partition_listing(spark, tmp_path):
 
     write("batch=0")
     write("batch=1")
-    assert _jobs_of(spark, lambda: _guard_restart(spark, root, 1, "t")) == 0
+    assert jobs_of(lambda: _guard_restart(spark, root, 1, "t")) == 0
     with pytest.raises(RuntimeError, match="fresh checkpoint"):
         _guard_restart(spark, root, 0, "t")
     _guard_restart(spark, root, 2, "t")
@@ -1273,14 +1255,16 @@ _STREAM_JOBS = {
     if n in ("dedup", "emb", "lines", "spans") else n
     for n in sorted(_STREAM_JOBS)
 ])
-def test_stream_callbacks_share_the_batch_protocol(spark, tmp_path, name):
+def test_stream_callbacks_share_the_batch_protocol(
+    spark, tmp_path, jobs_of, name
+):
     """Every `foreachBatch` callback: pinned Spark jobs per batch; a
     retry of the head batch leaves every state root's row count
     unchanged; a lower batch id raises the fresh-checkpoint error,
     naming the guarded root."""
     cb, roots, batches = _stream_case(spark, tmp_path, name)
     jobs = [
-        _jobs_of(spark, lambda b=b, i=i: cb(b, i))
+        jobs_of(lambda b=b, i=i: cb(b, i))
         for i, b in enumerate(batches, start=1)
     ]
 

@@ -3,8 +3,6 @@
 drop tail): zero vectors, the runtime bloom filter, and the Spark jobs
 per call of every operator built on it."""
 
-import itertools
-
 import pytest
 
 from featurestore_spark.operators import dedup, incremental, multimodal
@@ -99,24 +97,6 @@ def test_embedding_near_dups_plan_has_no_bloom_filter(spark, tmp_path):
     )
     out.collect()
     assert "bloom_filter_agg" not in out._jdf.queryExecution().executedPlan().toString()
-
-
-_JOB_GROUPS = itertools.count()
-
-
-def _jobs_of(spark, call) -> int:
-    """Spark jobs launched by `call()`, counted per job group after
-    the listener bus has caught up with every posted event."""
-    sc = spark.sparkContext
-    group = f"test-near-dup-jobs-{next(_JOB_GROUPS)}"
-    sc.setJobGroup(group, "near-dup job count")
-    try:
-        call()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 _TEXT = "the quick brown fox jumps over the lazy dog near the river bank today"
@@ -214,8 +194,8 @@ _JOB_CEILINGS = {
 
 
 @pytest.mark.parametrize("name", sorted(_CALLS))
-def test_jobs_per_call(spark, family, name):
+def test_jobs_per_call(family, jobs_of, name):
     call = _CALLS[name]
     call(family).collect()  # warm: the Python UDFs' workers and caches
-    jobs = _jobs_of(spark, lambda: call(family).collect())
+    jobs = jobs_of(lambda: call(family).collect())
     assert jobs <= _JOB_CEILINGS[name], jobs
