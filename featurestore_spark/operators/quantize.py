@@ -246,7 +246,8 @@ def _adc_topk(
 ) -> DataFrame:
     """Rank (candidate, query) `pairs` carrying the query's `_lut`: each
     candidate's distance is its m codes looked up in the table
-    (`zip_with(codes, lut, (c, row) → element_at(row, c+1))`), folded
+    (`zip_with(codes, lut, (c, row) → element_at(row, int(c+1)))`, so
+    int and bigint codes both index), folded
     in sub order and rounded to `decimals`; ascending, ties on the
     lower neighbor id."""
     dists = pairs.select(
@@ -257,7 +258,7 @@ def _adc_topk(
                 F.zip_with(
                     F.col(codes_col),
                     F.col("_lut"),
-                    lambda c, row: F.element_at(row, c + F.lit(1)),
+                    lambda c, row: F.element_at(row, (c + 1).cast("int")),
                 ),
                 F.lit(0.0),
                 lambda acc, x: acc + x,

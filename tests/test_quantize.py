@@ -173,6 +173,35 @@ def test_ivf_pq_probed_lists_only(spark):
     assert sorted(map(tuple, full.collect())) == sorted(map(tuple, adc.collect()))
 
 
+def test_adc_accepts_bigint_codes(spark):
+    """Codes read back without a schema (or from an int64 parquet
+    column) are array<bigint>; ADC and IVF-PQ rank them exactly as the
+    array<int> codes `pq_encode` writes."""
+    from featurestore_spark.operators.quantize import ivf_pq_topk
+
+    df = spark.createDataFrame(_clustered_vecs(n=40), ["vec_id", "embedding"])
+    cb = densify_codebook(pq_train(df, m=4, k=4, iterations=2))
+    enc = pq_encode(df, cb)
+    wide = spark.createDataFrame(enc.collect())
+    assert wide.schema["codes"].dataType.simpleString() == "array<bigint>"
+    q = df.where("vec_id < 3").select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+    cents = df.where("vec_id < 4").select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
+    )
+    cent_of = F.col("vec_id") % 4
+
+    def ranked(codes):
+        listed = codes.withColumn("centroid_id", cent_of)
+        return (
+            sorted(map(tuple, pq_adc_topk(q, codes, cb, 5).collect())),
+            sorted(map(tuple, ivf_pq_topk(q, listed, cb, cents, 5).collect())),
+        )
+
+    assert ranked(wide) == ranked(enc)
+
+
 def _naive_semantic_dedup(rows, centroids, threshold):
     """Driver-side statement of the pairwise rule: keep(x) iff no
     y < x in x's cluster with round(cos, 6) >= threshold."""

@@ -8,6 +8,7 @@ be cross-checked standalone before acting. This tool is that check:
 
   python3 tools/micro_bench.py q_minhash_pairs q_dedup_clusters
   python3 tools/micro_bench.py --sf /tmp/sf1_derived --repeats 5 q_simhash_near_dups
+  python3 tools/micro_bench.py --py-floor --cpus 4 --repeats 5
 
 Prints per-query run lists + the median (first run includes JIT/scan
 warmup — judge by the median, or pass --drop-first).
@@ -20,6 +21,9 @@ import os
 import statistics
 import sys
 import time
+
+# module-level: pandas_udf resolves py_floor's string annotations here
+import pandas as pd
 
 sys.path.insert(0, ".")
 
@@ -34,8 +38,6 @@ def nfc_shapes() -> int:
     0.032s here; a single-run over heavier combining-mark text read
     0.174 / 0.166 / 0.168s — same conclusion at both scales."""
     import unicodedata
-
-    import pandas as pd
 
     base = ["café " * 20, "plain ascii text " * 12, "Ω≈ç " * 15]
     s = pd.Series([base[i % 3] for i in range(200_000)])
@@ -58,6 +60,48 @@ def nfc_shapes() -> int:
     return 0
 
 
+def py_floor(cpus: int, repeats: int) -> int:
+    """Fixed cost of one Python-UDF stage: a trivial identity
+    `pandas_udf` summed over `cpus` partitions against the same sum
+    without the UDF, both in one `get_spark` session; medians over
+    `repeats` runs after one warm-up run of each. The difference is the
+    per-stage Python worker floor (docs/scale.md "Python worker
+    floor")."""
+    from pyspark.sql import functions as F
+
+    from featurestore_spark.session import get_spark
+
+    spark = get_spark(
+        "micro_bench_py_floor", master=f"local[{cpus}]", shuffle_partitions=cpus
+    )
+
+    @F.pandas_udf("long")
+    def ident(s: pd.Series) -> pd.Series:
+        return s
+
+    df = spark.range(0, 1000 * cpus, numPartitions=cpus)
+    actions = {
+        "plain": lambda: df.agg(F.sum("id")).collect(),
+        "pandas_udf": lambda: df.agg(F.sum(ident("id"))).collect(),
+    }
+    runs = {name: [] for name in actions}
+    for i in range(repeats + 1):
+        for name, action in actions.items():
+            t0 = time.perf_counter()
+            action()
+            if i:
+                runs[name].append(time.perf_counter() - t0)
+    med = {name: statistics.median(r) for name, r in runs.items()}
+    daemon = spark.sparkContext.getConf().get(
+        "spark.python.daemon.module", "pyspark.daemon"
+    )
+    for name, r in runs.items():
+        print(f"{name:12s} median {med[name]:.3f}s  runs={[round(x, 3) for x in r]}")
+    print(f"python floor {med['pandas_udf'] - med['plain']:.3f}s per stage "
+          f"({cpus} tasks, daemon {daemon})")
+    return 0
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="*")
@@ -68,12 +112,17 @@ def main() -> int:
                     help="exclude run 1 (warmup) from the median")
     ap.add_argument("--nfc", action="store_true",
                     help="bench the pandas NFC shapes instead of queries")
+    ap.add_argument("--py-floor", action="store_true",
+                    help="time a trivial pandas_udf action against the "
+                         "same action without it instead of queries")
     args = ap.parse_args()
 
     if args.nfc:
         return nfc_shapes()
+    if args.py_floor:
+        return py_floor(args.cpus, args.repeats)
     if not args.queries:
-        print("no queries given (or use --nfc)", file=sys.stderr)
+        print("no queries given (or use --nfc / --py-floor)", file=sys.stderr)
         return 2
 
     from featurestore_spark.queries.catalog import QUERIES
